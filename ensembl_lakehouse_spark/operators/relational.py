@@ -58,6 +58,9 @@ def scan_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+SCAN_PROJECT_SQL = "SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem"
+
+
 def key_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P2 mandatory key filter: ``WHERE species='...'`` analog
     (reference app/main.py:479; l_returnflag stands in for species).
@@ -79,6 +82,13 @@ def key_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+KEY_FILTER_SQL = (
+    "SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, "
+    "l_returnflag, strftime(l_shipdate, '%Y-%m-%d') AS l_shipdate "
+    "FROM lineitem WHERE l_returnflag = 'R'"
+)
+
+
 def condition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3 condition pass-through: the reference interpolates a raw
     SQL fragment (app/main.py:477-479); we evaluate the same dialect
@@ -94,6 +104,12 @@ def condition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+CONDITION_FILTER_SQL = (
+    "SELECT l_orderkey, l_linenumber, l_quantity, l_discount, l_extendedprice "
+    "FROM lineitem WHERE l_returnflag = 'R' AND l_quantity > 40 AND l_discount < 0.05"
+)
+
+
 def distinct_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: ``SELECT DISTINCT species FROM t`` (reference
     app/main.py:184-185).
@@ -101,6 +117,9 @@ def distinct_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     Partial (map-side) aggregation means each task emits at most
     |distinct| rows — the shuffle is bytes, not rows, at any scale."""
     return load_table(spark, sf_dir, "lineitem").select("l_returnflag").distinct()
+
+
+DISTINCT_KEY_SQL = "SELECT DISTINCT l_returnflag FROM lineitem"
 
 
 def preview_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -118,6 +137,12 @@ def preview_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("l_orderkey", "l_linenumber")
         .limit(26)
     )
+
+
+PREVIEW_LIMIT_SQL = (
+    "SELECT l_orderkey, l_linenumber, l_partkey, l_quantity "
+    "FROM lineitem ORDER BY l_orderkey, l_linenumber LIMIT 26"
+)
 
 
 # ---------------------------------------------------------------------------
@@ -1215,7 +1240,7 @@ def window_topk_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-WINDOW_TOPK_SQL = """
+WINDOW_TOPK_PER_GROUP_SQL = """
 SELECT o_orderstatus, rk, o_orderkey, o_totalprice
 FROM (
   SELECT o_orderstatus, o_orderkey, o_totalprice,

@@ -14,8 +14,9 @@ import os
 
 from pyspark.sql import SparkSession
 
-# Defaults chosen for the grading harness: local[32], 128 GiB box.
-_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+# Local-mode width: one task slot per host core unless
+# $SPARK_GRAFT_CPUS says otherwise.
+_DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
 # At 100 TB these become cluster-level settings (e.g. shuffle
 # partitions ~= 2-3x total cores, maxPartitionBytes 128-256 MB); the

@@ -141,15 +141,7 @@ def spread_scan(
     tie-breaks). Float-accumulating lineages (``corr``, double sums)
     must NOT be spread — partial-sum order would change last-ulp
     results and break the bit-exact oracle contract.
-
-    ``ELH_SPREAD=0`` disables every spread (results are identical
-    either way — that is the rollout contract above): the operational
-    escape hatch for a deployment whose exchange cost outweighs its
-    scan skew, and the A/B toggle the per-site keep/revert decisions
-    in OPTIMIZATION_r11.md were measured with.
     """
-    if os.environ.get("ELH_SPREAD", "1") == "0":
-        return df
     target = spark.sparkContext.defaultParallelism
     if scan_parallelism(sf_dir, name) * 2 >= target:
         return df

@@ -166,28 +166,24 @@ def test_registry_has_no_duplicate_keys_or_shadowed_operators():
     """r8 regression guard: a new operator that reuses an existing
     name silently destroys the old one twice over — Python's
     last-def-wins makes the module attribute resolve to the new
-    function, and a duplicate dict literal key makes the registry
-    hide the collision (it cost the r6 events_burstiness and nearly
-    the r5 orders_rfm_segments their certifications this round).
-    Parse the AST so the duplicate is caught BEFORE the dict
-    swallows it, and assert no operator module defines one name
-    twice."""
+    function, and a repeated name in QUERIES collapses in the
+    queries() dict comprehension (it cost the r6 events_burstiness
+    and nearly the r5 orders_rfm_segments their certifications).
+    Count the names in the ordered tuple BEFORE the dict swallows
+    them, and assert no operator module defines one name twice —
+    which also keeps each ``<NAME>_SQL`` oracle unique."""
     import ast
     import collections
-    import inspect
 
-    src = inspect.getsource(entry)
-    tree = ast.parse(src)
-    for fn in tree.body:
-        if isinstance(fn, ast.FunctionDef) and fn.name in (
-            "queries", "oracle_sql",
-        ):
-            ret = fn.body[-1].value
-            keys = [k.value for k in ret.keys]
-            dups = [
-                k for k, c in collections.Counter(keys).items() if c > 1
-            ]
-            assert not dups, f"duplicate {fn.name}() keys: {dups}"
+    dups = [
+        k
+        for k, c in collections.Counter(
+            f.__name__ for f in entry.QUERIES
+        ).items()
+        if c > 1
+    ]
+    assert not dups, f"QUERIES lists a name twice: {dups}"
+
     import ensembl_lakehouse_spark.operators as ops_pkg
     import os as _os
     import pkgutil

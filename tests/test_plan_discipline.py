@@ -2,7 +2,7 @@
 representative queries so a future edit that sneaks an extra
 exchange into a hot path FAILS here instead of surfacing as a 2×
 regression at 100 TB. Counts come from the same final-adaptive-plan
-parser the PLANS.md audit uses (tools/explain_audit.summarize)."""
+parser the PLANS.md audit uses (plans.explain.summarize)."""
 
 from __future__ import annotations
 
@@ -10,7 +10,7 @@ import pytest
 
 import __spark_entry__ as entry
 from ensembl_lakehouse_spark.operators.clustering import KM_ITERS
-from tools.explain_audit import summarize
+from ensembl_lakehouse_spark.plans.explain import formatted_plan, summarize
 from tests.conftest import SF_DIR
 
 #: query -> (max hash shuffles, require zero shuffles?)
@@ -639,9 +639,7 @@ def plans(spark):
     def one(name):
         df = qs[name](spark, SF_DIR)
         df.collect()  # finalize the adaptive plan
-        formatted = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        formatted = formatted_plan(df)
         return name, summarize(formatted)
 
     with ThreadPoolExecutor(max_workers=8) as pool:
@@ -708,9 +706,7 @@ def test_no_global_window_on_sf_growing_input(spark):
     qs = entry.queries()
     for name in GLOBAL_TILED:
         df = qs[name](spark, SF_DIR)
-        formatted = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        formatted = formatted_plan(df)
         assert "ntile(" not in formatted, f"{name}: global ntile survived"
         for first_arg in re.findall(
             r"row_number\(\) windowspecdefinition\(([^,]+),", formatted

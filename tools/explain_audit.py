@@ -20,14 +20,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ensembl_lakehouse_spark.plans.explain import (  # noqa: E402
     formatted_plan,
-    summarize as _summarize,
+    summarize,
 )
-
-
-def summarize(formatted: str) -> dict:
-    """Delegates to plans.explain.summarize — one parser shared with
-    the HTTP EXPLAIN surface so counts can never diverge."""
-    return _summarize(formatted)
 
 
 def main() -> int:
