@@ -14,12 +14,16 @@ upsert), and the retention-independent ``_txns`` op stamps for
 exactly-once application (a replayed maintenance run is a no-op
 — see the failure-window notes below for the one exception).
 
-Semantics: the rollup stores per group ``n_rows`` and ``sum_val``
-(COUNT/SUM — the self-maintainable aggregates; MIN/MAX would need
-the per-group re-scan on deletes, the classic IVM limitation).
-Groups whose count reaches zero stay as TOMBSTONE rows (merge
-cannot delete); ``read_rollup`` filters them, and the equivalence
-test pins read_rollup == full recompute at every version.
+Semantics: ``maintain_rollup`` stores per group ``n_rows`` and
+``sum_val`` (COUNT/SUM — the self-maintainable aggregates, merged
+additively). ``maintain_aux_rollup`` stores MIN/MAX, HLL or quantile
+sketches, which merge under inserts but not deletes: it prices the
+classic IVM limitation instead of refusing it, re-aggregating only
+the groups a delete touched. Both have hierarchical ``*_from_rollup``
+twins, and all four run one commit protocol (``_tick``). Groups
+whose count reaches zero stay as TOMBSTONE rows (merge cannot
+delete); ``read_rollup`` filters them, and the equivalence tests pin
+read_rollup == full recompute at every version.
 
 Constraints and failure windows, stated plainly:
 
@@ -45,6 +49,7 @@ Constraints and failure windows, stated plainly:
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
@@ -55,6 +60,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ensembl_lakehouse_spark import snapshots as SN
 
 _STAMP = "ivm:src_v{v}"
+
+#: The measure columns each rollup family stores beside ``n_rows``.
+_MEASURE_COLS = {
+    "sum": ["sum_val"],
+    "minmax": ["min_val", "max_val"],
+    "hll": ["hll"],
+    "quantile": ["qsk"],
+}
 
 #: Whitelisted time-bucket vocabulary for ``maintain_rollup``'s
 #: ``key_exprs`` (r10 VERDICT #2 — the /sql rewrite matches a
@@ -298,24 +311,112 @@ def _reject_null_group_keys(df, cols: list[str], hint: str) -> None:
         )
 
 
+def _tombstones(keys: DataFrame, key_cols: list[str], like: DataFrame):
+    """Zero-count rows for the groups in ``keys``, shaped like the
+    state ``like``. The measure fill follows the family: the additive
+    ``sum_val`` sits at its identity 0 (a later delta adds onto it);
+    aux measures are absolute and sit at NULL, which every aux merge
+    passes through."""
+    return keys.select(
+        *key_cols,
+        F.lit(0).cast("bigint").alias("n_rows"),
+        *[
+            F.lit(0 if c == "sum_val" else None).cast(t).alias(c)
+            for c, t in like.dtypes
+            if c not in key_cols and c != "n_rows"
+        ],
+    )
+
+
+def _signed(c):
+    """``c`` on an inserted diff row, ``-c`` on a deleted one."""
+    return F.when(F.col("_change") == "insert", c).otherwise(-c)
+
+
+def _source_version(source_dir: str) -> int:
+    src_v = SN.current_version(source_dir)
+    if src_v is None:
+        raise FileNotFoundError(f"no committed snapshot in {source_dir}")
+    return src_v
+
+
+def _reclaim_for_direct(rollup_dir: str) -> None:
+    """The direct (base-fed) maintainers' lineage rule: a dir that is
+    lineage-marked as a hierarchical child and holds applied stamps
+    refuses, since its stamps are PARENT versions. A marker with zero
+    applied stamps means the first hierarchical tick failed before any
+    merge committed; nothing binds the dir to the parent's version
+    space, so it is reclaimed for direct maintenance (r7 ADVICE,
+    ivm.py:349)."""
+    lin = rollup_lineage(rollup_dir)
+    if lin is None:
+        return
+    if _applied_versions(rollup_dir):
+        raise ValueError(
+            f"{rollup_dir} is lineage-marked as a hierarchical child "
+            f"of {lin} — its stamps are PARENT versions; maintaining "
+            "it directly from a base table would mix version spaces"
+        )
+    os.remove(os.path.join(rollup_dir, "_lineage"))
+
+
+def _child_prelude(
+    spark: SparkSession,
+    parent_dir: str,
+    child_dir: str,
+    key_exprs: dict[str, str],
+    kind: str,
+):
+    """The hierarchical maintainers' shared checks. Every refusal
+    (no parent version, empty ``key_exprs``, a parent that is not a
+    maintained ``kind`` rollup) comes BEFORE ``_bind_child_lineage``,
+    so a refused tick leaves the child dir unbound. Returns
+    ``(src_v, parent, key_aliases)``: ``parent`` is the parent pinned
+    at src_v with tombstones filtered (read_rollup's rule, applied to
+    the relation the column check already read), for the full build
+    and the aux recompute."""
+    src_v = _source_version(parent_dir)
+    if not key_exprs:
+        raise ValueError("key_exprs must map at least one child column")
+    pinned = SN.read_snapshot(spark, parent_dir, version=src_v)
+    missing = {"n_rows", *_MEASURE_COLS[kind]} - set(pinned.columns)
+    if missing:
+        raise ValueError(
+            f"parent {parent_dir} lacks column(s) {sorted(missing)} — "
+            f"not a maintained {kind!r} rollup"
+        )
+    _bind_child_lineage(child_dir, os.path.abspath(parent_dir))
+    key_aliases = [F.expr(e).alias(c) for c, e in key_exprs.items()]
+    return src_v, pinned.where(F.col("n_rows") > 0), key_aliases
+
+
 def _tick(
     spark: SparkSession,
+    source_dir: str,
     target_dir: str,
     key_cols: list[str],
     src_v: int,
     rebuild: bool,
     full_fn,
-    delta_fn,
+    delta_step,
     null_hint: str,
 ) -> dict:
-    """The shared maintenance protocol both maintainers run: stamp/
-    noop/OCC-fence/full/rebuild-with-tombstones/delta-join-merge.
-    ``full_fn()`` returns the complete (keys..., n_rows, sum_val)
-    state; ``delta_fn(last_applied)`` returns per-group
-    (keys..., d_rows, d_sum) or raises FileNotFoundError when the
-    source history needed for the delta is gone (→ rebuild). One
-    copy of the protocol means the next protocol fix lands once
-    (r7 code review)."""
+    """The one maintenance protocol all four maintainers run: stamp,
+    noop on replay, OCC fence, first full build, rebuild with
+    vanished-group tombstones, delta merge. The maintainers pass only
+    their algebra:
+
+    - ``full_fn()`` returns the complete state (keys..., n_rows,
+      measures...) of the source pinned at ``src_v``;
+    - ``delta_step(diff, current)`` is a context manager over the
+      source's full-row ``snapshot_diff`` since the last applied
+      version and the target's current rows. It yields ``(groups,
+      rows)``: the per-group delta relation the NULL-key check runs
+      on, and the rows to merge. The merge commits inside the
+      context, so whatever the step persists lives until then.
+
+    Source history too old to diff (vacuumed: ``FileNotFoundError``)
+    falls back to the rebuild, as does ``rebuild=True``."""
     stamp = _STAMP.format(v=src_v)
     applied = _applied_versions(target_dir)
     # OCC fence captured at PLAN time: a racing tick that commits
@@ -325,55 +426,64 @@ def _tick(
     if not rebuild and applied and applied[-1] == src_v:
         return {"applied": None, "mode": "noop"}
 
-    if not applied:
-        full = full_fn()
-        _reject_null_group_keys(full, key_cols, null_hint)
+    def commit(rows: DataFrame, mode: str) -> dict:
         SN.merge_snapshot(
-            spark, target_dir, full, key=key_cols, op=stamp,
+            spark, target_dir, rows, key=key_cols, op=stamp,
             expect_version=target_v,
         )
-        return {"applied": src_v, "mode": "full"}
+        return {"applied": src_v, "mode": mode}
 
-    def _rebuild():
-        # delta unusable (vacuumed source history, or an explicit
-        # rebuild after a target rollback): recompute the full
-        # state, tombstoning groups that vanished entirely
-        full = full_fn()
-        _reject_null_group_keys(full, key_cols, null_hint)
+    diff = None
+    if applied and not rebuild:
+        try:
+            diff = SN.snapshot_diff(spark, source_dir, applied[-1], src_v)
+        except FileNotFoundError:
+            pass  # the delta's base manifest is gone: rebuild below
+    if diff is not None:
         current = SN.read_snapshot(spark, target_dir)
-        gone = current.join(full, on=key_cols, how="left_anti").select(
-            *key_cols,
-            F.lit(0).cast("bigint").alias("n_rows"),
-            F.lit(0).cast("bigint").alias("sum_val"),
-        )
-        SN.merge_snapshot(
-            spark, target_dir, full.unionByName(gone), key=key_cols,
-            op=stamp, expect_version=target_v,
-        )
-        return {"applied": src_v, "mode": "rebuild"}
+        with delta_step(diff, current) as (groups, rows):
+            _reject_null_group_keys(groups, key_cols, null_hint)
+            return commit(rows, "delta")
+    full = full_fn()
+    _reject_null_group_keys(full, key_cols, null_hint)
+    if not applied:
+        return commit(full, "full")
+    # delta unusable (vacuumed source history, or an explicit rebuild
+    # after a target rollback): the full state, with groups that
+    # vanished entirely tombstoned
+    gone = SN.read_snapshot(spark, target_dir).join(
+        full, on=key_cols, how="left_anti"
+    )
+    full = full.unionByName(_tombstones(gone, key_cols, full))
+    return commit(full, "rebuild")
 
-    if rebuild:
-        return _rebuild()
-    try:
-        delta = delta_fn(applied[-1])
-    except FileNotFoundError:
-        return _rebuild()
-    _reject_null_group_keys(delta, key_cols, null_hint)
-    current = SN.read_snapshot(spark, target_dir)
-    updated = delta.join(current, on=key_cols, how="left").select(
-        *key_cols,
-        (F.coalesce(F.col("n_rows"), F.lit(0)) + F.col("d_rows")).alias(
-            "n_rows"
-        ),
-        (F.coalesce(F.col("sum_val"), F.lit(0)) + F.col("d_sum")).alias(
-            "sum_val"
-        ),
-    )
-    SN.merge_snapshot(
-        spark, target_dir, updated, key=key_cols, op=stamp,
-        expect_version=target_v,
-    )
-    return {"applied": src_v, "mode": "delta"}
+
+def _additive_step(key_cols: list[str], project, weight, measure):
+    """The COUNT/SUM delta step: per group, the signed sums of
+    ``weight`` (row count) and ``measure`` over the projected diff,
+    added onto the stored (n_rows, sum_val)."""
+
+    @contextlib.contextmanager
+    def step(diff: DataFrame, current: DataFrame):
+        per_group = project(diff).groupBy(*key_cols).agg(
+            F.coalesce(F.sum(_signed(weight)), F.lit(0)).alias("d_rows"),
+            # all-NULL measure values must contribute 0, not NULL —
+            # NULL here would overwrite the group's standing sum
+            F.coalesce(F.sum(_signed(measure)), F.lit(0)).alias("d_sum"),
+        )
+        yield per_group, per_group.join(
+            current, on=key_cols, how="left"
+        ).select(
+            *key_cols,
+            (F.coalesce(F.col("n_rows"), F.lit(0)) + F.col("d_rows")).alias(
+                "n_rows"
+            ),
+            (F.coalesce(F.col("sum_val"), F.lit(0)) + F.col("d_sum")).alias(
+                "sum_val"
+            ),
+        )
+
+    return step
 
 
 def maintain_rollup(
@@ -421,12 +531,10 @@ def maintain_rollup(
     ``_bucketspec`` marker enforces: a tick under a different zone
     or expression set refuses loudly and demands ``rebuild=True``.
 
-    Returns {"applied": from_v_exclusive..to_v or None, "mode":
-    "full"|"delta"|"rebuild"|"noop"}.
+    Returns {"applied": the source version now applied (None on a
+    noop), "mode": "full"|"delta"|"rebuild"|"noop"}.
     """
-    src_v = SN.current_version(source_dir)
-    if src_v is None:
-        raise FileNotFoundError(f"no committed snapshot in {source_dir}")
+    src_v = _source_version(source_dir)
     canon: dict[str, str] | None = None
     if key_exprs:
         extra = set(key_exprs) - set(group_cols)
@@ -460,19 +568,7 @@ def maintain_rollup(
             )
     tz = spark.conf.get("spark.sql.session.timeZone")
     _bucket_guard(rollup_dir, canon, tz, rebuild)
-    if rollup_lineage(rollup_dir) is not None:
-        if _applied_versions(rollup_dir):
-            raise ValueError(
-                f"{rollup_dir} is lineage-marked as a hierarchical "
-                "child (maintain_rollup_from_rollup) — its stamps are "
-                "PARENT versions; maintaining it directly from a base "
-                "table would mix version spaces"
-            )
-        # Marker with zero applied stamps = the first hierarchical
-        # tick failed before any merge committed; nothing binds the
-        # dir to the parent's version space, so reclaim it for
-        # direct maintenance (r7 ADVICE, ivm.py:349).
-        os.remove(os.path.join(rollup_dir, "_lineage"))
+    _reclaim_for_direct(rollup_dir)
 
     def _keyed(df: DataFrame) -> DataFrame:
         """Materialize the bucket keys (identity columns pass
@@ -498,22 +594,11 @@ def maintain_rollup(
             )
         )
 
-    def delta_fn(last: int):
-        diff = _keyed(SN.snapshot_diff(spark, source_dir, last, src_v))
-        sign = F.when(F.col("_change") == "insert", F.lit(1)).otherwise(
-            F.lit(-1)
-        )
-        return diff.groupBy(*group_cols).agg(
-            F.coalesce(F.sum(sign), F.lit(0)).alias("d_rows"),
-            # all-NULL measure values must contribute 0, not NULL —
-            # NULL here would overwrite the group's standing sum
-            F.coalesce(
-                F.sum(sign * F.col(sum_col).cast("bigint")), F.lit(0)
-            ).alias("d_sum"),
-        )
-
     out = _tick(
-        spark, rollup_dir, group_cols, src_v, rebuild, full_fn, delta_fn,
+        spark, source_dir, rollup_dir, group_cols, src_v, rebuild, full_fn,
+        _additive_step(
+            group_cols, _keyed, F.lit(1), F.col(sum_col).cast("bigint")
+        ),
         "filter or coalesce upstream",
     )
     # stamp only AFTER the tick's commit: a failed rebuild must leave
@@ -559,7 +644,9 @@ def maintain_rollup_from_rollup(
     marker naming the parent, so freshness checks can walk the
     chain (any depth) and the direct maintainer refuses to mix
     version spaces on this dir; re-pointing a child at a DIFFERENT
-    parent is refused (build a fresh child instead).
+    parent is refused (build a fresh child instead), and so is a
+    parent that is not a (count, sum) rollup — both before any
+    marker binds the dir.
 
     To serve base-table aggregates through the MV rewrite, register
     the child against the BASE table with ``parent_dir=`` (or let
@@ -569,20 +656,12 @@ def maintain_rollup_from_rollup(
     the child is fresh w.r.t. the base only after the parent's own
     tick for the base commit.
     """
-    src_v = SN.current_version(parent_dir)
-    if src_v is None:
-        raise FileNotFoundError(f"no committed snapshot in {parent_dir}")
-    if not key_exprs:
-        raise ValueError("key_exprs must map at least one child column")
-    parent_abs = os.path.abspath(parent_dir)
-    _bind_child_lineage(child_dir, parent_abs)
+    src_v, parent, key_aliases = _child_prelude(
+        spark, parent_dir, child_dir, key_exprs, "sum"
+    )
     child_cols = list(key_exprs)
-    key_aliases = [
-        F.expr(e).alias(c) for c, e in key_exprs.items()
-    ]
 
     def full_fn():
-        parent = read_rollup(spark, parent_dir, version=src_v)
         return (
             parent.select(*key_aliases, "n_rows", "sum_val")
             .groupBy(*child_cols)
@@ -592,26 +671,14 @@ def maintain_rollup_from_rollup(
             )
         )
 
-    def delta_fn(last: int):
-        diff = SN.snapshot_diff(spark, parent_dir, last, src_v)
-        sign = F.when(F.col("_change") == "insert", F.lit(1)).otherwise(
-            F.lit(-1)
-        )
-        return (
-            diff.select(*key_aliases, "n_rows", "sum_val", "_change")
-            .groupBy(*child_cols)
-            .agg(
-                F.coalesce(F.sum(sign * F.col("n_rows")), F.lit(0)).alias(
-                    "d_rows"
-                ),
-                F.coalesce(
-                    F.sum(sign * F.col("sum_val")), F.lit(0)
-                ).alias("d_sum"),
-            )
-        )
-
     return _tick(
-        spark, child_dir, child_cols, src_v, rebuild, full_fn, delta_fn,
+        spark, parent_dir, child_dir, child_cols, src_v, rebuild, full_fn,
+        _additive_step(
+            child_cols,
+            lambda d: d.select(*key_aliases, "n_rows", "sum_val", "_change"),
+            F.col("n_rows"),
+            F.col("sum_val"),
+        ),
         "filter or coalesce the parent keys in key_exprs",
     )
 
@@ -858,29 +925,32 @@ def _quantile_state_from_partials(df: DataFrame, group_cols: list[str]):
     )
 
 
-def _aux_measures(kind: str, col: str) -> list:
+def _aux_aggs(kind: str, arg, partials: bool, prefix: str = "") -> list:
+    """The per-kind measure aggregates over ``arg(measure column)``,
+    named ``prefix + measure column``: over base values (HLL sketch
+    build) or, with ``partials``, over a parent's stored partials
+    (min-of-mins, register union). Empty for quantile, whose map
+    measure has no single-pass aggregate.
+
+    Spark's Apache-DataSketches HLL is deterministic and
+    order-insensitive (register-wise max), so a sketch unioned from
+    per-commit partials estimates identically to any
+    PARTITION-PARALLEL single pass over the same rows (whose agg is
+    itself a union of per-partition sketches). A strictly serial
+    build uses the HIP estimator instead and can differ within
+    sketch error past exact/coupon mode (r8 ADVICE; pinned by
+    test_hll_union_vs_single_pass_drift) — the rollup tier is
+    estimate-equivalent, exact only while sketches stay in exact
+    mode."""
     if kind == "minmax":
         return [
-            F.min(F.col(col)).alias("min_val"),
-            F.max(F.col(col)).alias("max_val"),
+            F.min(arg("min_val")).alias(prefix + "min_val"),
+            F.max(arg("max_val")).alias(prefix + "max_val"),
         ]
-    # Spark's Apache-DataSketches HLL: deterministic and
-    # order-insensitive (register-wise max), so a sketch unioned
-    # from per-commit partials estimates identically to any
-    # PARTITION-PARALLEL single pass over the same rows (whose agg
-    # is itself a union of per-partition sketches). A strictly
-    # serial build uses the HIP estimator instead and can differ
-    # within sketch error past exact/coupon mode (r8 ADVICE; pinned
-    # by test_hll_union_vs_single_pass_drift) — the rollup tier is
-    # estimate-equivalent, exact only while sketches stay in
-    # exact mode.
-    return [F.hll_sketch_agg(F.col(col)).alias("hll")]
-
-
-def _aux_measure_cols(kind: str) -> list[str]:
-    if kind == "minmax":
-        return ["min_val", "max_val"]
-    return ["hll"] if kind == "hll" else ["qsk"]
+    if kind == "hll":
+        agg = F.hll_union_agg if partials else F.hll_sketch_agg
+        return [agg(arg("hll")).alias(prefix + "hll")]
+    return []
 
 
 def _aux_state(
@@ -893,8 +963,113 @@ def _aux_state(
         return _quantile_state(df, group_cols, col)
     return df.groupBy(*group_cols).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        *_aux_measures(kind, col),
+        *_aux_aggs(kind, lambda _: F.col(col), partials=False),
     )
+
+
+def _partials_state(
+    df: DataFrame, group_cols: list[str], kind: str
+) -> DataFrame:
+    """Exact per-group aux state re-aggregated from a parent's
+    (n_rows, measures) PARTIAL rows — ``_aux_state``'s twin for the
+    hierarchical maintainer."""
+    if kind == "quantile":
+        return _quantile_state_from_partials(df, group_cols)
+    return df.groupBy(*group_cols).agg(
+        F.coalesce(F.sum("n_rows"), F.lit(0)).cast("bigint").alias("n_rows"),
+        *_aux_aggs(kind, F.col, partials=True),
+    )
+
+
+def _merged_aux_measures(kind: str) -> list:
+    """stored ⊕ inserted measure merge for insert-only groups, per
+    kind: least/greatest, register-union, or bucket-wise map add —
+    NULL on either side passes the other through (a brand-new group
+    has no stored state; an all-NULL insert batch adds nothing)."""
+    if kind == "minmax":
+        return [
+            F.least("min_val", "ins_min_val").alias("min_val"),
+            F.greatest("max_val", "ins_max_val").alias("max_val"),
+        ]
+    m = _MEASURE_COLS[kind][0]
+    stored, ins = F.col(m), F.col(f"ins_{m}")
+    both = (
+        F.hll_union(stored, ins)
+        if kind == "hll"
+        else q_merge_expr(m, f"ins_{m}")
+    )
+    return [
+        F.when(stored.isNull(), ins)
+        .when(ins.isNull(), stored)
+        .otherwise(both)
+        .alias(m)
+    ]
+
+
+def _aux_step(
+    kind: str, key_cols: list[str], rows, project, weight, ins_measures,
+    state_fn,
+):
+    """The delta step both aux maintainers share. Groups with any
+    delete (updates arrive as delete+insert) re-aggregate exactly
+    from ``rows()`` — the pinned source — via a group-key semi join;
+    groups that vanished become tombstones. Insert-only groups merge
+    the inserted batch's measures into the stored ones. What differs
+    between base rows and parent partials is passed in: the diff
+    ``project``ion, the row ``weight`` (1, or a partial's n_rows),
+    the ``ins_measures`` aggregates (named ``ins_<measure>``) and the
+    ``state_fn`` that builds exact state from rows (which also builds
+    the quantile insert sketch)."""
+    ins = F.col("_change") == "insert"
+
+    @contextlib.contextmanager
+    def step(diff: DataFrame, current: DataFrame):
+        diff = project(diff)
+        per_group = diff.groupBy(*key_cols).agg(
+            F.coalesce(F.sum(_signed(weight)), F.lit(0))
+            .cast("bigint")
+            .alias("d_rows"),
+            F.max((~ins).cast("int")).alias("has_del"),
+            *ins_measures,
+        )
+        # shared by the null-key check, the del-recompute AND the
+        # ins-merge — persisted FIRST so the diff-side aggregation
+        # runs once, not once per consumer (r8 code review), and
+        # released only after the merge commits
+        per_group.persist()
+        try:
+            del_keys = per_group.where("has_del = 1").select(*key_cols)
+            recomputed = state_fn(
+                rows().join(del_keys, on=key_cols, how="leftsemi")
+            )
+            gone = _tombstones(
+                del_keys.join(recomputed, on=key_cols, how="left_anti"),
+                key_cols,
+                recomputed,
+            )
+            ins_groups = per_group.where("has_del = 0")
+            if kind == "quantile":
+                # the map measure has no single-pass aggregate: the
+                # insert sketches come from a bounded two-level one
+                ins_groups = ins_groups.join(
+                    state_fn(diff.where(ins)).select(
+                        *key_cols, F.col("qsk").alias("ins_qsk")
+                    ),
+                    on=key_cols,
+                    how="left",
+                )
+            merged = ins_groups.join(current, on=key_cols, how="left").select(
+                *key_cols,
+                (F.coalesce(F.col("n_rows"), F.lit(0)) + F.col("d_rows"))
+                .cast("bigint")
+                .alias("n_rows"),
+                *_merged_aux_measures(kind),
+            )
+            yield per_group, recomputed.unionByName(gone).unionByName(merged)
+        finally:
+            per_group.unpersist()
+
+    return step
 
 
 def maintain_aux_rollup(
@@ -906,11 +1081,11 @@ def maintain_aux_rollup(
     kind: str = "minmax",
     rebuild: bool = False,
 ) -> dict:
-    """Maintain a per-group (n_rows, MIN/MAX | HLL-sketch) rollup —
-    the measures ``maintain_rollup``'s (count, sum) contract cannot
-    carry (module docstring: "MIN/MAX would need the per-group
-    re-scan on deletes"). This maintainer prices that re-scan
-    instead of refusing it:
+    """Maintain a per-group (n_rows, MIN/MAX | HLL | quantile sketch)
+    rollup — the measures ``maintain_rollup``'s additive (count, sum)
+    contract cannot carry, because a delete cannot be subtracted from
+    them. This maintainer prices the per-group re-scan that deletes
+    need instead of refusing it:
 
     - insert-only groups: merged in place (least/greatest of the
       stored extreme and the inserted batch's; HLL union) — no base
@@ -922,10 +1097,12 @@ def maintain_aux_rollup(
       that vanished entirely become tombstones (n_rows=0, NULL
       measures), filtered by ``read_aux_rollup``.
 
-    Protocol identical to ``_tick`` (same ``ivm:src_v{V}`` stamps —
-    replay no-op, rollback-safe log order, OCC fence, vacuumed
-    history → rebuild); kept separate because the merge algebra is
-    absolute-state, not additive. ``kind``: "minmax" stores
+    Same protocol as ``maintain_rollup``, run by ``_tick`` (same
+    ``ivm:src_v{V}`` stamps — replay no-op, rollback-safe log order,
+    OCC fence, vacuumed history → rebuild); only the delta step
+    differs, because the merge algebra is absolute-state, not
+    additive (``_aux_step``, shared with the hierarchical twin).
+    ``kind``: "minmax" stores
     (min_val, max_val) in the column's natural type; "hll" stores
     one Apache-DataSketches HLL binary per group
     (plans/rewrite.py answers approx COUNT(DISTINCT) from it);
@@ -936,178 +1113,32 @@ def maintain_aux_rollup(
     delete story, though the map algebra could even subtract)."""
     if kind not in AUX_KINDS:
         raise ValueError(f"kind must be one of {AUX_KINDS}, got {kind!r}")
-    src_v = SN.current_version(source_dir)
-    if src_v is None:
-        raise FileNotFoundError(f"no committed snapshot in {source_dir}")
-    if rollup_lineage(rollup_dir) is not None:
-        if _applied_versions(rollup_dir):
-            raise ValueError(
-                f"{rollup_dir} is lineage-marked as a hierarchical "
-                "child (maintain_aux_rollup_from_rollup) — its stamps "
-                "are PARENT versions; maintaining it directly from a "
-                "base table would mix version spaces"
-            )
-        # marker with zero stamps: first hierarchical tick failed
-        # before any merge — reclaimable, same rule as maintain_rollup
-        os.remove(os.path.join(rollup_dir, "_lineage"))
+    src_v = _source_version(source_dir)
+    _reclaim_for_direct(rollup_dir)
     if kind == "quantile":
         _q_format_guard(rollup_dir, rebuild)
-    stamp = _STAMP.format(v=src_v)
-    applied = _applied_versions(rollup_dir)
-    target_v = SN.current_version(rollup_dir)
-    hint = "filter or coalesce NULL group keys before rolling up"
-    mcols = _aux_measure_cols(kind)
 
-    def full_state():
-        return _aux_state(
-            SN.read_snapshot(spark, source_dir, version=src_v),
-            group_cols, col, kind,
-        )
+    def rows():
+        return SN.read_snapshot(spark, source_dir, version=src_v)
 
-    if not rebuild and applied and applied[-1] == src_v:
-        return {"applied": None, "mode": "noop"}
+    def state(df: DataFrame) -> DataFrame:
+        return _aux_state(df, group_cols, col, kind)
 
-    if not applied:
-        full = full_state()
-        _reject_null_group_keys(full, group_cols, hint)
-        SN.merge_snapshot(
-            spark, rollup_dir, full, key=group_cols, op=stamp,
-            expect_version=target_v,
-        )
-        return {"applied": src_v, "mode": "full"}
+    def inserted(_):
+        return F.when(F.col("_change") == "insert", F.col(col))
 
-    def _rebuild():
-        full = full_state()
-        _reject_null_group_keys(full, group_cols, hint)
-        current = SN.read_snapshot(spark, rollup_dir)
-        gone = current.join(
-            full, on=group_cols, how="left_anti"
-        ).select(
-            *group_cols,
-            F.lit(0).cast("bigint").alias("n_rows"),
-            *[
-                F.lit(None).cast(t).alias(c)
-                for c, t in full.select(*mcols).dtypes
-            ],
-        )
-        SN.merge_snapshot(
-            spark, rollup_dir, full.unionByName(gone), key=group_cols,
-            op=stamp, expect_version=target_v,
-        )
-        return {"applied": src_v, "mode": "rebuild"}
-
-    if rebuild:
-        return _rebuild()
-    try:
-        diff = SN.snapshot_diff(spark, source_dir, applied[-1], src_v)
-    except FileNotFoundError:
-        return _rebuild()
-    ins = F.col("_change") == "insert"
-    if kind == "minmax":
-        ins_measures = [
-            F.min(F.when(ins, F.col(col))).alias("ins_min"),
-            F.max(F.when(ins, F.col(col))).alias("ins_max"),
-        ]
-    elif kind == "hll":
-        ins_measures = [
-            F.hll_sketch_agg(F.when(ins, F.col(col))).alias("ins_hll")
-        ]
-    else:
-        # the map measure has no single-pass aggregate — the insert
-        # sketches come from a separate bounded two-level aggregation
-        # joined in below
-        ins_measures = []
-    per_group = (
-        diff.select(*group_cols, col, "_change")
-        .groupBy(*group_cols)
-        .agg(
-            F.coalesce(
-                F.sum(F.when(ins, 1).otherwise(-1)), F.lit(0)
-            ).cast("bigint").alias("d_rows"),
-            F.max((~ins).cast("int")).alias("has_del"),
-            *ins_measures,
-        )
+    return _tick(
+        spark, source_dir, rollup_dir, group_cols, src_v, rebuild,
+        lambda: state(rows()),
+        _aux_step(
+            kind, group_cols, rows,
+            lambda d: d.select(*group_cols, col, "_change"),
+            F.lit(1),
+            _aux_aggs(kind, inserted, partials=False, prefix="ins_"),
+            state,
+        ),
+        "filter or coalesce NULL group keys before rolling up",
     )
-    # shared by the null-key check, the del-recompute, AND the
-    # ins-merge below — persisted FIRST so the diff-side aggregation
-    # runs once, not once per consumer (r8 code review)
-    per_group.persist()
-    try:
-        _reject_null_group_keys(per_group, group_cols, hint)
-        del_keys = per_group.where("has_del = 1").select(*group_cols)
-        recomputed = _aux_state(
-            SN.read_snapshot(spark, source_dir, version=src_v).join(
-                del_keys, on=group_cols, how="leftsemi"
-            ),
-            group_cols, col, kind,
-        )
-        gone = del_keys.join(
-            recomputed, on=group_cols, how="left_anti"
-        ).select(
-            *group_cols,
-            F.lit(0).cast("bigint").alias("n_rows"),
-            *[
-                F.lit(None).cast(t).alias(c)
-                for c, t in recomputed.select(*mcols).dtypes
-            ],
-        )
-        current = SN.read_snapshot(spark, rollup_dir)
-        ins_groups = per_group.where("has_del = 0")
-        if kind == "quantile":
-            ins_groups = ins_groups.join(
-                _quantile_state(
-                    diff.where(ins).select(*group_cols, col),
-                    group_cols, col,
-                ).select(*group_cols, F.col("qsk").alias("ins_qsk")),
-                on=group_cols,
-                how="left",
-            )
-        merged = ins_groups.join(current, on=group_cols, how="left").select(
-            *group_cols,
-            (
-                F.coalesce(F.col("n_rows"), F.lit(0)) + F.col("d_rows")
-            ).cast("bigint").alias("n_rows"),
-            *_merged_aux_measures(kind),
-        )
-        updated = recomputed.unionByName(gone).unionByName(merged)
-        SN.merge_snapshot(
-            spark, rollup_dir, updated, key=group_cols, op=stamp,
-            expect_version=target_v,
-        )
-    finally:
-        per_group.unpersist()
-    return {"applied": src_v, "mode": "delta"}
-
-
-def _merged_aux_measures(kind: str, ins_prefix: str = "ins_") -> list:
-    """stored ⊕ inserted measure merge for insert-only groups, per
-    kind: least/greatest, register-union, or bucket-wise map add —
-    NULL on either side passes the other through (a brand-new group
-    has no stored state; an all-NULL insert batch adds nothing)."""
-    if kind == "minmax":
-        return [
-            F.least(F.col("min_val"), F.col(f"{ins_prefix}min")).alias(
-                "min_val"
-            ),
-            F.greatest(
-                F.col("max_val"), F.col(f"{ins_prefix}max")
-            ).alias("max_val"),
-        ]
-    if kind == "hll":
-        return [
-            F.when(F.col("hll").isNull(), F.col(f"{ins_prefix}hll"))
-            .when(F.col(f"{ins_prefix}hll").isNull(), F.col("hll"))
-            .otherwise(
-                F.hll_union(F.col("hll"), F.col(f"{ins_prefix}hll"))
-            )
-            .alias("hll")
-        ]
-    return [
-        F.when(F.col("qsk").isNull(), F.col(f"{ins_prefix}qsk"))
-        .when(F.col(f"{ins_prefix}qsk").isNull(), F.col("qsk"))
-        .otherwise(q_merge_expr("qsk", f"{ins_prefix}qsk"))
-        .alias("qsk")
-    ]
 
 
 def maintain_aux_rollup_from_rollup(
@@ -1147,173 +1178,35 @@ def maintain_aux_rollup_from_rollup(
     group column to a SQL expression over the PARENT's columns."""
     if kind not in AUX_KINDS:
         raise ValueError(f"kind must be one of {AUX_KINDS}, got {kind!r}")
-    src_v = SN.current_version(parent_dir)
-    if src_v is None:
-        raise FileNotFoundError(f"no committed snapshot in {parent_dir}")
-    if not key_exprs:
-        raise ValueError("key_exprs must map at least one child column")
-    parent_abs = os.path.abspath(parent_dir)
-    mcols = _aux_measure_cols(kind)
-    # the parent must be an aux rollup of the SAME kind — its stored
-    # partials are what the child's measures compose from; a wrong
-    # kind must fail loudly before any lineage marker binds the dir
-    pcols = set(SN.read_snapshot(spark, parent_dir, version=src_v).columns)
-    missing = ({"n_rows", *mcols}) - pcols
-    if missing:
-        raise ValueError(
-            f"parent {parent_dir} lacks column(s) {sorted(missing)} — "
-            f"not a maintained {kind!r} aux rollup"
-        )
-    _bind_child_lineage(child_dir, parent_abs)
+    src_v, parent, key_aliases = _child_prelude(
+        spark, parent_dir, child_dir, key_exprs, kind
+    )
     if kind == "quantile":
         _q_format_guard(child_dir, rebuild)
     child_cols = list(key_exprs)
-    key_aliases = [F.expr(e).alias(c) for c, e in key_exprs.items()]
-    stamp = _STAMP.format(v=src_v)
-    applied = _applied_versions(child_dir)
-    target_v = SN.current_version(child_dir)
-    hint = "filter or coalesce the parent keys in key_exprs"
+    partial_cols = ["n_rows", *_MEASURE_COLS[kind]]
 
-    def _partial_measures():
-        """Re-aggregate child measures from parent PARTIALS (exact:
-        min-of-mins / register-union; quantile dispatches through
-        _quantile_state_from_partials instead — map merge has no
-        single-pass aggregate)."""
-        if kind == "minmax":
-            return [
-                F.min("min_val").alias("min_val"),
-                F.max("max_val").alias("max_val"),
-            ]
-        return [F.hll_union_agg("hll").alias("hll")]
+    def rows():
+        return parent.select(*key_aliases, *partial_cols)
 
-    def _child_state(partials: DataFrame) -> DataFrame:
-        if kind == "quantile":
-            return _quantile_state_from_partials(partials, child_cols)
-        return partials.groupBy(*child_cols).agg(
-            F.coalesce(F.sum("n_rows"), F.lit(0))
-            .cast("bigint")
-            .alias("n_rows"),
-            *_partial_measures(),
-        )
+    def state(df: DataFrame) -> DataFrame:
+        return _partials_state(df, child_cols, kind)
 
-    def full_state():
-        parent = read_rollup(spark, parent_dir, version=src_v)
-        return _child_state(parent.select(*key_aliases, "n_rows", *mcols))
+    def inserted(m):
+        return F.when(F.col("_change") == "insert", F.col(m))
 
-    if not rebuild and applied and applied[-1] == src_v:
-        return {"applied": None, "mode": "noop"}
-
-    if not applied:
-        full = full_state()
-        _reject_null_group_keys(full, child_cols, hint)
-        SN.merge_snapshot(
-            spark, child_dir, full, key=child_cols, op=stamp,
-            expect_version=target_v,
-        )
-        return {"applied": src_v, "mode": "full"}
-
-    def _rebuild():
-        full = full_state()
-        _reject_null_group_keys(full, child_cols, hint)
-        current = SN.read_snapshot(spark, child_dir)
-        gone = current.join(
-            full, on=child_cols, how="left_anti"
-        ).select(
-            *child_cols,
-            F.lit(0).cast("bigint").alias("n_rows"),
-            *[
-                F.lit(None).cast(t).alias(c)
-                for c, t in full.select(*mcols).dtypes
-            ],
-        )
-        SN.merge_snapshot(
-            spark, child_dir, full.unionByName(gone), key=child_cols,
-            op=stamp, expect_version=target_v,
-        )
-        return {"applied": src_v, "mode": "rebuild"}
-
-    if rebuild:
-        return _rebuild()
-    try:
-        diff = SN.snapshot_diff(spark, parent_dir, applied[-1], src_v)
-    except FileNotFoundError:
-        return _rebuild()
-    ins = F.col("_change") == "insert"
-    if kind == "minmax":
-        ins_measures = [
-            F.min(F.when(ins, F.col("min_val"))).alias("ins_min"),
-            F.max(F.when(ins, F.col("max_val"))).alias("ins_max"),
-        ]
-    elif kind == "hll":
-        ins_measures = [
-            F.hll_union_agg(F.when(ins, F.col("hll"))).alias("ins_hll")
-        ]
-    else:
-        ins_measures = []  # joined in below (no map-merge aggregate)
-    per_group = (
-        diff.select(*key_aliases, "n_rows", *mcols, "_change")
-        .groupBy(*child_cols)
-        .agg(
-            F.coalesce(
-                F.sum(
-                    F.when(ins, F.col("n_rows")).otherwise(-F.col("n_rows"))
-                ),
-                F.lit(0),
-            ).cast("bigint").alias("d_rows"),
-            F.max((~ins).cast("int")).alias("has_del"),
-            *ins_measures,
-        )
+    return _tick(
+        spark, parent_dir, child_dir, child_cols, src_v, rebuild,
+        lambda: state(rows()),
+        _aux_step(
+            kind, child_cols, rows,
+            lambda d: d.select(*key_aliases, *partial_cols, "_change"),
+            F.col("n_rows"),
+            _aux_aggs(kind, inserted, partials=True, prefix="ins_"),
+            state,
+        ),
+        "filter or coalesce the parent keys in key_exprs",
     )
-    # one diff-side aggregation for all three consumers (the same
-    # persist discipline as maintain_aux_rollup — r8 code review)
-    per_group.persist()
-    try:
-        _reject_null_group_keys(per_group, child_cols, hint)
-        del_keys = per_group.where("has_del = 1").select(*child_cols)
-        parent_now = read_rollup(spark, parent_dir, version=src_v)
-        recomputed = _child_state(
-            parent_now.select(*key_aliases, "n_rows", *mcols).join(
-                del_keys, on=child_cols, how="leftsemi"
-            )
-        )
-        gone = del_keys.join(
-            recomputed, on=child_cols, how="left_anti"
-        ).select(
-            *child_cols,
-            F.lit(0).cast("bigint").alias("n_rows"),
-            *[
-                F.lit(None).cast(t).alias(c)
-                for c, t in recomputed.select(*mcols).dtypes
-            ],
-        )
-        current = SN.read_snapshot(spark, child_dir)
-        ins_groups = per_group.where("has_del = 0")
-        if kind == "quantile":
-            ins_groups = ins_groups.join(
-                _quantile_state_from_partials(
-                    diff.where(ins).select(*key_aliases, "n_rows", *mcols),
-                    child_cols,
-                ).select(*child_cols, F.col("qsk").alias("ins_qsk")),
-                on=child_cols,
-                how="left",
-            )
-        merged = ins_groups.join(
-            current, on=child_cols, how="left"
-        ).select(
-            *child_cols,
-            (
-                F.coalesce(F.col("n_rows"), F.lit(0)) + F.col("d_rows")
-            ).cast("bigint").alias("n_rows"),
-            *_merged_aux_measures(kind),
-        )
-        updated = recomputed.unionByName(gone).unionByName(merged)
-        SN.merge_snapshot(
-            spark, child_dir, updated, key=child_cols, op=stamp,
-            expect_version=target_v,
-        )
-    finally:
-        per_group.unpersist()
-    return {"applied": src_v, "mode": "delta"}
 
 
 def read_aux_rollup(

@@ -280,6 +280,10 @@ def test_kind_mismatch_and_version_space_guards(spark, tmp_path):
             spark, daily, weekly, WEEK, kind="hll"
         )
     assert ivm.rollup_lineage(weekly) is None
+    # a (count, sum) child of the same parent: refused the same way
+    with pytest.raises(ValueError, match="not a maintained 'sum'"):
+        ivm.maintain_rollup_from_rollup(spark, daily, weekly, WEEK)
+    assert ivm.rollup_lineage(weekly) is None
     ivm.maintain_aux_rollup_from_rollup(
         spark, daily, weekly, WEEK, kind="minmax"
     )

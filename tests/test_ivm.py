@@ -1105,3 +1105,119 @@ def test_bucket_marker_stamps_only_after_commit(spark, tmp_path):
         f.write("{not json")
     with pytest.raises(ValueError, match="not valid JSON"):
         ivm.maintain_rollup(spark, src, rol, ["day"], "v", key_exprs=old)
+
+
+# --- the commit protocol every maintainer shares (_tick) -------------
+
+@pytest.mark.parametrize(
+    "maintainer",
+    [
+        "maintain_rollup",
+        "maintain_rollup_from_rollup",
+        "maintain_aux_rollup",
+        "maintain_aux_rollup_from_rollup",
+    ],
+)
+def test_tick_protocol_occ_fence_and_vacuum_rebuild(
+    spark, tmp_path, monkeypatch, maintainer
+):
+    """Each maintainer, run through the one protocol: a tick that
+    loses a race to another commit on the target raises
+    SnapshotConflict and leaves the rollup unchanged, its retry
+    applies the delta exactly once, and after the feed's history is
+    vacuumed the next tick rebuilds to the scratch recompute."""
+    src = str(tmp_path / "src")
+    daily = str(tmp_path / "daily")
+    out = str(tmp_path / "out")
+    aux = "aux" in maintainer
+    child = maintainer.endswith("_from_rollup")
+    measures = ["min_val", "max_val"] if aux else ["sum_val"]
+    keys = ["week", "t"] if child else ["day", "t"]
+    base_fn = ivm.maintain_aux_rollup if aux else ivm.maintain_rollup
+    SN.write_snapshot(
+        src,
+        spark.createDataFrame(
+            [(i, i % 14, f"t{i % 3}", i) for i in range(60)],
+            ["k", "day", "t", "v"],
+        ),
+    )
+
+    def tick():
+        if child:
+            return getattr(ivm, maintainer)(
+                spark, daily, out, {"week": "day DIV 7", "t": "t"}
+            )
+        return base_fn(spark, src, out, ["day", "t"], "v")
+
+    def commit(change):
+        change(src)
+        if child:
+            base_fn(spark, src, daily, ["day", "t"], "v")
+
+    def view():
+        return sorted(
+            tuple(r)
+            for r in ivm.read_rollup(spark, out)
+            .select(*keys, "n_rows", *measures)
+            .collect()
+        )
+
+    def truth():
+        aggs = [F.min("v"), F.max("v")] if aux else [F.sum("v")]
+        return sorted(
+            tuple(r)
+            for r in SN.read_snapshot(spark, src)
+            .withColumn("week", F.expr("day DIV 7"))
+            .groupBy(*keys)
+            .agg(F.count(F.lit(1)), *aggs)
+            .collect()
+        )
+
+    if child:
+        base_fn(spark, src, daily, ["day", "t"], "v")
+    assert tick()["mode"] == "full"
+    assert view() == truth()
+    # an update that moves an extreme and an insert into a new group
+    commit(
+        lambda d: SN.merge_snapshot(
+            spark, d,
+            spark.createDataFrame(
+                [(0, 13, "t0", 500), (1000, 3, "t9", -7)],
+                ["k", "day", "t", "v"],
+            ),
+            key="k",
+        )
+    )
+    before = view()
+    real_diff = SN.snapshot_diff
+
+    def racing_diff(*args, **kwargs):
+        # a racing tick commits to the target after this one planned
+        SN.compact(spark, out)
+        return real_diff(*args, **kwargs)
+
+    monkeypatch.setattr(ivm.SN, "snapshot_diff", racing_diff)
+    with pytest.raises(SN.SnapshotConflict):
+        tick()
+    monkeypatch.undo()
+    assert view() == before
+    assert tick()["mode"] == "delta"
+    assert view() == truth()
+    assert tick()["mode"] == "noop"
+    assert view() == truth()
+
+    # delete a whole group and the row holding an extreme, then
+    # vacuum the history the next delta would need
+    commit(lambda d: SN.delete_snapshot(spark, d, "day = 5 OR k = 59"))
+    commit(
+        lambda d: SN.merge_snapshot(
+            spark, d,
+            spark.createDataFrame(
+                [(2000, 1, "t1", 9)], ["k", "day", "t", "v"]
+            ),
+            key="k",
+        )
+    )
+    SN.vacuum(daily if child else src, keep_versions=1)
+    assert tick()["mode"] == "rebuild"
+    assert view() == truth()

@@ -332,26 +332,3 @@ def test_trending_topk_stream_equals_batch(spark, events_dir):
     assert streamed
     for _, rank, _, _ in streamed:
         assert 1 <= rank <= ST.TREND_K
-
-
-def test_transform_with_state_spend_equals_batch(spark, events_dir, tmp_path_factory):
-    """Spark 4 transformWithStateInPandas per-user spend tracker:
-    latest streamed totals equal the batch recompute bit-for-bit
-    (integer-cent accumulation), including when the input arrives in
-    multiple micro-batches. Needs google.protobuf (the state-server
-    wire protocol) — absent in this container, so the test SKIPS
-    here; stateful.py's applyInPandasWithState twin carries the
-    stateful verification (see stateful_v2 module docstring)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from ensembl_lakehouse_spark.streaming import stateful_v2 as SV
-
-    streamed = {
-        r.user_id: (r.n_events, r.sum_value_cents, r.max_value_cents)
-        for r in SV.run_user_spend_to_memory(spark, events_dir, "t_spend_eq").collect()
-    }
-    batch = {
-        r.user_id: (r.n_events, r.sum_value_cents, r.max_value_cents)
-        for r in SV.user_spend_batch(spark, events_dir).collect()
-    }
-    assert streamed == batch
-    assert streamed
