@@ -34,6 +34,14 @@ manifest pointing at an old version's file list (never a delete);
 ``compact`` rewrites the current file list into few large files as a
 new snapshot — the small-file maintenance every streaming sink needs
 (pairs with streaming/continuous.py's per-batch appends).
+
+Every writing verb (write/append, merge, delete, update, drop and
+rename column, compact) ends in the ONE copy-on-write step
+``_cow_commit``: write the new rows, record their stats (and blooms
+when asked), carry the untouched base files by reference with their
+metadata, commit. Files are read through ``_read_file_subset``, the
+delete/update finding scan is ``_finding_scan``, and every pointer,
+manifest, tag and constraint swap is ``_atomic_write``.
 """
 
 from __future__ import annotations
@@ -90,6 +98,24 @@ def current_version(table_dir: str) -> int | None:
             return int(f.read().strip())
     except FileNotFoundError:
         return None
+
+
+def _committed_version(table_dir: str) -> int:
+    """The current version of a table that must have one."""
+    cur = current_version(table_dir)
+    if cur is None:
+        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    return cur
+
+
+def _atomic_write(path: str, text: str) -> None:
+    """Write ``text`` to a fresh tmp file, then swap it over ``path``:
+    readers see the old content or the new, never a torn write, and a
+    crash leaves only a ``.tmp-*`` stray (vacuum sweeps manifest ones)."""
+    tmp = path + f".tmp-{uuid.uuid4().hex}"
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
 
 
 #: Commits between FULL manifest checkpoints. In between, a commit
@@ -367,9 +393,9 @@ def _commit_locked(
     # from the base manifest (authoritative, re-read under the lock);
     # freshly written files use the footer num_rows the UNLOCKED
     # _commit wrapper read (so footer I/O never lengthens the commit
-    # critical section). Centralized here so every commit path
-    # (write, merge, delete, update, compact, rollback, backfill)
-    # records counts without threading a parameter through each. A
+    # critical section). Centralized here so every commit path (the
+    # verbs' shared _cow_commit step and rollback) records counts
+    # without threading a parameter through each. A
     # file covered by neither is simply absent (table_rowcount then
     # reports unknown rather than a wrong number).
     parent_m = _read_manifest(table_dir, now_cur) if now_cur is not None else None
@@ -413,15 +439,11 @@ def _commit_locked(
         payload = _encode_delta(parent_m, manifest)
     else:
         payload = manifest
-    mpath = os.path.join(_manifest_dir(table_dir), f"v{version}.json")
-    tmp = mpath + f".tmp-{uuid.uuid4().hex}"
-    with open(tmp, "w") as f:
-        json.dump(payload, f)
-    os.replace(tmp, mpath)
-    ptmp = _pointer_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-    with open(ptmp, "w") as f:
-        f.write(str(version))
-    os.replace(ptmp, _pointer_path(table_dir))
+    _atomic_write(
+        os.path.join(_manifest_dir(table_dir), f"v{version}.json"),
+        json.dumps(payload),
+    )
+    _atomic_write(_pointer_path(table_dir), str(version))
     # Retention-independent op-stamp log: vacuum drops old manifests,
     # but exactly-once writers (streaming sink, backfill chunks, ANN
     # adds) need their stamps FOREVER — a replayed pre-retention
@@ -690,6 +712,43 @@ def _file_blooms(table_dir: str, files: list[str], columns: list[str]) -> dict:
     return out
 
 
+def _cow_commit(
+    table_dir: str,
+    df: DataFrame | None,
+    base: int | None,
+    op: str,
+    expect_version: int | None,
+    bloom_for: list[str] | None,
+    manifest: dict | None = None,
+    touched=(),
+) -> int:
+    """The one copy-on-write commit every writing verb ends in: write
+    ``df`` (None writes nothing) into a fresh data directory, record
+    its files' stats — and blooms on ``bloom_for`` columns, so no
+    rewrite silently strips point-lookup pruning — then commit them
+    next to ``manifest``'s files that are not ``touched``. Those are
+    carried BY REFERENCE with their stats and blooms; ``manifest=None``
+    replaces the whole content (overwrite, full merge, DDL, full
+    compact). Row counts are carried or read by ``_commit``."""
+    files = (
+        []
+        if df is None
+        else _write_data(table_dir, df, (base if base is not None else -1) + 1)
+    )
+    stats = _file_stats(table_dir, files)
+    blooms = _file_blooms(table_dir, files, bloom_for) if bloom_for else {}
+    carried: list[str] = []
+    if manifest is not None:
+        gone = set(touched)
+        carried = [f for f in manifest["files"] if f not in gone]
+        for name, fresh in (("stats", stats), ("blooms", blooms)):
+            prev = manifest.get(name, {})
+            fresh.update({f: prev[f] for f in carried if f in prev})
+    return _commit(
+        table_dir, files + carried, op, expect_version, base, stats, blooms
+    )
+
+
 def write_snapshot(
     table_dir: str,
     df: DataFrame,
@@ -722,20 +781,14 @@ def write_snapshot(
     if cluster_by:
         df = _clustered(df, cluster_by, n_files)
     base = current_version(table_dir)
-    files = _write_data(table_dir, df, (base if base is not None else -1) + 1)
-    stats = _file_stats(table_dir, files)
-    blooms = (
-        _file_blooms(table_dir, files, bloom_for) if bloom_for else {}
+    # an append carries every base file (and its stats and blooms)
+    appended_to = (
+        _read_manifest(table_dir, base)
+        if mode == "append" and base is not None
+        else None
     )
-    if mode == "append" and base is not None:
-        prev = _read_manifest(table_dir, base)
-        files = files + prev["files"]
-        stats = {**prev.get("stats", {}), **stats}
-        # appended commits carry forward the prior blooms — old files
-        # keep their pruning power, new files add theirs
-        blooms = {**prev.get("blooms", {}), **blooms}
-    return _commit(
-        table_dir, files, mode, expect_version, base, stats, blooms
+    return _cow_commit(
+        table_dir, df, base, mode, expect_version, bloom_for, appended_to
     )
 
 
@@ -826,10 +879,7 @@ def files_for_range(
     [min, max] stats for ``column`` overlap [lo, hi], plus the total
     file count. Files with no recorded stats for the column are
     INCLUDED (conservative — skipping must never lose rows)."""
-    cur = current_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    version = cur if version is None else version
+    version = _committed_version(table_dir) if version is None else version
     manifest = _read_manifest(table_dir, version)
     return _prune_manifest(manifest, column, lo, hi), len(manifest["files"])
 
@@ -847,10 +897,7 @@ def files_for_point(
     second stage untouched — both stages are prune-only and can
     never lose a row. At 100 TB this is the difference between a
     key lookup scanning the table and scanning ~one file."""
-    cur = current_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    version = cur if version is None else version
+    version = _committed_version(table_dir) if version is None else version
     manifest = _read_manifest(table_dir, version)
     keep = _prune_manifest(manifest, column, value, value)
     blooms = manifest.get("blooms", {})
@@ -890,9 +937,7 @@ def read_snapshot(
     files written with ``bloom_for=[column]`` — the case range stats
     cannot help (a scattered id sits inside every file's range), and
     the exact equality filter on top."""
-    cur = current_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    cur = _committed_version(table_dir)
     if sum(x is not None for x in (version, tag)) + bool(published) > 1:
         raise ValueError("pass at most one of version=, tag=, published=")
     if tag is not None:
@@ -913,10 +958,9 @@ def read_snapshot(
     files = manifest["files"]
     if not files:
         raise ValueError(f"v{version} of {table_dir} lists no files")
-    read = spark.read.option("mergeSchema", "true")
+    if where_eq is not None and where_between is not None:
+        raise ValueError("pass where_between OR where_eq, not both")
     if where_eq is not None:
-        if where_between is not None:
-            raise ValueError("pass where_between OR where_eq, not both")
         column, value = where_eq
         if value is None or (isinstance(value, float) and value != value):
             raise ValueError(
@@ -924,36 +968,25 @@ def read_snapshot(
                 "never matches them); filter explicitly instead"
             )
         keep, _total = files_for_point(table_dir, column, value, version)
-        if not keep:
-            # plan over ALL files so the MERGED schema survives even
-            # when every file is skipped (a single file may predate a
-            # schema-evolving commit); 1=0 pushes down, no row group
-            # is ever read
-            df = read.parquet(*(os.path.join(table_dir, f) for f in files))
-            return df.where("1 = 0")
-        df = read.parquet(*(os.path.join(table_dir, f) for f in keep))
-        if column not in df.columns:
-            # every kept file predates the column (schema evolution):
-            # those rows read NULL there, and NULL never equals the
-            # probe — empty result under the full merged schema
-            df = read.parquet(*(os.path.join(table_dir, f) for f in files))
-            return df.where("1 = 0")
-        return df.where(df[column] == value)
-    if where_between is None:
-        return read.parquet(*(os.path.join(table_dir, f) for f in files))
-    column, lo, hi = where_between
-    keep = _prune_manifest(manifest, column, lo, hi)
+    elif where_between is not None:
+        column, lo, hi = where_between
+        keep = _prune_manifest(manifest, column, lo, hi)
+    else:
+        return _read_file_subset(spark, table_dir, files)
+    df = _read_file_subset(spark, table_dir, keep, files)
     if not keep:
-        # every file skipped: keep the MERGED schema, return zero rows
-        # (1=0 pushes down — no row group is read)
-        df = read.parquet(*(os.path.join(table_dir, f) for f in files))
-        return df.where("1 = 0")
-    df = read.parquet(*(os.path.join(table_dir, f) for f in keep))
+        # every file skipped: the reader planned over ALL files, so
+        # the MERGED schema survives (a single file may predate a
+        # schema-evolving commit) under 1=0 — no row group is read
+        return df
     if column not in df.columns:
-        # kept files all predate the evolved column — see where_eq
-        df = read.parquet(*(os.path.join(table_dir, f) for f in files))
-        return df.where("1 = 0")
-    return df.where((df[column] >= lo) & (df[column] <= hi))
+        # every kept file predates the column (schema evolution):
+        # those rows read NULL there, and NULL matches no probe —
+        # empty result under the full merged schema
+        return _read_file_subset(spark, table_dir, [], files)
+    c = df[column]
+    hit = c == value if where_eq is not None else (c >= lo) & (c <= hi)
+    return df.where(hit)
 
 
 def rollback(table_dir: str, version: int) -> int:
@@ -1052,30 +1085,24 @@ def merge_snapshot(
         )
     base = current_version(table_dir)
     if base is None:
-        files = _write_data(table_dir, updates, 0)
-        return _commit(
-            table_dir, files, op, expect_version, base,
-            _file_stats(table_dir, files),
-            _file_blooms(table_dir, files, bloom_for) if bloom_for else {},
+        return _cow_commit(
+            table_dir, updates, base, op, expect_version, bloom_for
         )
-    carried: list[str] = []
+    manifest, touched = None, set()
     if scope_by is None:
         current = read_snapshot(spark, table_dir)
     else:
-        from pyspark.sql import functions as F
-
         manifest = _read_manifest(table_dir, base)
         touched = _scoped_candidates(updates, scope_by, manifest, "updates")
         if touched is None:
             raise ValueError("updates are empty — nothing to merge")
-        carried = [f for f in manifest["files"] if f not in touched]
-        if not touched:
-            # no existing file can hold a matching key: pure insert
-            current = read_snapshot(spark, table_dir).where("1 = 0")
-        else:
-            current = spark.read.option("mergeSchema", "true").parquet(
-                *(os.path.join(table_dir, f) for f in sorted(touched))
-            )
+        # no touched file: no existing file can hold a matching key,
+        # so the merge is a pure insert
+        current = (
+            _read_file_subset(spark, table_dir, sorted(touched))
+            if touched
+            else read_snapshot(spark, table_dir).where("1 = 0")
+        )
     kept = current.join(updates.select(*keys), on=keys, how="left_anti")
     # allowMissingColumns = schema evolution on MERGE: updates may ADD
     # columns (carried-forward rows read NULL there — the Delta
@@ -1083,34 +1110,40 @@ def merge_snapshot(
     # NULL; they are whole-row upserts, not partial column patches —
     # documented in the docstring)
     merged = kept.unionByName(updates, allowMissingColumns=True)
-    files = _write_data(table_dir, merged, base + 1)
-    stats = _file_stats(table_dir, files)
-    # rewritten files get fresh blooms when requested — without this,
-    # every merge on a bloom-maintained table silently strips point-
-    # lookup pruning from the files it rewrites
-    blooms: dict = (
-        _file_blooms(table_dir, files, bloom_for) if bloom_for else {}
-    )
-    if carried:
-        stats, blooms = _carry_metadata(
-            _read_manifest(table_dir, base), carried, stats, blooms
-        )
-    return _commit(
-        table_dir, files + carried, op, expect_version, base, stats, blooms
+    return _cow_commit(
+        table_dir, merged, base, op, expect_version, bloom_for, manifest,
+        touched,
     )
 
 
-def _scan_paths_to_rel(
-    table_dir: str, candidates: list[str], hit_uris: set[str]
+def _finding_scan(
+    spark: SparkSession, table_dir: str, candidates: list[str], matching
 ) -> list[str]:
-    """Resolve ``input_file_name()`` URIs back to manifest-relative
-    paths. Spark reports percent-encoded ``file:`` URIs (a space in
+    """The delete/update finding scan: which ``candidates`` hold at
+    least one row that ``matching(df)`` keeps. One pushed-down scan
+    (row-group-stat pruned) tags each row with its source file AT
+    SCAN TIME — after a join/exchange a row loses scan lineage and
+    ``input_file_name()`` returns '' — and one bounded driver collect
+    returns a row per FILE, never per data row.
+
+    Spark reports percent-encoded ``file:`` URIs (a space in
     table_dir arrives as ``%20``), so each hit is URL-decoded before
-    the path compare; an empty string (scan lineage lost) or a path
-    outside the candidate set is a protocol violation and raises
-    loudly rather than silently mis-planning an erasure."""
+    resolving back to a manifest-relative path; an empty string (scan
+    lineage lost) or a path outside the candidate set is a protocol
+    violation and raises loudly rather than silently mis-planning an
+    erasure. Returns the touched files sorted, as manifests list them."""
     from urllib.parse import unquote, urlsplit
 
+    from pyspark.sql import functions as F
+
+    if not candidates:
+        return []
+    cand = _read_file_subset(spark, table_dir, candidates).withColumn(
+        "_src_file", F.input_file_name()
+    )
+    hit_uris = {
+        r[0] for r in matching(cand).select("_src_file").distinct().collect()
+    }
     by_abs = {
         os.path.abspath(os.path.join(table_dir, rel)): rel
         for rel in candidates
@@ -1170,30 +1203,6 @@ def _scoped_candidates(df: DataFrame, column: str, manifest: dict, label: str):
     return set(_prune_manifest(manifest, column, row["lo"], row["hi"]))
 
 
-def _carry_metadata(
-    prev_manifest: dict, carried: list[str], stats: dict, blooms: dict
-) -> tuple[dict, dict]:
-    """Merge carried-by-reference files' skipping metadata from the
-    previous manifest under the freshly written files' entries."""
-    stats = {
-        **{
-            f: prev_manifest["stats"][f]
-            for f in carried
-            if f in prev_manifest.get("stats", {})
-        },
-        **stats,
-    }
-    blooms = {
-        **{
-            f: prev_manifest["blooms"][f]
-            for f in carried
-            if f in prev_manifest.get("blooms", {})
-        },
-        **blooms,
-    }
-    return stats, blooms
-
-
 def delete_snapshot(
     spark: SparkSession,
     table_dir: str,
@@ -1208,7 +1217,7 @@ def delete_snapshot(
 ) -> int:
     """Row-level DELETE, copy-on-write — the Delta/Iceberg COW delete
     algorithm: one pushed-down scan finds the files that actually
-    hold matching rows (``input_file_name()`` under the predicate),
+    hold matching rows (``_finding_scan`` under the predicate),
     ONLY those files are rewritten without the matches, and every
     other file is carried into the new manifest BY REFERENCE with its
     stats and blooms intact. At 100 TB a targeted erasure (the
@@ -1248,11 +1257,9 @@ def delete_snapshot(
         )
     if keys is not None and key is None:
         raise ValueError("keys= requires key= (the join column names)")
-    base = current_version(table_dir)
-    if base is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    base = _committed_version(table_dir)
     manifest = _read_manifest(table_dir, base)
-    candidates = list(manifest["files"])
+    candidates = manifest["files"]
 
     key_cols = (
         [key] if isinstance(key, str) else list(key) if key else []
@@ -1273,59 +1280,35 @@ def delete_snapshot(
                 f"scope_by {scope_by!r} must be one of the key columns "
                 f"{key_cols}"
             )
-        touched_set = _scoped_candidates(keys_d, scope_by, manifest, "keys")
-        candidates = (
-            [f for f in manifest["files"] if f in touched_set]
-            if touched_set is not None
-            else []
+        scoped = (
+            _scoped_candidates(keys_d, scope_by, manifest, "keys") or set()
         )
+        candidates = [f for f in candidates if f in scoped]
 
-    # Finding scan: which candidate files hold >=1 row to delete?
-    # Bounded driver collect — one row per FILE, never per data row.
-    touched: list[str] = []
-    if candidates:
-        cand_df = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*(os.path.join(table_dir, f) for f in candidates))
-            # captured AT SCAN TIME: after a join/exchange the row
-            # loses scan lineage and input_file_name() returns ''
-            .withColumn("_src_file", F.input_file_name())
+    if where is not None:
+        touched = _finding_scan(
+            spark, table_dir, candidates, lambda c: c.where(F.expr(where))
         )
-        if where is not None:
-            matching = cand_df.where(F.expr(where))
-        else:
-            # no broadcast hint: erasure lists are usually tiny and
-            # AQE broadcasts them at runtime, but a bulk purge list
-            # may not be — forcing broadcast would OOM the executors
-            matching = cand_df.join(keys_d, on=key_cols, how="left_semi")
-        hit_files = {
-            r[0] for r in matching.select("_src_file").distinct().collect()
-        }
-        touched = _scan_paths_to_rel(table_dir, candidates, hit_files)
-
-    carried = [f for f in manifest["files"] if f not in set(touched)]
-    files: list[str] = []
-    stats: dict = {}
-    blooms: dict = {}
+    else:
+        # no broadcast hint: erasure lists are usually tiny and AQE
+        # broadcasts them at runtime, but a bulk purge list may not be
+        # — forcing broadcast would OOM the executors
+        touched = _finding_scan(
+            spark, table_dir, candidates,
+            lambda c: c.join(keys_d, on=key_cols, how="left_semi"),
+        )
+    kept = None
     if touched:
-        sub = spark.read.option("mergeSchema", "true").parquet(
-            *(os.path.join(table_dir, f) for f in touched)
-        )
+        sub = _read_file_subset(spark, table_dir, touched)
         if where is not None:
             # DELETE removes rows where the predicate is TRUE; FALSE
             # and NULL both keep (coalesce supplies the NULL arm)
             kept = sub.where(F.coalesce(~F.expr(where), F.lit(True)))
         else:
             kept = sub.join(keys_d, on=key_cols, how="left_anti")
-        files = _write_data(table_dir, kept, base + 1)
-        stats = _file_stats(table_dir, files)
-        blooms = (
-            _file_blooms(table_dir, files, bloom_for) if bloom_for else {}
-        )
-    if carried:
-        stats, blooms = _carry_metadata(manifest, carried, stats, blooms)
-    return _commit(
-        table_dir, files + carried, op, expect_version, base, stats, blooms
+    return _cow_commit(
+        table_dir, kept, base, op, expect_version, bloom_for, manifest,
+        touched,
     )
 
 
@@ -1342,7 +1325,7 @@ def update_snapshot(
     """Row-level UPDATE, copy-on-write — the remaining DML verb next
     to write/append/merge_snapshot/delete_snapshot, with the same
     Delta/Iceberg COW cost model: one pushed-down finding scan
-    (``input_file_name()`` under the predicate, row-group-stat
+    (``_finding_scan`` under the predicate, row-group-stat
     pruned) identifies the files holding rows where ``where`` is
     TRUE; ONLY those files rewrite with the ``set`` assignments
     applied to the matching rows, every other file carries into the
@@ -1372,12 +1355,9 @@ def update_snapshot(
 
     if not set:
         raise ValueError("set= must assign at least one column")
-    base = current_version(table_dir)
-    if base is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    base = _committed_version(table_dir)
     manifest = _read_manifest(table_dir, base)
-    candidates = list(manifest["files"])
-    if not candidates:
+    if not manifest["files"]:
         # No files ⇒ no schema to validate ``set`` targets against: a
         # typo'd target would otherwise pass silently and commit a
         # no-op version (r7 ADVICE). An empty table has nothing to
@@ -1404,40 +1384,27 @@ def update_snapshot(
             "would cost a full-table scan per update — re-key through "
             "merge_snapshot keyed on the unique column instead"
         )
-    touched: list[str] = []
-    cand_schema = None
-    if candidates:
-        cand_df = (
-            spark.read.option("mergeSchema", "true")
-            .parquet(*(os.path.join(table_dir, f) for f in candidates))
-            .withColumn("_src_file", F.input_file_name())
+    table_types: dict = {}
+
+    def matching(cand: DataFrame) -> DataFrame:
+        # SET targets are checked against the table's merged schema
+        # before the scan runs
+        table_types.update(
+            (f.name, f.dataType) for f in cand.drop("_src_file").schema
         )
-        cand_schema = cand_df.drop("_src_file").schema
-        schema_cols = list(cand_schema.names)
-        unknown = [k for k in set if k not in schema_cols]
+        unknown = [k for k in set if k not in table_types]
         if unknown:
             raise ValueError(
                 f"set targets {sorted(unknown)} not in table columns "
-                f"{schema_cols} — UPDATE cannot add columns (use a "
+                f"{list(table_types)} — UPDATE cannot add columns (use a "
                 "schema-evolving merge_snapshot)"
             )
-        hit_files = {
-            r[0]
-            for r in cand_df.where(F.expr(where))
-            .select("_src_file")
-            .distinct()
-            .collect()
-        }
-        touched = _scan_paths_to_rel(table_dir, candidates, hit_files)
+        return cand.where(F.expr(where))
 
-    carried = [f for f in manifest["files"] if f not in frozenset(touched)]
-    files: list[str] = []
-    stats: dict = {}
-    blooms: dict = {}
+    touched = _finding_scan(spark, table_dir, manifest["files"], matching)
+    updated = None
     if touched:
-        sub = spark.read.option("mergeSchema", "true").parquet(
-            *(os.path.join(table_dir, f) for f in touched)
-        )
+        sub = _read_file_subset(spark, table_dir, touched)
         # Schema evolution: a set target can be absent from every
         # TOUCHED file even though the table (mergeSchema over all
         # candidates) has it — e.g. the matching rows live in a file
@@ -1445,7 +1412,6 @@ def update_snapshot(
         # columns as typed NULLs first, so the assignment applies
         # instead of silently dropping (the rewritten file then
         # carries the column, exactly as a full-table rewrite would).
-        table_types = {f.name: f.dataType for f in cand_schema.fields}
         for c in set:
             if c not in sub.columns:
                 sub = sub.withColumn(c, F.lit(None).cast(table_types[c]))
@@ -1460,15 +1426,9 @@ def update_snapshot(
             )
         )
         _enforce_constraints(table_dir, updated, "update")
-        files = _write_data(table_dir, updated, base + 1)
-        stats = _file_stats(table_dir, files)
-        blooms = (
-            _file_blooms(table_dir, files, bloom_for) if bloom_for else {}
-        )
-    if carried:
-        stats, blooms = _carry_metadata(manifest, carried, stats, blooms)
-    return _commit(
-        table_dir, files + carried, op, expect_version, base, stats, blooms
+    return _cow_commit(
+        table_dir, updated, base, op, expect_version, bloom_for, manifest,
+        touched,
     )
 
 
@@ -1508,11 +1468,7 @@ def drop_columns(
     merge of data still carrying the old column re-ADDS it by
     schema evolution — writers must be migrated with the table
     (documented, pinned)."""
-    from pyspark.sql import functions as F
-
-    base = current_version(table_dir)
-    if base is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    base = _committed_version(table_dir)
     if not cols:
         raise ValueError("cols must name at least one column to drop")
     cur = read_snapshot(spark, table_dir)
@@ -1529,7 +1485,31 @@ def drop_columns(
         raise ValueError(
             "cannot drop every column — delete the table instead"
         )
-    out_df = cur.select(*remaining)
+    return _schema_rewrite(
+        spark, table_dir, base, cur.select(*remaining), dropped,
+        "dropped",
+        op or ("drop-columns:" + ",".join(sorted(dropped))),
+        expect_version, bloom_for,
+    )
+
+
+def _schema_rewrite(
+    spark: SparkSession,
+    table_dir: str,
+    base: int,
+    out_df: DataFrame,
+    changed: set[str],
+    word: str,
+    op: str,
+    expect_version: int | None,
+    bloom_for: list[str] | None,
+) -> int:
+    """The shared body of drop_columns and rename_column: refuse while
+    any CHECK or UNIQUE constraint names a ``changed`` (lower-cased)
+    column (``word`` says how it changed), then rewrite every live
+    file as ``out_df`` in one commit."""
+    from pyspark.sql import functions as F
+
     # probe constraint resolution against a PLAN-BOUNDARY frame of
     # the post-DDL schema: probing out_df directly would let Spark's
     # missing-reference resolution reach the dropped column through
@@ -1540,34 +1520,23 @@ def drop_columns(
             probe.where(F.expr(expr) == False)  # noqa: E712
         except Exception:
             raise ValueError(
-                f"constraint {name!r} ({expr}) references a dropped "
+                f"constraint {name!r} ({expr}) references a {word} "
                 "column — drop_constraint or redefine it first"
             ) from None
     # UNIQUE constraints are not boolean expressions, so the probe
     # above never sees them — refuse explicitly, or the record would
-    # survive the drop with since_version intact while enforcement
+    # survive the DDL with since_version intact while enforcement
     # silently skips (col gone), and re-adding a column by that name
     # would revive a stale 1:≤1 proof for the /sql join rewrite
     # (r10 ADVICE medium #1).
     for name, rec in unique_constraint_records(table_dir).items():
-        if rec["col"].lower() in dropped:
+        if rec["col"].lower() in changed:
             raise ValueError(
-                f"UNIQUE constraint {name!r} is declared on dropped "
+                f"UNIQUE constraint {name!r} is declared on {word} "
                 f"column {rec['col']!r} — drop_constraint or redefine "
                 "it first"
             )
-    files = _write_data(table_dir, out_df, base + 1)
-    stats = _file_stats(table_dir, files)
-    blooms = _file_blooms(table_dir, files, bloom_for) if bloom_for else {}
-    return _commit(
-        table_dir,
-        files,
-        op or ("drop-columns:" + ",".join(sorted(dropped))),
-        expect_version,
-        base,
-        stats,
-        blooms,
-    )
+    return _cow_commit(table_dir, out_df, base, op, expect_version, bloom_for)
 
 
 def rename_column(
@@ -1589,11 +1558,7 @@ def rename_column(
     as an update (rename is NOT diff-transparent — a CDC consumer
     must migrate with the table; pinned in tests). Constraints
     referencing the old name refuse the rename, like drop."""
-    from pyspark.sql import functions as F
-
-    base = current_version(table_dir)
-    if base is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    base = _committed_version(table_dir)
     cur = read_snapshot(spark, table_dir)
     lower = {c.lower(): c for c in cur.columns}
     if old.lower() not in lower:
@@ -1606,38 +1571,12 @@ def rename_column(
         )
     if not new or not new.replace("_", "").isalnum() or new[0].isdigit():
         raise ValueError(f"new column name {new!r} is not an identifier")
-    out_df = cur.withColumnRenamed(lower[old.lower()], new)
-    # plan-boundary probe — see drop_columns for why not out_df itself
-    probe = spark.createDataFrame([], out_df.schema)
-    for name, expr in list_constraints(table_dir).items():
-        try:
-            probe.where(F.expr(expr) == False)  # noqa: E712
-        except Exception:
-            raise ValueError(
-                f"constraint {name!r} ({expr}) references the renamed "
-                "column — drop_constraint or redefine it first"
-            ) from None
-    # same loud-refusal as drop_columns: a UNIQUE record naming the
-    # old column would survive the rename unenforced, then revive a
-    # stale proof if the name ever comes back (r10 ADVICE medium #1)
-    for name, rec in unique_constraint_records(table_dir).items():
-        if rec["col"].lower() == old.lower():
-            raise ValueError(
-                f"UNIQUE constraint {name!r} is declared on renamed "
-                f"column {rec['col']!r} — drop_constraint or redefine "
-                "it first"
-            )
-    files = _write_data(table_dir, out_df, base + 1)
-    stats = _file_stats(table_dir, files)
-    blooms = _file_blooms(table_dir, files, bloom_for) if bloom_for else {}
-    return _commit(
-        table_dir,
-        files,
+    return _schema_rewrite(
+        spark, table_dir, base,
+        cur.withColumnRenamed(lower[old.lower()], new), {old.lower()},
+        "renamed",
         op or f"rename-column:{lower[old.lower()]}->{new}",
-        expect_version,
-        base,
-        stats,
-        blooms,
+        expect_version, bloom_for,
     )
 
 
@@ -1812,7 +1751,6 @@ def compact_txns(
     commit either appends before the snapshot read or after the
     swap — never into the torn middle. Idempotent: a second pass
     with the same arguments is a byte-level no-op."""
-    txns = _txns_path(table_dir)
     with _table_lock(table_dir):
         records, cut = _txns_records_and_cut(table_dir)
         if records is None:
@@ -1835,16 +1773,11 @@ def compact_txns(
             for i, (v, op) in enumerate(prefix)
             if last_pos[op] == i
         ]
-        tmp = txns + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            if folded:
-                f.write(
-                    json.dumps({"compacted": True, "records": folded})
-                    + "\n"
-                )
-            for v, op in tail:
-                f.write(json.dumps({"version": v, "op": op}) + "\n")
-        os.replace(tmp, txns)
+        lines = [{"compacted": True, "records": folded}] if folded else []
+        lines += [{"version": v, "op": op} for v, op in tail]
+        _atomic_write(
+            _txns_path(table_dir), "".join(json.dumps(r) + "\n" for r in lines)
+        )
         return {
             "before": before,
             "after": len(folded) + len(tail),
@@ -1878,53 +1811,34 @@ def compact(
     arrival order, so their per-file stats overlap everywhere and
     prune nothing — one clustered compaction afterwards makes the
     same manifest stats disjoint and range reads selective again."""
-    base = current_version(table_dir)
-    if only_below is not None:
-        if base is None:
-            raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    manifest, touched = None, []
+    if only_below is None:
+        base = current_version(table_dir)
+        df = read_snapshot(spark, table_dir)
+    else:
+        base = _committed_version(table_dir)
         manifest = _read_manifest(table_dir, base)
         touched = [
             rel
             for rel in manifest["files"]
             if os.path.getsize(os.path.join(table_dir, rel)) < only_below
         ]
-        carried = [f for f in manifest["files"] if f not in set(touched)]
-        if not touched:
-            # nothing below the threshold: still commit (stamped), so
-            # an idempotent maintenance job observes its tick
-            return _commit(
-                table_dir, carried, "compact", expect_version, base,
-                manifest.get("stats", {}), manifest.get("blooms", {}),
-            )
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *(os.path.join(table_dir, f) for f in touched)
+        # nothing below the threshold writes nothing but still commits
+        # (stamped), so an idempotent maintenance job observes its tick
+        df = (
+            _read_file_subset(spark, table_dir, touched)
+            if touched
+            else None
         )
+    if df is not None:
         df = (
             _clustered(df, cluster_by, target_files)
             if cluster_by
             else df.coalesce(target_files)
         )
-        files = _write_data(table_dir, df, base + 1)
-        stats = _file_stats(table_dir, files)
-        blooms = (
-            _file_blooms(table_dir, files, bloom_for) if bloom_for else {}
-        )
-        if carried:
-            stats, blooms = _carry_metadata(manifest, carried, stats, blooms)
-        return _commit(
-            table_dir, files + carried, "compact", expect_version, base,
-            stats, blooms,
-        )
-    df = read_snapshot(spark, table_dir)
-    if cluster_by:
-        df = _clustered(df, cluster_by, target_files)
-    else:
-        df = df.coalesce(target_files)
-    files = _write_data(table_dir, df, (base if base is not None else -1) + 1)
-    return _commit(
-        table_dir, files, "compact", expect_version, base,
-        _file_stats(table_dir, files),
-        _file_blooms(table_dir, files, bloom_for) if bloom_for else {},
+    return _cow_commit(
+        table_dir, df, base, "compact", expect_version, bloom_for, manifest,
+        touched,
     )
 
 
@@ -1957,9 +1871,7 @@ def compaction_plan(
     and the estimated merge shrinks the count (the trivial gate a
     scheduler needs; callers wanting smarter policies have every
     input in the dict)."""
-    v = version if version is not None else current_version(table_dir)
-    if v is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    v = version if version is not None else _committed_version(table_dir)
     manifest = _read_manifest(table_dir, v)
     sizes: dict[str, int] = {}
     missing: list[str] = []
@@ -2013,9 +1925,15 @@ def publish_snapshot(table_dir: str, version: int | None = None) -> int:
     read with ``read_snapshot(published=True)``. The publish itself
     is one atomic pointer swap, and like a tag the published version
     is retention-exempt (vacuum never drops what consumers see)."""
-    cur = current_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
+    version = _retained_version(table_dir, version)
+    with _table_lock(table_dir):
+        _atomic_write(_published_path(table_dir), str(version))
+    return version
+
+
+def _retained_version(table_dir: str, version: int | None) -> int:
+    """``version`` (default: current) checked to be still retained."""
+    cur = _committed_version(table_dir)
     version = cur if version is None else version
     try:
         _read_manifest(table_dir, version)
@@ -2023,11 +1941,6 @@ def publish_snapshot(table_dir: str, version: int | None = None) -> int:
         raise ValueError(
             f"v{version} is not a retained version of {table_dir}"
         )
-    with _table_lock(table_dir):
-        tmp = _published_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, _published_path(table_dir))
     return version
 
 
@@ -2137,22 +2050,26 @@ def add_constraint(
                     f"existing rows violate {name!r} ({expr}): "
                     f"e.g. {[r.asDict() for r in bad]}"
                 )
-        raw = {
-            n: rec if rec["since_version"] is not None else rec["expr"]
-            for n, rec in constraint_records(table_dir).items()
-        }
-        raw[name] = {
+        recs = constraint_records(table_dir)
+        recs[name] = {
             "expr": expr,
             # -1 when the table is empty: every version ever
             # committed will postdate the guarantee (see
             # constraint_records for the induction this anchors)
             "since_version": cur if cur is not None else -1,
         }
-        os.makedirs(table_dir, exist_ok=True)
-        tmp = _constraints_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(raw, f)
-        os.replace(tmp, _constraints_path(table_dir))
+        _write_constraints(table_dir, recs)
+
+
+def _write_constraints(table_dir: str, recs: dict[str, dict]) -> None:
+    """Store constraint records atomically; legacy records without a
+    ``since_version`` stay bare expression strings."""
+    raw = {
+        n: rec if rec["since_version"] is not None else rec["expr"]
+        for n, rec in recs.items()
+    }
+    os.makedirs(table_dir, exist_ok=True)
+    _atomic_write(_constraints_path(table_dir), json.dumps(raw))
 
 
 def add_unique_constraint(
@@ -2224,21 +2141,14 @@ def add_unique_constraint(
                     f"existing rows violate UNIQUE {name!r} ({col}): "
                     f"e.g. {[r.asDict() for r in dup]}"
                 )
-        raw = {
-            n: rec if rec["since_version"] is not None else rec["expr"]
-            for n, rec in constraint_records(table_dir).items()
-        }
-        raw[name] = {
+        recs = constraint_records(table_dir)
+        recs[name] = {
             "expr": f"unique({col})",
             "kind": "unique",
             "col": col,
             "since_version": cur if cur is not None else -1,
         }
-        os.makedirs(table_dir, exist_ok=True)
-        tmp = _constraints_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(raw, f)
-        os.replace(tmp, _constraints_path(table_dir))
+        _write_constraints(table_dir, recs)
 
 
 def _enforce_unique(
@@ -2339,16 +2249,7 @@ def drop_constraint(table_dir: str, name: str) -> None:
         if name not in recs:
             raise KeyError(name)
         del recs[name]
-        # preserve the since_version stamps of the survivors (legacy
-        # string records stay strings)
-        raw = {
-            n: rec if rec["since_version"] is not None else rec["expr"]
-            for n, rec in recs.items()
-        }
-        tmp = _constraints_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(raw, f)
-        os.replace(tmp, _constraints_path(table_dir))
+        _write_constraints(table_dir, recs)
 
 
 def _enforce_constraints(table_dir: str, df: DataFrame, what: str) -> None:
@@ -2400,16 +2301,7 @@ def tag_snapshot(
     conditional PUT the pointer uses."""
     if not tag or "/" in tag or tag.strip() != tag:
         raise ValueError(f"invalid tag name {tag!r}")
-    cur = current_version(table_dir)
-    if cur is None:
-        raise FileNotFoundError(f"no committed snapshot in {table_dir}")
-    version = cur if version is None else version
-    try:
-        _read_manifest(table_dir, version)
-    except FileNotFoundError:
-        raise ValueError(
-            f"v{version} is not a retained version of {table_dir}"
-        )
+    version = _retained_version(table_dir, version)
     with _table_lock(table_dir):
         tags = list_tags(table_dir)
         if tag in tags and tags[tag] != version and not force:
@@ -2418,10 +2310,7 @@ def tag_snapshot(
                 "force=True to move it"
             )
         tags[tag] = version
-        tmp = _tags_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(tags, f)
-        os.replace(tmp, _tags_path(table_dir))
+        _atomic_write(_tags_path(table_dir), json.dumps(tags))
     return version
 
 
@@ -2433,10 +2322,7 @@ def delete_tag(table_dir: str, tag: str) -> None:
         if tag not in tags:
             raise KeyError(tag)
         del tags[tag]
-        tmp = _tags_path(table_dir) + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump(tags, f)
-        os.replace(tmp, _tags_path(table_dir))
+        _atomic_write(_tags_path(table_dir), json.dumps(tags))
 
 
 def vacuum_plan(table_dir: str, keep_versions: int = 2) -> dict:
@@ -2525,11 +2411,10 @@ def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
                 continue
             full = dict(_read_manifest(table_dir, v))
             full["chain"] = 0
-            mpath = os.path.join(_manifest_dir(table_dir), f"v{v}.json")
-            tmp = mpath + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(full, f)
-            os.replace(tmp, mpath)
+            _atomic_write(
+                os.path.join(_manifest_dir(table_dir), f"v{v}.json"),
+                json.dumps(full),
+            )
     removed = []
     for rel in plan["drop_dirs"]:
         shutil.rmtree(os.path.join(table_dir, rel))
@@ -2547,16 +2432,18 @@ def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
 
 
 def _read_file_subset(
-    spark: SparkSession, table_dir: str, files: list[str], all_files: list[str]
+    spark: SparkSession,
+    table_dir: str,
+    files: list[str],
+    all_files: list[str] = (),
 ) -> DataFrame:
     """Read an explicit manifest file subset (mergeSchema). An empty
     subset still plans over ``all_files`` under ``1=0`` so the
     version's merged schema survives with zero row groups read."""
-    read = spark.read.option("mergeSchema", "true")
-    if not files:
-        df = read.parquet(*(os.path.join(table_dir, f) for f in all_files))
-        return df.where("1 = 0")
-    return read.parquet(*(os.path.join(table_dir, f) for f in files))
+    df = spark.read.option("mergeSchema", "true").parquet(
+        *(os.path.join(table_dir, f) for f in files or all_files)
+    )
+    return df if files else df.where("1 = 0")
 
 
 def _align_columns(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -300,6 +300,15 @@ def test_kind_mismatch_and_version_space_guards(spark, tmp_path):
         ivm.maintain_aux_rollup_from_rollup(
             spark, other, weekly, WEEK, kind="minmax"
         )
+    # an HLL over a type hll_sketch_agg rejects: refused before the
+    # first build runs, nothing committed
+    dsrc, hll = str(tmp_path / "dsrc"), str(tmp_path / "hll_dbl")
+    SN.write_snapshot(
+        dsrc, spark.createDataFrame([(1, 0.5)], "t INT, x DOUBLE")
+    )
+    with pytest.raises(ValueError, match="INT, BIGINT, STRING or BINARY"):
+        ivm.maintain_aux_rollup(spark, dsrc, hll, ["t"], "x", kind="hll")
+    assert SN.current_version(hll) is None
 
 
 def test_streaming_chain_ticks_aux_children(spark, tmp_path):

@@ -1718,3 +1718,103 @@ def test_scoped_merge_existing_check_covers_inscope_unmatched_rows(
     )
     got = {r.k: r.u for r in S.read_snapshot(spark, tdir).collect()}
     assert got == {1: "a", 2: "b"}
+
+
+def _kvx(ids):
+    return ids.selectExpr(
+        "id AS k", "CAST(id AS STRING) AS v", "CAST(id AS DOUBLE) / 2 AS x"
+    )
+
+
+@pytest.fixture(scope="module")
+def _bloomed_base(spark, tmp_path_factory):
+    """A 400-row table clustered on k into 4 bloomed files, written
+    once; each case below copies it."""
+    tdir = str(tmp_path_factory.mktemp("cow") / "base")
+    S.write_snapshot(
+        tdir,
+        _kvx(spark.range(0, 400)),
+        cluster_by=["k"], n_files=4, bloom_for=["k"],
+    )
+    return tdir
+
+
+def _small_files_then_compact(spark, tdir):
+    for lo in (1000, 1002):
+        S.write_snapshot(
+            tdir,
+            _kvx(spark.range(lo, lo + 2)).coalesce(1),
+            mode="append", bloom_for=["k"],
+        )
+    m = S._read_manifest(tdir, S.current_version(tdir))
+    floor = min(
+        os.path.getsize(os.path.join(tdir, f))
+        for f in m["files"]
+        if "/v0-" in f
+    )
+    return lambda: S.compact(spark, tdir, only_below=floor, bloom_for=["k"])
+
+
+_COW_VERBS = {
+    "merge_scoped": lambda spark, t: lambda: S.merge_snapshot(
+        spark, t,
+        spark.createDataFrame(
+            [(3, "m", 0.0), (150, "m", 0.0), (1000, "m", 0.0)],
+            "k BIGINT, v STRING, x DOUBLE",
+        ),
+        key="k", scope_by="k", bloom_for=["k"],
+    ),
+    "delete_where": lambda spark, t: lambda: S.delete_snapshot(
+        spark, t, where="k < 10", bloom_for=["k"]
+    ),
+    "delete_keys_scoped": lambda spark, t: lambda: S.delete_snapshot(
+        spark, t, keys=spark.createDataFrame([(5,), (205,)], "k BIGINT"),
+        key="k", scope_by="k", bloom_for=["k"],
+    ),
+    "update": lambda spark, t: lambda: S.update_snapshot(
+        spark, t, where="k BETWEEN 100 AND 110", set={"v": "'u'"},
+        bloom_for=["k"],
+    ),
+    "compact_only_below": _small_files_then_compact,
+    "drop_column": lambda spark, t: lambda: S.drop_columns(
+        spark, t, ["x"], bloom_for=["k"]
+    ),
+    "rename_column": lambda spark, t: lambda: S.rename_column(
+        spark, t, "x", "y", bloom_for=["k"]
+    ),
+    "append": lambda spark, t: lambda: S.write_snapshot(
+        t,
+        _kvx(spark.range(500, 501)), mode="append", bloom_for=["k"],
+    ),
+}
+
+
+@pytest.mark.parametrize("verb", sorted(_COW_VERBS))
+def test_cow_verbs_index_new_files_and_carry_the_rest(
+    spark, tmp_path, _bloomed_base, verb
+):
+    """Every copy-on-write verb runs the one shared commit step: each
+    newly written file gets rowcounts, blooms and (when it holds rows)
+    stats; each carried file keeps the base manifest's entries
+    unchanged; and the metadata row count equals a scan's."""
+    import shutil
+
+    tdir = str(tmp_path / "t")
+    shutil.copytree(_bloomed_base, tdir)
+    run = _COW_VERBS[verb](spark, tdir)
+    base = S._read_manifest(tdir, S.current_version(tdir))
+    new = S._read_manifest(tdir, run())
+    written = set(new["files"]) - set(base["files"])
+    carried = set(new["files"]) & set(base["files"])
+    assert written
+    for f in written:
+        assert f in new["rowcounts"] and f in new["blooms"], f
+        assert "k" in new["blooms"][f]
+        if new["rowcounts"][f]:
+            assert f in new["stats"], f
+    for f in carried:
+        for name in ("stats", "blooms", "rowcounts"):
+            assert new[name].get(f) == base[name].get(f), (name, f)
+    if verb not in ("drop_column", "rename_column"):
+        assert carried  # the verb rewrote only part of the table
+    assert S.table_rowcount(tdir) == S.read_snapshot(spark, tdir).count()
