@@ -6,7 +6,8 @@ results are immutable per-query objects, app/tasks.py:16-21).
 
 Why this module is the scale story: at 100 TB the source table
 changes by a few GB per commit; recomputing a rollup scans 100 TB,
-while applying the CDC delta costs O(changed rows). That asymmetry
+while applying the CDC delta costs O(rows of the files the commits
+rewrote). That asymmetry
 is what Materialize/Delta Live Tables sell; here it falls out of
 parts the repo already has — ``snapshot_diff`` (row-level CDC from
 two immutable file lists), ``merge_snapshot`` (keyed copy-on-write
@@ -364,24 +365,39 @@ def _reclaim_for_direct(rollup_dir: str) -> None:
     os.remove(os.path.join(rollup_dir, "_lineage"))
 
 
+def _replayed(applied: list[int], src_v: int, rebuild: bool) -> bool:
+    """The noop rule: ``src_v`` is the last ``applied`` stamp (log
+    order) and no rebuild was asked for."""
+    return not rebuild and applied[-1:] == [src_v]
+
+
 def _child_prelude(
     spark: SparkSession,
     parent_dir: str,
     child_dir: str,
     key_exprs: dict[str, str],
     kind: str,
+    rebuild: bool,
 ):
     """The hierarchical maintainers' shared checks. Every refusal
     (no parent version, empty ``key_exprs``, a parent that is not a
     maintained ``kind`` rollup) comes BEFORE ``_bind_child_lineage``,
-    so a refused tick leaves the child dir unbound. Returns
-    ``(src_v, parent, key_aliases)``: ``parent`` is the parent pinned
-    at src_v with tombstones filtered (read_rollup's rule, applied to
-    the relation the column check already read), for the full build
-    and the aux recompute."""
+    so a refused tick leaves the child dir unbound. Returns None on a
+    replay — the child already bound to this parent with ``src_v``
+    stamped, which a bound child only gets after the checks passed —
+    before the parent is read, so a replayed child tick runs no Spark
+    job. Otherwise returns ``(src_v, parent, key_aliases)``:
+    ``parent`` is the parent pinned at src_v with tombstones filtered
+    (read_rollup's rule, applied to the relation the column check
+    already read), for the full build and the aux recompute."""
     src_v = _source_version(parent_dir)
     if not key_exprs:
         raise ValueError("key_exprs must map at least one child column")
+    parent_abs = os.path.abspath(parent_dir)
+    if rollup_lineage(child_dir) == parent_abs and _replayed(
+        _applied_versions(child_dir), src_v, rebuild
+    ):
+        return None
     pinned = SN.read_snapshot(spark, parent_dir, version=src_v)
     missing = {"n_rows", *_MEASURE_COLS[kind]} - set(pinned.columns)
     if missing:
@@ -389,7 +405,7 @@ def _child_prelude(
             f"parent {parent_dir} lacks column(s) {sorted(missing)} — "
             f"not a maintained {kind!r} rollup"
         )
-    _bind_child_lineage(child_dir, os.path.abspath(parent_dir))
+    _bind_child_lineage(child_dir, parent_abs)
     key_aliases = [F.expr(e).alias(c) for c, e in key_exprs.items()]
     return src_v, pinned.where(F.col("n_rows") > 0), key_aliases
 
@@ -404,6 +420,7 @@ def _tick(
     full_fn,
     delta_step,
     null_hint: str,
+    cancel: bool,
 ) -> dict:
     """The one maintenance protocol all four maintainers run: stamp,
     noop on replay, OCC fence, first full build, rebuild with
@@ -417,7 +434,13 @@ def _tick(
       version and the target's current rows. It yields ``(groups,
       rows)``: the per-group delta relation the NULL-key check runs
       on, and the rows to merge. The merge commits inside the
-      context, so whatever the step persists lives until then.
+      context, so whatever the step persists lives until then;
+    - ``cancel`` is passed to that ``snapshot_diff``: the additive
+      steps fold the range's uncancelled file swap (``cancel=False``:
+      count and sum are linear, so a row carried unchanged through a
+      rewritten file adds 0 to its group), the aux steps need the
+      cancelled diff (their ``has_del`` recompute must not fire on
+      unchanged rows).
 
     Source history too old to diff (vacuumed: ``FileNotFoundError``)
     falls back to the rebuild, as does ``rebuild=True``."""
@@ -427,7 +450,7 @@ def _tick(
     # first moves the target version, and this tick's merge then
     # raises SnapshotConflict instead of double-applying its delta.
     target_v = SN.current_version(target_dir)
-    if not rebuild and applied and applied[-1] == src_v:
+    if _replayed(applied, src_v, rebuild):
         return {"applied": None, "mode": "noop"}
 
     def commit(rows: DataFrame, mode: str) -> dict:
@@ -440,7 +463,9 @@ def _tick(
     diff = None
     if applied and not rebuild:
         try:
-            diff = SN.snapshot_diff(spark, source_dir, applied[-1], src_v)
+            diff = SN.snapshot_diff(
+                spark, source_dir, applied[-1], src_v, cancel=cancel
+            )
         except FileNotFoundError:
             pass  # the delta's base manifest is gone: rebuild below
     if diff is not None:
@@ -464,8 +489,12 @@ def _tick(
 
 def _additive_step(key_cols: list[str], project, weight, measure):
     """The COUNT/SUM delta step: per group, the signed sums of
-    ``weight`` (row count) and ``measure`` over the projected diff,
-    added onto the stored (n_rows, sum_val)."""
+    ``weight`` (row count) and ``measure`` over the projected file
+    swap (``_tick`` reads it with ``cancel=False``), added onto the
+    stored (n_rows, sum_val). Groups whose rows the swap only carried
+    sum to (0, 0) and are left out of the merge: it would rewrite
+    their stored values unchanged, or add a zero row for a group the
+    target does not hold."""
 
     @contextlib.contextmanager
     def step(diff: DataFrame, current: DataFrame):
@@ -475,7 +504,10 @@ def _additive_step(key_cols: list[str], project, weight, measure):
             # NULL here would overwrite the group's standing sum
             F.coalesce(F.sum(_signed(measure)), F.lit(0)).alias("d_sum"),
         )
-        yield per_group, per_group.join(
+        changed = per_group.where(
+            (F.col("d_rows") != 0) | (F.col("d_sum") != 0)
+        )
+        yield per_group, changed.join(
             current, on=key_cols, how="left"
         ).select(
             *key_cols,
@@ -502,10 +534,16 @@ def maintain_rollup(
     """Bring the rollup up to the source's CURRENT version.
 
     First call: one full aggregate of the source (unavoidable — the
-    initial state). Every later call: ``snapshot_diff`` between the
-    last applied source version and the current one, aggregated to
-    per-group (±count, ±sum) deltas — cost ∝ changed rows — merged
-    into the rollup keyed on the group columns. The commit is
+    initial state). Every later call folds the FILE SWAP between the
+    last applied source version and the current one
+    (``snapshot_diff(cancel=False)``): the rows of the files the range
+    removed count −1 and those of the files it added +1, each file
+    read once and no row shuffled, aggregated to per-group (±count,
+    ±sum) deltas — cost ∝ rows of the swapped files, never the table —
+    merged into the rollup keyed on the group columns. COUNT and SUM
+    are linear, so a row a rewritten file carried unchanged adds 0 to
+    its group, after a MERGE, delete, compact or source rollback
+    alike; no ``exceptAll`` cancellation is needed. The commit is
     stamped ``ivm:src_v{V}``, so re-running after a crash (or a
     duplicate scheduler tick) is a no-op. "Last applied" is tracked
     in ``_txns`` LOG order, so a source ``rollback`` (which makes the
@@ -604,6 +642,7 @@ def maintain_rollup(
             group_cols, _keyed, F.lit(1), F.col(sum_col).cast("bigint")
         ),
         "filter or coalesce upstream",
+        cancel=False,
     )
     # stamp only AFTER the tick's commit: a failed rebuild must leave
     # the marker describing the encoding the rows actually have (r11
@@ -633,12 +672,13 @@ def maintain_rollup_from_rollup(
     ``key_exprs`` maps each child group column to a SQL expression
     over the PARENT's columns (e.g. ``{"week": "day DIV 7",
     "event_type": "event_type"}``). Child measures are the
-    sign-weighted sums of the parent's (n_rows, sum_val) partials —
-    COUNT/SUM are what make this exact (the same self-maintainable
-    set as maintain_rollup; a parent row UPDATE arrives as
-    delete(old)+insert(new) in the full-row diff, so the weighted
-    sum applies the net change, including a group tombstoning to
-    zero).
+    sign-weighted sums of the parent's (n_rows, sum_val) partials
+    over the parent's file swap, exactly as ``maintain_rollup`` folds
+    the base's — COUNT/SUM are what make this exact (a rewritten
+    parent file arrives as delete(old rows)+insert(new rows), so the
+    weighted sum applies the net change, including a group
+    tombstoning to zero, and unchanged rows cancel in the sum). A
+    replayed tick returns its noop before reading the parent.
 
     Same protocol as maintain_rollup: stamped ``ivm:src_v{V}`` with
     the PARENT version (replay = no-op; rollback-safe via log
@@ -660,9 +700,12 @@ def maintain_rollup_from_rollup(
     the child is fresh w.r.t. the base only after the parent's own
     tick for the base commit.
     """
-    src_v, parent, key_aliases = _child_prelude(
-        spark, parent_dir, child_dir, key_exprs, "sum"
+    prelude = _child_prelude(
+        spark, parent_dir, child_dir, key_exprs, "sum", rebuild
     )
+    if prelude is None:
+        return {"applied": None, "mode": "noop"}
+    src_v, parent, key_aliases = prelude
     child_cols = list(key_exprs)
 
     def full_fn():
@@ -684,6 +727,7 @@ def maintain_rollup_from_rollup(
             F.col("sum_val"),
         ),
         "filter or coalesce the parent keys in key_exprs",
+        cancel=False,
     )
 
 
@@ -1155,6 +1199,7 @@ def maintain_aux_rollup(
             state,
         ),
         "filter or coalesce NULL group keys before rolling up",
+        cancel=True,
     )
 
 
@@ -1195,11 +1240,14 @@ def maintain_aux_rollup_from_rollup(
     group column to a SQL expression over the PARENT's columns."""
     if kind not in AUX_KINDS:
         raise ValueError(f"kind must be one of {AUX_KINDS}, got {kind!r}")
-    src_v, parent, key_aliases = _child_prelude(
-        spark, parent_dir, child_dir, key_exprs, kind
+    prelude = _child_prelude(
+        spark, parent_dir, child_dir, key_exprs, kind, rebuild
     )
     if kind == "quantile":
         _q_format_guard(child_dir, rebuild)
+    if prelude is None:
+        return {"applied": None, "mode": "noop"}
+    src_v, parent, key_aliases = prelude
     child_cols = list(key_exprs)
     partial_cols = ["n_rows", *_MEASURE_COLS[kind]]
 
@@ -1223,6 +1271,7 @@ def maintain_aux_rollup_from_rollup(
             state,
         ),
         "filter or coalesce the parent keys in key_exprs",
+        cancel=True,
     )
 
 

@@ -326,6 +326,7 @@ def _commit(
     base_seen: int | None,
     stats: dict | None = None,
     blooms: dict | None = None,
+    rowcounts: dict[str, int] | None = None,
 ) -> int:
     """Write manifest v{N} then atomically swap the pointer.
 
@@ -339,18 +340,20 @@ def _commit(
     """
     # Footer reads for per-file rowcounts happen OUTSIDE the lock
     # (like _file_stats/_file_blooms, which callers compute before
-    # committing): only files not already counted by the pre-lock
-    # pointer's manifest are read; the locked section re-checks the
-    # authoritative base manifest and only falls back to these.
+    # committing): ``rowcounts`` (the fresh files' counts _file_stats
+    # already read) are taken as given, and only files neither given
+    # nor counted by the pre-lock pointer's manifest are read — the
+    # rollback path; the locked section re-checks the authoritative
+    # base manifest and only falls back to these.
     pre = current_version(table_dir)
     pre_counts = (
         _read_manifest(table_dir, pre).get("rowcounts", {})
         if pre is not None
         else {}
     )
-    fresh_counts: dict[str, int] = {}
+    fresh_counts = dict(rowcounts or {})
     for rel in files:
-        if rel in pre_counts:
+        if rel in pre_counts or rel in fresh_counts:
             continue
         try:
             import pyarrow.parquet as pq
@@ -391,13 +394,12 @@ def _commit_locked(
     # Per-file row counts (the Delta-log trick that lets COUNT(*) be
     # answered from metadata alone): carried files copy their count
     # from the base manifest (authoritative, re-read under the lock);
-    # freshly written files use the footer num_rows the UNLOCKED
-    # _commit wrapper read (so footer I/O never lengthens the commit
-    # critical section). Centralized here so every commit path (the
-    # verbs' shared _cow_commit step and rollback) records counts
-    # without threading a parameter through each. A
-    # file covered by neither is simply absent (table_rowcount then
-    # reports unknown rather than a wrong number).
+    # freshly written files use the footer num_rows _file_stats or the
+    # UNLOCKED _commit wrapper read (so footer I/O never lengthens the
+    # commit critical section). Centralized here so every commit path
+    # (the verbs' shared _cow_commit step and rollback) records counts
+    # the same way. A file covered by neither is simply absent
+    # (table_rowcount then reports unknown rather than a wrong number).
     parent_m = _read_manifest(table_dir, now_cur) if now_cur is not None else None
     prev_counts = parent_m.get("rowcounts", {}) if parent_m else {}
     fresh_counts = fresh_counts or {}
@@ -507,11 +509,13 @@ def _stat_norm(v):
     return None
 
 
-def _file_stats(table_dir: str, files: list[str]) -> dict:
-    """Per-file min/max column statistics from the parquet footers —
-    the Iceberg/Delta data-skipping metadata, collected ONCE at write
-    time (one local footer read per freshly written file; on object
-    storage this runs in the writer, so readers never touch footers).
+def _file_stats(table_dir: str, files: list[str]) -> tuple[dict, dict]:
+    """Per-file min/max column statistics and row counts from the
+    parquet footers — the Iceberg/Delta data-skipping metadata,
+    collected ONCE at write time (one local footer read per freshly
+    written file; on object storage this runs in the writer, so
+    readers never touch footers). Returns ``(stats, rowcounts)``;
+    ``_commit`` records the counts without re-opening the footers.
 
     Numeric, boolean, timestamp and date columns are recorded
     (temporal values normalized to epoch microseconds via _stat_norm
@@ -526,11 +530,13 @@ def _file_stats(table_dir: str, files: list[str]) -> dict:
     import pyarrow.parquet as pq
 
     out: dict[str, dict[str, list]] = {}
+    rowcounts: dict[str, int] = {}
     for rel in files:
         try:
             meta = pq.ParquetFile(os.path.join(table_dir, rel)).metadata
         except Exception:
             continue  # unreadable footer -> file stays unprunable
+        rowcounts[rel] = meta.num_rows
         cols: dict[str, list] = {}
         # once ANY row group leaves a column uncovered, it must stay
         # unprunable for the whole file — re-adding it from a later
@@ -569,7 +575,7 @@ def _file_stats(table_dir: str, files: list[str]) -> dict:
                     cols[name] = [lo, hi]
         if cols:
             out[rel] = cols
-    return out
+    return out, rowcounts
 
 
 # ---------------------------------------------------------------------------
@@ -729,13 +735,14 @@ def _cow_commit(
     next to ``manifest``'s files that are not ``touched``. Those are
     carried BY REFERENCE with their stats and blooms; ``manifest=None``
     replaces the whole content (overwrite, full merge, DDL, full
-    compact). Row counts are carried or read by ``_commit``."""
+    compact). ``_commit`` carries the row counts of carried files and
+    records those ``_file_stats`` read for the fresh ones."""
     files = (
         []
         if df is None
         else _write_data(table_dir, df, (base if base is not None else -1) + 1)
     )
-    stats = _file_stats(table_dir, files)
+    stats, rowcounts = _file_stats(table_dir, files)
     blooms = _file_blooms(table_dir, files, bloom_for) if bloom_for else {}
     carried: list[str] = []
     if manifest is not None:
@@ -745,7 +752,8 @@ def _cow_commit(
             prev = manifest.get(name, {})
             fresh.update({f: prev[f] for f in carried if f in prev})
     return _commit(
-        table_dir, files + carried, op, expect_version, base, stats, blooms
+        table_dir, files + carried, op, expect_version, base, stats, blooms,
+        rowcounts,
     )
 
 
@@ -1171,21 +1179,37 @@ def _finding_scan(
 def _scoped_candidates(df: DataFrame, column: str, manifest: dict, label: str):
     """Shared scoped-pruning protocol (merge_snapshot scope_by= and
     delete_snapshot keys+scope_by=): the touched-file set for the
-    values ``df`` carries on ``column``. Per-VALUE pruning for
-    trickle batches, bounded by _SCOPE_VALUES_CAP distinct values,
-    beyond which the [min, max] interval form takes over — one
-    bounded driver collect either way. The NULL check is exact and
-    separate: the capped distinct collect may not surface NULL in a
-    >cap batch, and a silently matched NULL key is the outcome the
-    guard exists to reject. Returns None when ``df`` is empty (the
-    caller decides whether empty input is an error or a no-op)."""
+    values ``df`` carries on ``column``. One bounded sorted collect —
+    the first _SCOPE_VALUES_CAP + 1 values, NULLs first — answers the
+    common trickle batch in a single Spark job: a NULL anywhere sorts
+    into the first row (exact, so a silently matched NULL key — the
+    outcome the guard exists to reject — cannot slip past the cap),
+    and a head shorter than the cap holds every value, pruned per
+    VALUE. Only a full head falls back to a capped distinct collect:
+    per-value pruning when at most _SCOPE_VALUES_CAP values are
+    distinct, else the [min, max] interval form. Returns None when
+    ``df`` is empty (the caller decides whether empty input is an
+    error or a no-op)."""
     from pyspark.sql import functions as F
 
-    if df.where(df[column].isNull()).head(1):
+    head = [
+        r[0]
+        for r in df.select(column)
+        .orderBy(F.col(column).asc_nulls_first())
+        .limit(_SCOPE_VALUES_CAP + 1)
+        .collect()
+    ]
+    if not head:
+        return None
+    if head[0] is None:
         raise ValueError(
             f"{label} carry NULL {column!r} values — NULL keys never "
             "match; filter them upstream"
         )
+    if len(head) <= _SCOPE_VALUES_CAP:
+        # sorted, so duplicates are adjacent
+        vals = [v for i, v in enumerate(head) if i == 0 or v != head[i - 1]]
+        return _files_touching_values(manifest, column, vals)
     vals = [
         r[0]
         for r in df.select(column)
@@ -1193,8 +1217,6 @@ def _scoped_candidates(df: DataFrame, column: str, manifest: dict, label: str):
         .limit(_SCOPE_VALUES_CAP + 1)
         .collect()
     ]
-    if not vals:
-        return None
     if len(vals) <= _SCOPE_VALUES_CAP:
         return _files_touching_values(manifest, column, vals)
     row = df.agg(
@@ -2468,6 +2490,7 @@ def snapshot_diff(
     to_version: int | None = None,
     key: str | list[str] | tuple[str, ...] | None = None,
     skip_shared: bool = True,
+    cancel: bool = True,
 ) -> DataFrame:
     """Row-level changes between two versions — the
     ``table_changes`` / CDC-read analog, computed from the two
@@ -2475,7 +2498,20 @@ def snapshot_diff(
 
     Without ``key``: full-row diff — one output row per
     added/removed row, tagged ``_change`` in {'insert', 'delete'}
-    (a modified row appears as delete + insert). With ``key``:
+    (a modified row appears as delete + insert). The diff is the
+    range's FILE SWAP — every row of the files only ``to_version``
+    lists tagged 'insert', every row of the files only
+    ``from_version`` lists tagged 'delete' (``skip_shared=False``
+    swaps every file) — followed by a
+    cancellation step (two ``exceptAll`` shuffles) that drops the
+    rows a rewritten file carried through unchanged. ``cancel=False``
+    skips that step and returns the swap itself: a multiset that
+    differs from the diff only by rows present on both sides, so any
+    LINEAR aggregate (COUNT, SUM, signed by ``_change``) over it is
+    exactly the aggregate over the diff, after a MERGE, delete,
+    compact or rollback alike — at the cost of one read of each
+    swapped file and no row shuffle (``ivm``'s count/sum ticks read
+    it this way). With ``key``:
     key-level diff — '_change' in {'insert', 'delete', 'update'},
     carrying the NEW row for inserts/updates and the OLD row for
     deletes (the MERGE-feed shape a downstream mirror applies).
@@ -2507,6 +2543,8 @@ def snapshot_diff(
        diffs (``key=None``) remain exact multiset semantics under
        duplicates in both modes.
     """
+    if key is not None and not cancel:
+        raise ValueError("cancel=False applies only to the full-row form")
     to_version = (
         current_version(table_dir) if to_version is None else to_version
     )
@@ -2538,9 +2576,10 @@ def snapshot_diff(
     from pyspark.sql import functions as F
 
     if key is None:
-        ins = new.exceptAll(old).withColumn("_change", F.lit("insert"))
-        dele = old.exceptAll(new).withColumn("_change", F.lit("delete"))
-        return ins.unionByName(dele)
+        if cancel:
+            new, old = new.exceptAll(old), old.exceptAll(new)
+        ins = new.withColumn("_change", F.lit("insert"))
+        return ins.unionByName(old.withColumn("_change", F.lit("delete")))
     keys = [key] if isinstance(key, str) else list(key)
     val_cols = [c for c in new.columns if c not in keys]
     o = old.select(*keys, F.struct(*val_cols).alias("_old"))

@@ -55,3 +55,21 @@ def duckdb_scalar(sql: str):
     import duckdb
 
     return duckdb.sql(sql).fetchone()[0]
+
+
+def spark_jobs(spark, fn):
+    """``(fn(), number of Spark jobs it ran)``: the jobs are counted
+    under a job group of their own (``setJobGroup`` +
+    ``statusTracker``), after the listener bus has caught up, so jobs
+    from earlier calls or other threads do not count."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -1221,3 +1221,176 @@ def test_tick_protocol_occ_fence_and_vacuum_rebuild(
     SN.vacuum(daily if child else src, keep_versions=1)
     assert tick()["mode"] == "rebuild"
     assert view() == truth()
+
+
+def test_additive_ticks_fold_every_kind_of_file_swap(spark, tmp_path):
+    """Count/sum ticks fold the source range's file swap (removed
+    files −1, added files +1) with no cancellation. Through scoped
+    and full merges, a schema-adding merge, delete, update, append,
+    compact and a source rollback, a plain rollup, a bucket-keyed one
+    and a sum child of the latter equal a from-scratch aggregate after
+    every tick, in the same modes and with the same ``_txns`` stamps
+    as the cancelled-diff ticks; a compact-only tick changes no
+    stored value. A child built after the parent tombstoned groups
+    gets no zero rows for them: carried parent rows sum to nothing
+    and are not merged."""
+    import datetime as dt
+
+    src = str(tmp_path / "src")
+    plain, daily, weekly, late = (
+        str(tmp_path / n) for n in ("plain", "daily", "weekly", "late")
+    )
+    schema = "k bigint, ts timestamp, grp string, val bigint"
+
+    def rows(keys, shift=0):
+        return spark.createDataFrame(
+            [
+                (
+                    k,
+                    dt.datetime(2024, 1, 1 + (k + shift) % 25, k % 24),
+                    f"g{(k + shift) % 4}",
+                    (k * 7 + shift) % 50,
+                )
+                for k in keys
+            ],
+            schema,
+        )
+
+    SN.write_snapshot(src, rows(range(120)), cluster_by=["k"], n_files=4)
+    ke = {"day": "date_trunc('day', ts)"}
+    wk = {"week": "date_trunc('week', day)", "grp": "grp"}
+
+    def tick():
+        return [
+            ivm.maintain_rollup(spark, src, plain, ["grp"], "val")["mode"],
+            ivm.maintain_rollup(
+                spark, src, daily, ["day", "grp"], "val", key_exprs=ke
+            )["mode"],
+            ivm.maintain_rollup_from_rollup(spark, daily, weekly, wk)["mode"],
+        ]
+
+    def scratch():
+        base = SN.read_snapshot(spark, src).withColumn(
+            "day", F.expr(ke["day"])
+        ).withColumn("week", F.expr(wk["week"]))
+        return [
+            sorted(
+                tuple(r)
+                for r in base.groupBy(*keys)
+                .agg(F.count(F.lit(1)), F.sum("val"))
+                .collect()
+            )
+            for keys in (["grp"], ["day", "grp"], ["week", "grp"])
+        ]
+
+    def views():
+        return [
+            sorted(
+                tuple(r)
+                for r in ivm.read_rollup(spark, d)
+                .select(*keys, "n_rows", "sum_val")
+                .collect()
+            )
+            for d, keys in (
+                (plain, ["grp"]),
+                (daily, ["day", "grp"]),
+                (weekly, ["week", "grp"]),
+            )
+        ]
+
+    def stored():
+        return [
+            sorted(map(tuple, SN.read_snapshot(spark, d).collect()))
+            for d in (plain, daily, weekly)
+        ]
+
+    assert tick() == ["full"] * 3
+    assert views() == scratch()
+    commits = [
+        lambda: SN.merge_snapshot(
+            spark, src, rows([3, 7, 200, 201], shift=5), "k", scope_by="k"
+        ),
+        lambda: SN.merge_snapshot(spark, src, rows(range(40, 60), 2), "k"),
+        lambda: SN.merge_snapshot(
+            spark, src,
+            rows([61, 300], shift=9).withColumn("extra", F.lit(1)),
+            "k", scope_by="k",
+        ),
+        lambda: SN.delete_snapshot(spark, src, "k % 9 = 0 OR grp = 'g3'"),
+        lambda: SN.update_snapshot(
+            spark, src, "k < 30", {"val": "val + 100", "grp": "'g9'"}
+        ),
+        lambda: SN.write_snapshot(
+            src,
+            rows(range(400, 410)).withColumn("extra", F.lit(2)),
+            mode="append",
+        ),
+        lambda: SN.compact(spark, src, target_files=2, cluster_by=["k"]),
+        lambda: SN.rollback(src, 3),
+    ]
+    def weeks(d):
+        cols = ["week", "grp", "n_rows", "sum_val"]
+        return sorted(
+            map(tuple, SN.read_snapshot(spark, d).select(cols).collect())
+        )
+
+    emptied = None
+    for i, commit in enumerate(commits):
+        before = stored()
+        commit()
+        assert tick() == ["delta"] * 3, i
+        assert views() == scratch(), i
+        if i == 6:  # compact only moves rows between files
+            assert stored() == before
+        assert tick() == ["noop"] * 3
+        if emptied is not None:
+            assert ivm.maintain_rollup_from_rollup(
+                spark, daily, late, wk
+            )["mode"] == "delta"
+            assert weeks(late) == [
+                r for r in weeks(weekly) if r[2] or r[:2] not in emptied
+            ], i
+        elif i == 3:  # the delete tombstoned every 'g3' group
+            assert ivm.maintain_rollup_from_rollup(
+                spark, daily, late, wk
+            )["mode"] == "full"
+            emptied = {r[:2] for r in weeks(weekly) if not r[2]}
+            assert emptied
+    versions = [f"ivm:src_v{v}" for v in range(len(commits) + 1)]
+    assert SN.committed_ops(plain) == versions
+    assert SN.committed_ops(daily) == versions
+    assert SN.committed_ops(weekly) == versions
+
+
+def test_replayed_child_ticks_run_no_spark_job(spark, tmp_path):
+    """A replayed hierarchical tick (sum or aux) returns its noop
+    before reading the parent: zero Spark jobs, as a replayed
+    base-fed tick."""
+    from tests.conftest import spark_jobs
+
+    src = str(tmp_path / "src")
+    SN.write_snapshot(
+        src,
+        spark.createDataFrame(
+            [(i, i % 14, f"t{i % 3}", i) for i in range(40)],
+            ["k", "day", "t", "v"],
+        ),
+    )
+    sums, mins = str(tmp_path / "sums"), str(tmp_path / "mins")
+    ke = {"week": "day DIV 7", "t": "t"}
+    ticks = {
+        "sum": lambda: ivm.maintain_rollup(spark, src, sums, ["day", "t"], "v"),
+        "aux": lambda: ivm.maintain_aux_rollup(
+            spark, src, mins, ["day", "t"], "v"
+        ),
+        "sum_child": lambda: ivm.maintain_rollup_from_rollup(
+            spark, sums, str(tmp_path / "sum_child"), ke
+        ),
+        "aux_child": lambda: ivm.maintain_aux_rollup_from_rollup(
+            spark, mins, str(tmp_path / "aux_child"), ke
+        ),
+    }
+    for name, fn in ticks.items():
+        assert fn()["mode"] == "full", name
+        out, jobs = spark_jobs(spark, fn)
+        assert out["mode"] == "noop" and jobs == 0, (name, jobs)

@@ -715,3 +715,54 @@ def test_no_global_window_on_sf_growing_input(spark):
                 f"{name}: row_number window is unpartitioned "
                 f"(first spec arg {first_arg!r})"
             )
+
+
+#: Spark jobs of one curation-shaped write, per step (probed on the
+#: 400-row table below, pinned at the observed count): the scoped
+#: merge's key probe is one bounded sorted collect, and the rollup's
+#: delta tick folds the file swap with no exceptAll shuffles.
+WRITE_JOB_BUDGETS = {"scoped_merge": 6, "rollup_delta_tick": 11}
+
+
+def test_write_path_job_budget(spark, tmp_path):
+    """One scoped MERGE plus one ``maintain_rollup`` delta tick on a
+    small bloom-indexed table stay within their Spark job budgets,
+    each counted in a job group of its own."""
+    from pyspark.sql import functions as F
+
+    from ensembl_lakehouse_spark import ivm, snapshots as SN
+    from tests.conftest import spark_jobs
+
+    src, rollup = str(tmp_path / "src"), str(tmp_path / "rollup")
+    SN.write_snapshot(
+        src,
+        spark.range(0, 400).select(
+            F.col("id").alias("k"),
+            (F.col("id") % 37).alias("cust"),
+            (F.col("id") % 3).cast("string").alias("g"),
+            (F.col("id") * 3).alias("v"),
+        ),
+        cluster_by=["k"], n_files=4, bloom_for=["cust"],
+    )
+    ivm.maintain_rollup(spark, src, rollup, ["g"], "v")
+    updates = spark.createDataFrame(
+        [(k, 1, str(k % 5), k) for k in range(350, 420)],
+        "k bigint, cust bigint, g string, v bigint",
+    )
+    steps = {
+        "scoped_merge": lambda: SN.merge_snapshot(
+            spark, src, updates, "k", scope_by="k", bloom_for=["cust"]
+        ),
+        "rollup_delta_tick": lambda: ivm.maintain_rollup(
+            spark, src, rollup, ["g"], "v"
+        ),
+    }
+    jobs = {name: spark_jobs(spark, fn)[1] for name, fn in steps.items()}
+    over = {
+        name: (n, WRITE_JOB_BUDGETS[name])
+        for name, n in jobs.items()
+        if n > WRITE_JOB_BUDGETS[name]
+    }
+    assert not over, f"Spark job budget exceeded (actual, budget): {over}"
+    assert ivm.rollup_lineage(rollup) is None
+    assert SN.committed_ops(rollup) == ["ivm:src_v0", "ivm:src_v1"]

@@ -1818,3 +1818,153 @@ def test_cow_verbs_index_new_files_and_carry_the_rest(
     if verb not in ("drop_column", "rename_column"):
         assert carried  # the verb rewrote only part of the table
     assert S.table_rowcount(tdir) == S.read_snapshot(spark, tdir).count()
+
+
+def _three_action_candidates(df, column, manifest):
+    """The scoped probe as three Spark actions (an exact NULL check, a
+    capped distinct collect, then min/max beyond the cap): the form
+    the one-job probe must agree with on every batch."""
+    from pyspark.sql import functions as F
+
+    if df.where(df[column].isNull()).head(1):
+        raise ValueError("NULL")
+    vals = [
+        r[0]
+        for r in df.select(column)
+        .distinct()
+        .limit(S._SCOPE_VALUES_CAP + 1)
+        .collect()
+    ]
+    if not vals:
+        return None
+    if len(vals) <= S._SCOPE_VALUES_CAP:
+        return S._files_touching_values(manifest, column, vals)
+    row = df.agg(F.min(column), F.max(column)).collect()[0]
+    return set(S._prune_manifest(manifest, column, row[0], row[1]))
+
+
+def test_scoped_candidates_one_job_same_files_as_three_actions(
+    spark, tdir, monkeypatch
+):
+    """The scoped merge/delete probe is one bounded sorted collect.
+    Below, at and above the value cap, with and without repeated
+    keys, it touches exactly the files the three-action form did; a
+    NULL key raises on either side of the cap; an empty batch is
+    None; a batch of at most cap rows costs one Spark job."""
+    from tests.conftest import spark_jobs
+
+    S.write_snapshot(
+        tdir,
+        spark.range(0, 800).selectExpr("id AS k", "id % 7 AS a"),
+        cluster_by=["k"], n_files=8, bloom_for=["k"],
+    )
+    manifest = S._read_manifest(tdir, 0)
+    monkeypatch.setattr(S, "_SCOPE_VALUES_CAP", 5)
+
+    def batch(keys):
+        return spark.createDataFrame(
+            [(k, 1) for k in keys], "k BIGINT, a BIGINT"
+        )
+
+    cases = {
+        "below": [5, 650, 320],
+        "below_dups": [650, 5, 650, 5],
+        "at": [5, 110, 650, 790, 320],
+        "at_dups_over_cap_rows": [5, 110, 5, 650, 110, 790, 320, 5],
+        # beyond the cap the [min, max] interval form prunes
+        "above": [300, 301, 320, 350, 390, 410, 415],
+        "above_dups": [415, 300, 301, 320, 350, 390, 410, 301, 415],
+    }
+    for name, keys in cases.items():
+        df = batch(keys)
+        want = _three_action_candidates(df, "k", manifest)
+        got, jobs = spark_jobs(
+            spark, lambda: S._scoped_candidates(df, "k", manifest, "updates")
+        )
+        assert got == want, name
+        assert 0 < len(got) < len(manifest["files"]), name
+        if len(keys) <= S._SCOPE_VALUES_CAP:
+            assert jobs == 1, (name, jobs)
+    for keys in ([None, 5, 650], [5, 110, 650, 790, 320, 11, None, 12]):
+        with pytest.raises(ValueError, match="NULL"):
+            S._scoped_candidates(batch(keys), "k", manifest, "updates")
+    empty = batch([])
+    assert S._scoped_candidates(empty, "k", manifest, "updates") is None
+    with pytest.raises(ValueError, match="empty"):
+        S.merge_snapshot(spark, tdir, empty, key="k", scope_by="k")
+
+
+def test_commit_reads_each_fresh_footer_once(spark, tdir, monkeypatch):
+    """``_file_stats`` hands the row counts it read to ``_commit``, so
+    a fresh file's footer is opened once per commit, and rollback (no
+    stats step) still records every count."""
+    import pyarrow.parquet as pq
+
+    S.write_snapshot(
+        tdir,
+        spark.range(0, 300).selectExpr("id AS k", "id AS v"),
+        cluster_by=["k"], n_files=3,
+    )
+    opened: list[str] = []
+    real = pq.ParquetFile
+
+    def counting(path, *args, **kwargs):
+        opened.append(os.path.relpath(path, tdir))
+        return real(path, *args, **kwargs)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    v = S.merge_snapshot(
+        spark, tdir,
+        spark.range(0, 300, 2).selectExpr("id AS k", "-id AS v"),
+        key="k",
+    )
+    monkeypatch.undo()
+    m = S._read_manifest(tdir, v)
+    assert m["files"] and sorted(opened) == m["files"]
+    assert m["rowcounts"] == {
+        f: real(os.path.join(tdir, f)).metadata.num_rows for f in m["files"]
+    }
+    assert S.table_rowcount(tdir) == 300
+    S.write_snapshot(tdir, spark.range(5).selectExpr("id AS k", "id AS v"))
+    S.rollback(tdir, v)
+    assert S._read_manifest(tdir, v + 2)["rowcounts"] == m["rowcounts"]
+
+
+def test_snapshot_diff_uncancelled_is_the_file_swap(spark, tdir):
+    """``cancel=False`` returns every row of the swapped files, signed
+    by side, so a signed SUM over it equals the one over the cancelled
+    diff; the key form has no uncancelled variant."""
+    from pyspark.sql import functions as F
+
+    S.write_snapshot(
+        tdir,
+        spark.range(0, 90).selectExpr("id AS k", "id % 4 AS g", "id AS v"),
+        cluster_by=["k"], n_files=3,
+    )
+    S.merge_snapshot(
+        spark, tdir,
+        spark.createDataFrame(
+            [(5, 9, 500), (200, 1, 7)], "k long, g long, v long"
+        ),
+        key="k", scope_by="k",
+    )
+    m0, m1 = S._read_manifest(tdir, 0), S._read_manifest(tdir, 1)
+    swapped = set(m0["files"]) ^ set(m1["files"])
+    swap = S.snapshot_diff(spark, tdir, 0, 1, cancel=False)
+    counts = {**m0["rowcounts"], **m1["rowcounts"]}
+    assert swap.count() == sum(counts[f] for f in swapped)
+
+    def signed(df):
+        sign = F.when(F.col("_change") == "insert", 1).otherwise(-1)
+        return sorted(
+            tuple(r)
+            for r in df.groupBy("g")
+            .agg(F.sum(sign).alias("n"), F.sum(sign * F.col("v")).alias("s"))
+            .where("n != 0 OR s != 0")
+            .collect()
+        )
+
+    assert signed(swap) == signed(S.snapshot_diff(spark, tdir, 0, 1))
+    assert len(S.snapshot_diff(spark, tdir, 0, 1).collect()) == 3
+    with pytest.raises(ValueError, match="full-row"):
+        S.snapshot_diff(spark, tdir, 0, 1, key="k", cancel=False)
