@@ -494,7 +494,9 @@ def _additive_step(key_cols: list[str], project, weight, measure):
     stored (n_rows, sum_val). Groups whose rows the swap only carried
     sum to (0, 0) and are left out of the merge: it would rewrite
     their stored values unchanged, or add a zero row for a group the
-    target does not hold."""
+    target does not hold. The per-group delta is computed once
+    (``SN.materialized``): the NULL-key check and the merge read that
+    copy instead of re-reading the swapped files."""
 
     @contextlib.contextmanager
     def step(diff: DataFrame, current: DataFrame):
@@ -504,20 +506,19 @@ def _additive_step(key_cols: list[str], project, weight, measure):
             # NULL here would overwrite the group's standing sum
             F.coalesce(F.sum(_signed(measure)), F.lit(0)).alias("d_sum"),
         )
-        changed = per_group.where(
-            (F.col("d_rows") != 0) | (F.col("d_sum") != 0)
-        )
-        yield per_group, changed.join(
-            current, on=key_cols, how="left"
-        ).select(
-            *key_cols,
-            (F.coalesce(F.col("n_rows"), F.lit(0)) + F.col("d_rows")).alias(
-                "n_rows"
-            ),
-            (F.coalesce(F.col("sum_val"), F.lit(0)) + F.col("d_sum")).alias(
-                "sum_val"
-            ),
-        )
+        with SN.materialized(per_group) as per_group:
+            changed = per_group.where(
+                (F.col("d_rows") != 0) | (F.col("d_sum") != 0)
+            )
+            yield per_group, changed.join(
+                current, on=key_cols, how="left"
+            ).select(
+                *key_cols,
+                (F.coalesce(F.col("n_rows"), F.lit(0)) + F.col("d_rows"))
+                .alias("n_rows"),
+                (F.coalesce(F.col("sum_val"), F.lit(0)) + F.col("d_sum"))
+                .alias("sum_val"),
+            )
 
     return step
 

@@ -156,39 +156,40 @@ def _apply_delta(
     so a resume reports the full delta it covered)."""
     from pyspark.sql import functions as F
 
-    diff = SN.snapshot_diff(spark, src_dir, frm, to_v, key=keys)
     # one materialization: the feed is consumed by two applies and a
-    # count; localCheckpoint pins a consistent view and truncates the
-    # diff lineage out of both apply plans
-    diff = diff.localCheckpoint(eager=True)
-    applied_ops = set(SN.committed_ops(dst_dir))
-    dels = diff.where(F.col("_change") == "delete").select(*keys)
-    n_del = dels.count()
-    if n_del and f"{_DEL_STAMP}{to_v}" not in applied_ops:
-        SN.delete_snapshot(
-            spark,
-            dst_dir,
-            keys=dels,
-            key=keys,
-            scope_by=scope_by,
-            op=f"{_DEL_STAMP}{to_v}",
-        )
-    ups = diff.where(F.col("_change") != "delete")
-    n_up = ups.count()
-    if n_up:
-        up_rows = ups.select(*keys, "_row.*")
-        SN.merge_snapshot(
-            spark,
-            dst_dir,
-            up_rows,
-            key=keys,
-            op=f"{_STAMP}{to_v}",
-            scope_by=scope_by,
-        )
-    else:
-        # still advance the last-applied marker: a delete-only sync
-        # must not be replayed forever — stamp with a no-match commit
-        SN.delete_snapshot(
-            spark, dst_dir, where="1 = 0", op=f"{_STAMP}{to_v}"
-        )
+    # count; the checkpoint pins a consistent view, truncates the diff
+    # lineage out of both apply plans, and is released after them
+    with SN.materialized(
+        SN.snapshot_diff(spark, src_dir, frm, to_v, key=keys)
+    ) as diff:
+        applied_ops = set(SN.committed_ops(dst_dir))
+        dels = diff.where(F.col("_change") == "delete").select(*keys)
+        n_del = dels.count()
+        if n_del and f"{_DEL_STAMP}{to_v}" not in applied_ops:
+            SN.delete_snapshot(
+                spark,
+                dst_dir,
+                keys=dels,
+                key=keys,
+                scope_by=scope_by,
+                op=f"{_DEL_STAMP}{to_v}",
+            )
+        ups = diff.where(F.col("_change") != "delete")
+        n_up = ups.count()
+        if n_up:
+            up_rows = ups.select(*keys, "_row.*")
+            SN.merge_snapshot(
+                spark,
+                dst_dir,
+                up_rows,
+                key=keys,
+                op=f"{_STAMP}{to_v}",
+                scope_by=scope_by,
+            )
+        else:
+            # still advance the last-applied marker: a delete-only sync
+            # must not be replayed forever — stamp with a no-match commit
+            SN.delete_snapshot(
+                spark, dst_dir, where="1 = 0", op=f"{_STAMP}{to_v}"
+            )
     return n_up, n_del

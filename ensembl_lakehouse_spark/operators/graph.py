@@ -499,11 +499,16 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .localCheckpoint()
     )
+    # und is ≤ |nations|² rows: both self-joins broadcast it, pinned
+    # at planning. Left to AQE, each side was shuffled first and the
+    # joins turned into broadcasts at runtime, in an order that
+    # depended on which stage finished first, so the plan's shuffle
+    # count varied between runs.
     e1, e2, e3 = und.alias("e1"), und.alias("e2"), und.alias("e3")
     tri = (
-        e1.join(e2, F.col("e1.b") == F.col("e2.a"))
+        e1.join(F.broadcast(e2), F.col("e1.b") == F.col("e2.a"))
         .join(
-            e3,
+            F.broadcast(e3),
             (F.col("e3.a") == F.col("e1.a")) & (F.col("e3.b") == F.col("e2.b")),
         )
         .select(

@@ -39,13 +39,17 @@ Every writing verb (write/append, merge, delete, update, drop and
 rename column, compact) ends in the ONE copy-on-write step
 ``_cow_commit``: write the new rows, record their stats (and blooms
 when asked), carry the untouched base files by reference with their
-metadata, commit. Files are read through ``_read_file_subset``, the
-delete/update finding scan is ``_finding_scan``, and every pointer,
-manifest, tag and constraint swap is ``_atomic_write``.
+metadata, commit. The manifest records the version's schema, so
+files are read through ``_read_file_subset`` under that schema with no
+inference job; the delete/update finding scan is ``_finding_scan``,
+and every pointer, manifest, tag and constraint swap is
+``_atomic_write``. A verb that reads its input more than once (MERGE's
+source, DELETE's key list) computes it once through ``materialized``.
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import re
@@ -56,6 +60,7 @@ import uuid
 from collections import OrderedDict, defaultdict
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: Per-table commit locks: within one process, check-then-swap in
 #: _commit is atomic, so two racing writers resolve to one committed
@@ -154,7 +159,8 @@ def _apply_delta(parent: dict, raw: dict) -> dict:
     """Resolve a delta manifest against its RESOLVED parent into the
     self-contained form every consumer sees. Exact by construction:
     the encoder diffs the fully-built manifest field-wise, so apply ∘
-    encode is the identity on (files, stats, blooms, rowcounts)."""
+    encode is the identity on (files, stats, blooms, rowcounts,
+    schema)."""
     files = (
         set(parent["files"]) - set(raw["files_remove"])
     ) | set(raw["files_add"])
@@ -165,6 +171,8 @@ def _apply_delta(parent: dict, raw: dict) -> dict:
         "files": sorted(files),
         "committed_at": raw["committed_at"],
         "chain": raw["chain"],
+        # a delta stores the schema only when it changed
+        "schema": raw["schema"] if "schema" in raw else parent.get("schema"),
     }
     for name in _MAP_FIELDS:
         dels = set(raw[f"{name}_del"])
@@ -196,6 +204,8 @@ def _encode_delta(parent: dict, full: dict) -> dict:
         "files_add": sorted(nf - pf),
         "files_remove": sorted(pf - nf),
     }
+    if full.get("schema") != parent.get("schema"):
+        out["schema"] = full.get("schema")
     missing = object()
     for name in _MAP_FIELDS:
         pm = parent.get(name) or {}
@@ -327,6 +337,7 @@ def _commit(
     stats: dict | None = None,
     blooms: dict | None = None,
     rowcounts: dict[str, int] | None = None,
+    schema: dict | None = None,
 ) -> int:
     """Write manifest v{N} then atomically swap the pointer.
 
@@ -366,7 +377,7 @@ def _commit(
     with _table_lock(table_dir):
         return _commit_locked(
             table_dir, files, op, expect_version, base_seen, stats, blooms,
-            fresh_counts,
+            fresh_counts, schema,
         )
 
 
@@ -379,6 +390,7 @@ def _commit_locked(
     stats: dict | None = None,
     blooms: dict | None = None,
     fresh_counts: dict[str, int] | None = None,
+    schema: dict | None = None,
 ) -> int:
     now_cur = current_version(table_dir)
     if expect_version is not None and now_cur != expect_version:
@@ -427,6 +439,9 @@ def _commit_locked(
         "blooms": blooms or {},
         # per-file row counts (subset of "files"; see above)
         "rowcounts": rowcounts,
+        # the schema every file reads under (see _recorded_schema);
+        # None leaves readers to infer it (_read_file_subset)
+        "schema": schema,
         "committed_at": time.time(),
         # distance to the nearest full checkpoint (0 = this IS one);
         # bounds both resolution depth and the vacuum rewrite set
@@ -718,6 +733,45 @@ def _file_blooms(table_dir: str, files: list[str], columns: list[str]) -> dict:
     return out
 
 
+def _nullable(t):
+    """A schema's JSON form with every nullability flag set: what a
+    parquet read reports, whatever flags the writer had."""
+    if isinstance(t, list):
+        return [_nullable(x) for x in t]
+    if not isinstance(t, dict):
+        return t
+    out = {k: v if k == "metadata" else _nullable(v) for k, v in t.items()}
+    for flag in ("nullable", "containsNull", "valueContainsNull"):
+        if flag in out:
+            out[flag] = True
+    return out
+
+
+def _recorded_schema(
+    manifest: dict | None, carried: list[str], df: DataFrame | None
+) -> dict | None:
+    """The schema a new version's files read under, as nullable JSON:
+    the carried files' recorded fields first, then the fields of the
+    written ``df`` they lack (names match case-insensitively), the
+    order a mergeSchema read over the files yields. None when the
+    carried files' schema was never recorded, or when one name
+    carries two types, which a reader could only resolve by guessing;
+    ``_read_file_subset`` then infers the schema as before."""
+    fields = []
+    if carried:
+        prev = manifest.get("schema")
+        if prev is None:
+            return None
+        fields += prev["fields"]
+    if df is not None:
+        fields += _nullable(df.schema.jsonValue())["fields"]
+    merged: dict[str, dict] = {}
+    for f in fields:
+        if merged.setdefault(f["name"].lower(), f)["type"] != f["type"]:
+            return None
+    return {"type": "struct", "fields": list(merged.values())} if merged else None
+
+
 def _cow_commit(
     table_dir: str,
     df: DataFrame | None,
@@ -734,9 +788,11 @@ def _cow_commit(
     rewrite silently strips point-lookup pruning — then commit them
     next to ``manifest``'s files that are not ``touched``. Those are
     carried BY REFERENCE with their stats and blooms; ``manifest=None``
-    replaces the whole content (overwrite, full merge, DDL, full
-    compact). ``_commit`` carries the row counts of carried files and
-    records those ``_file_stats`` read for the fresh ones."""
+    replaces the whole content (overwrite, DDL, full compact).
+    ``_commit`` carries the row counts of carried files and records
+    those ``_file_stats`` read for the fresh ones; the manifest also
+    records the version's schema (``_recorded_schema``), so readers
+    never infer it from the files."""
     files = (
         []
         if df is None
@@ -753,7 +809,7 @@ def _cow_commit(
             fresh.update({f: prev[f] for f in carried if f in prev})
     return _commit(
         table_dir, files + carried, op, expect_version, base, stats, blooms,
-        rowcounts,
+        rowcounts, _recorded_schema(manifest, carried, df),
     )
 
 
@@ -963,9 +1019,6 @@ def read_snapshot(
             )
     version = cur if version is None else version
     manifest = _read_manifest(table_dir, version)
-    files = manifest["files"]
-    if not files:
-        raise ValueError(f"v{version} of {table_dir} lists no files")
     if where_eq is not None and where_between is not None:
         raise ValueError("pass where_between OR where_eq, not both")
     if where_eq is not None:
@@ -980,18 +1033,19 @@ def read_snapshot(
         column, lo, hi = where_between
         keep = _prune_manifest(manifest, column, lo, hi)
     else:
-        return _read_file_subset(spark, table_dir, files)
-    df = _read_file_subset(spark, table_dir, keep, files)
+        return _read_file_subset(spark, table_dir, manifest, manifest["files"])
+    df = _read_file_subset(spark, table_dir, manifest, keep)
     if not keep:
-        # every file skipped: the reader planned over ALL files, so
-        # the MERGED schema survives (a single file may predate a
-        # schema-evolving commit) under 1=0 — no row group is read
+        # every file skipped: the version's schema survives (a single
+        # file may predate a schema-evolving commit) under 1=0 — no
+        # row group is read
         return df
     if column not in df.columns:
-        # every kept file predates the column (schema evolution):
-        # those rows read NULL there, and NULL matches no probe —
-        # empty result under the full merged schema
-        return _read_file_subset(spark, table_dir, [], files)
+        # every kept file predates the column (schema evolution, in a
+        # manifest without a recorded schema): those rows read NULL
+        # there, and NULL matches no probe — empty result under the
+        # version's schema
+        return _read_file_subset(spark, table_dir, manifest, [])
     c = df[column]
     hit = c == value if where_eq is not None else (c >= lo) & (c <= hi)
     return df.where(hit)
@@ -1028,6 +1082,7 @@ def rollback(table_dir: str, version: int) -> int:
         base,
         restored.get("stats", {}),
         restored.get("blooms", {}),
+        schema=restored.get("schema"),
     )
 
 
@@ -1071,61 +1126,69 @@ def merge_snapshot(
     (existing rows read NULL in them from this version on) and may
     omit columns the table has (upserted rows hold NULL there — rows
     are replaced whole, never column-patched). Earlier versions keep
-    their own schema under time travel; readers of mixed-file
-    versions get the merged schema (read_snapshot reads with
-    mergeSchema). NOTE scope_by + a schema-ADDING update rewrites
+    their own schema under time travel; a version whose files differ
+    in columns reads under the schema its commit recorded (the
+    merged one). NOTE scope_by + a schema-ADDING update rewrites
     only the touched files, so untouched-file rows read NULL in the
-    new column exactly as the full rewrite would produce."""
+    new column exactly as the full rewrite would produce.
+
+    ``updates`` is computed once (``materialized``): the scope probe,
+    the constraint checks, the anti-join and the written rows all see
+    the same rows, so a source that is not deterministic cannot give
+    the probe one key set and the write another (which would leave a
+    written key's old row in an untouched file)."""
     keys = [key] if isinstance(key, str) else list(key)
-    _enforce_constraints(table_dir, updates, "merge updates")
-    _enforce_unique(
-        table_dir,
-        updates,
-        "merge updates",
-        against_existing=True,
-        exempt_merge_keys=keys,
-    )
     if scope_by is not None and scope_by not in keys:
         raise ValueError(
             f"scope_by {scope_by!r} must be one of the merge keys {keys} — "
             "scoping on a non-key column could strand a matching key in "
             "an untouched file and duplicate it"
         )
-    base = current_version(table_dir)
-    if base is None:
-        return _cow_commit(
-            table_dir, updates, base, op, expect_version, bloom_for
+    with materialized(updates) as updates:
+        _enforce_constraints(table_dir, updates, "merge updates")
+        _enforce_unique(
+            table_dir,
+            updates,
+            "merge updates",
+            against_existing=True,
+            exempt_merge_keys=keys,
         )
-    manifest, touched = None, set()
-    if scope_by is None:
-        current = read_snapshot(spark, table_dir)
-    else:
+        base = current_version(table_dir)
+        if base is None:
+            return _cow_commit(
+                table_dir, updates, base, op, expect_version, bloom_for
+            )
         manifest = _read_manifest(table_dir, base)
-        touched = _scoped_candidates(updates, scope_by, manifest, "updates")
-        if touched is None:
-            raise ValueError("updates are empty — nothing to merge")
+        if scope_by is None:
+            touched = set(manifest["files"])
+        else:
+            touched = _scoped_candidates(
+                updates, scope_by, manifest, "updates"
+            )
+            if touched is None:
+                raise ValueError("updates are empty — nothing to merge")
         # no touched file: no existing file can hold a matching key,
         # so the merge is a pure insert
-        current = (
-            _read_file_subset(spark, table_dir, sorted(touched))
-            if touched
-            else read_snapshot(spark, table_dir).where("1 = 0")
+        current = _read_file_subset(spark, table_dir, manifest, sorted(touched))
+        kept = current.join(updates.select(*keys), on=keys, how="left_anti")
+        # allowMissingColumns = schema evolution on MERGE: updates may
+        # ADD columns (carried-forward rows read NULL there — the Delta
+        # mergeSchema behavior) or omit existing ones (inserted rows get
+        # NULL; they are whole-row upserts, not partial column patches —
+        # documented in the docstring)
+        merged = kept.unionByName(updates, allowMissingColumns=True)
+        return _cow_commit(
+            table_dir, merged, base, op, expect_version, bloom_for, manifest,
+            touched,
         )
-    kept = current.join(updates.select(*keys), on=keys, how="left_anti")
-    # allowMissingColumns = schema evolution on MERGE: updates may ADD
-    # columns (carried-forward rows read NULL there — the Delta
-    # mergeSchema behavior) or omit existing ones (inserted rows get
-    # NULL; they are whole-row upserts, not partial column patches —
-    # documented in the docstring)
-    merged = kept.unionByName(updates, allowMissingColumns=True)
-    return _cow_commit(
-        table_dir, merged, base, op, expect_version, bloom_for, manifest,
-        touched,
-    )
 
 
 def _finding_scan(
-    spark: SparkSession, table_dir: str, candidates: list[str], matching
+    spark: SparkSession,
+    table_dir: str,
+    manifest: dict,
+    candidates: list[str],
+    matching,
 ) -> list[str]:
     """The delete/update finding scan: which ``candidates`` hold at
     least one row that ``matching(df)`` keeps. One pushed-down scan
@@ -1146,9 +1209,9 @@ def _finding_scan(
 
     if not candidates:
         return []
-    cand = _read_file_subset(spark, table_dir, candidates).withColumn(
-        "_src_file", F.input_file_name()
-    )
+    cand = _read_file_subset(
+        spark, table_dir, manifest, candidates
+    ).withColumn("_src_file", F.input_file_name())
     hit_uris = {
         r[0] for r in matching(cand).select("_src_file").distinct().collect()
     }
@@ -1286,52 +1349,56 @@ def delete_snapshot(
     key_cols = (
         [key] if isinstance(key, str) else list(key) if key else []
     )
-    keys_d: DataFrame | None = None
-    if keys is not None:
-        # ONE materialized distinct key set for every job below (the
-        # NULL/scope collects, the finding scan's semi join, and the
-        # rewrite's anti join): without it each Spark action would
-        # re-evaluate the caller's plan, and a non-deterministic
-        # source (re-read external table, limit/sample) could make
-        # the finding scan and the rewrite disagree — deleting
-        # against one key set while stamping the erasure for another.
-        keys_d = keys.select(*key_cols).distinct().localCheckpoint(eager=True)
-    if keys_d is not None and scope_by is not None:
-        if scope_by not in key_cols:
-            raise ValueError(
-                f"scope_by {scope_by!r} must be one of the key columns "
-                f"{key_cols}"
+    if keys is not None and scope_by is not None and scope_by not in key_cols:
+        raise ValueError(
+            f"scope_by {scope_by!r} must be one of the key columns "
+            f"{key_cols}"
+        )
+    # ONE materialized distinct key set for every job below (the
+    # NULL/scope collects, the finding scan's semi join, and the
+    # rewrite's anti join): without it each Spark action would
+    # re-evaluate the caller's plan, and a non-deterministic source
+    # (re-read external table, limit/sample) could make the finding
+    # scan and the rewrite disagree — deleting against one key set
+    # while stamping the erasure for another.
+    with (
+        contextlib.nullcontext()
+        if keys is None
+        else materialized(keys.select(*key_cols).distinct())
+    ) as keys_d:
+        if keys_d is not None and scope_by is not None:
+            scoped = (
+                _scoped_candidates(keys_d, scope_by, manifest, "keys")
+                or set()
             )
-        scoped = (
-            _scoped_candidates(keys_d, scope_by, manifest, "keys") or set()
-        )
-        candidates = [f for f in candidates if f in scoped]
+            candidates = [f for f in candidates if f in scoped]
 
-    if where is not None:
-        touched = _finding_scan(
-            spark, table_dir, candidates, lambda c: c.where(F.expr(where))
-        )
-    else:
-        # no broadcast hint: erasure lists are usually tiny and AQE
-        # broadcasts them at runtime, but a bulk purge list may not be
-        # — forcing broadcast would OOM the executors
-        touched = _finding_scan(
-            spark, table_dir, candidates,
-            lambda c: c.join(keys_d, on=key_cols, how="left_semi"),
-        )
-    kept = None
-    if touched:
-        sub = _read_file_subset(spark, table_dir, touched)
         if where is not None:
-            # DELETE removes rows where the predicate is TRUE; FALSE
-            # and NULL both keep (coalesce supplies the NULL arm)
-            kept = sub.where(F.coalesce(~F.expr(where), F.lit(True)))
+            touched = _finding_scan(
+                spark, table_dir, manifest, candidates,
+                lambda c: c.where(F.expr(where)),
+            )
         else:
-            kept = sub.join(keys_d, on=key_cols, how="left_anti")
-    return _cow_commit(
-        table_dir, kept, base, op, expect_version, bloom_for, manifest,
-        touched,
-    )
+            # no broadcast hint: erasure lists are usually tiny and AQE
+            # broadcasts them at runtime, but a bulk purge list may not
+            # be — forcing broadcast would OOM the executors
+            touched = _finding_scan(
+                spark, table_dir, manifest, candidates,
+                lambda c: c.join(keys_d, on=key_cols, how="left_semi"),
+            )
+        kept = None
+        if touched:
+            sub = _read_file_subset(spark, table_dir, manifest, touched)
+            if where is not None:
+                # DELETE removes rows where the predicate is TRUE; FALSE
+                # and NULL both keep (coalesce supplies the NULL arm)
+                kept = sub.where(F.coalesce(~F.expr(where), F.lit(True)))
+            else:
+                kept = sub.join(keys_d, on=key_cols, how="left_anti")
+        return _cow_commit(
+            table_dir, kept, base, op, expect_version, bloom_for, manifest,
+            touched,
+        )
 
 
 def update_snapshot(
@@ -1409,8 +1476,8 @@ def update_snapshot(
     table_types: dict = {}
 
     def matching(cand: DataFrame) -> DataFrame:
-        # SET targets are checked against the table's merged schema
-        # before the scan runs
+        # SET targets are checked against the table's schema before
+        # the scan runs
         table_types.update(
             (f.name, f.dataType) for f in cand.drop("_src_file").schema
         )
@@ -1423,12 +1490,16 @@ def update_snapshot(
             )
         return cand.where(F.expr(where))
 
-    touched = _finding_scan(spark, table_dir, manifest["files"], matching)
+    touched = _finding_scan(
+        spark, table_dir, manifest, manifest["files"], matching
+    )
     updated = None
     if touched:
-        sub = _read_file_subset(spark, table_dir, touched)
-        # Schema evolution: a set target can be absent from every
-        # TOUCHED file even though the table (mergeSchema over all
+        sub = _read_file_subset(spark, table_dir, manifest, touched)
+        # Schema evolution: under a recorded schema the subset read
+        # has every column of the table. A manifest without one reads
+        # the touched files' own merged schema, where a set target can
+        # be absent even though the table (mergeSchema over all
         # candidates) has it — e.g. the matching rows live in a file
         # written before a schema-widening merge. Materialize such
         # columns as typed NULLs first, so the assignment applies
@@ -1848,7 +1919,7 @@ def compact(
         # nothing below the threshold writes nothing but still commits
         # (stamped), so an idempotent maintenance job observes its tick
         df = (
-            _read_file_subset(spark, table_dir, touched)
+            _read_file_subset(spark, table_dir, manifest, touched)
             if touched
             else None
         )
@@ -2454,24 +2525,54 @@ def vacuum(table_dir: str, keep_versions: int = 2) -> list[str]:
 
 
 def _read_file_subset(
-    spark: SparkSession,
-    table_dir: str,
-    files: list[str],
-    all_files: list[str] = (),
+    spark: SparkSession, table_dir: str, manifest: dict, files: list[str]
 ) -> DataFrame:
-    """Read an explicit manifest file subset (mergeSchema). An empty
-    subset still plans over ``all_files`` under ``1=0`` so the
-    version's merged schema survives with zero row groups read."""
-    df = spark.read.option("mergeSchema", "true").parquet(
-        *(os.path.join(table_dir, f) for f in files or all_files)
+    """Read ``files``, a subset of ``manifest``'s, under the version's
+    schema recorded at commit, so no Spark job infers it from the
+    files; a file that lacks a column reads NULL there. A manifest
+    without a record (written before schemas were recorded, or whose
+    files disagree on a column's type) falls back to a mergeSchema
+    read of the subset. An empty subset still plans over all the
+    version's files under ``1=0``: the version's schema survives and,
+    once no inference is needed, the optimizer answers it without a
+    job."""
+    paths = [os.path.join(table_dir, f) for f in files or manifest["files"]]
+    if not paths:
+        raise ValueError(
+            f"v{manifest['version']} of {table_dir} lists no files"
+        )
+    schema = manifest.get("schema")
+    reader = (
+        spark.read.option("mergeSchema", "true")
+        if schema is None
+        else spark.read.schema(StructType.fromJson(schema))
     )
+    df = reader.parquet(*paths)
     return df if files else df.where("1 = 0")
 
 
+@contextlib.contextmanager
+def materialized(df: DataFrame):
+    """``df`` computed once for every read inside the block: an eager
+    ``localCheckpoint``, so each later job reads the same rows, even
+    when ``df``'s plan is not deterministic (a re-read external
+    source, a sample, a limit), and never re-runs that plan. Eager,
+    not ``persist()``: the checkpoint job runs adaptive execution
+    first, so a shuffle output keeps its coalesced partitions rather
+    than all of ``spark.sql.shuffle.partitions``. The checkpoint's
+    blocks are released when the block exits; nothing may read the
+    yielded frame after that."""
+    cp = df.localCheckpoint(eager=True)
+    try:
+        yield cp
+    finally:
+        cp._jdf.logicalPlan().rdd().unpersist(False)
+
+
 def _align_columns(a: DataFrame, b: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Add NULL columns for fields present on one side only — the
-    values a mergeSchema read would produce for files that predate a
-    schema-evolving commit, so a subset read diffs like a full read."""
+    """Add NULL columns for fields present on one side only, as a read
+    of files that predate a schema-evolving commit yields, so two
+    versions with different schemas diff like one full read."""
     from pyspark.sql import functions as F
 
     for name, dtype in b.dtypes:
@@ -2553,16 +2654,12 @@ def snapshot_diff(
         m_new = _read_manifest(table_dir, to_version)
         shared = set(m_old["files"]) & set(m_new["files"])
         old = _read_file_subset(
-            spark,
-            table_dir,
+            spark, table_dir, m_old,
             [f for f in m_old["files"] if f not in shared],
-            m_old["files"],
         )
         new = _read_file_subset(
-            spark,
-            table_dir,
+            spark, table_dir, m_new,
             [f for f in m_new["files"] if f not in shared],
-            m_new["files"],
         )
     else:
         old = read_snapshot(spark, table_dir, version=from_version)
