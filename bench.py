@@ -68,9 +68,25 @@ def _sf_from_dir(sf_dir: str) -> float:
         return -1.0
 
 
-def materialize(df) -> None:
-    """Run the full plan without collecting rows to the driver."""
+def cold_run(spark, build, sf_dir: str = SF_DIR) -> float:
+    """One cold end-to-end execution of ``build(spark, sf_dir)``, in
+    seconds: clear the plan-literal memo (tiling's cutoff literals,
+    keyed on input-file fingerprints — the one results-bearing process
+    memo; sources/tables._ROW_GROUP_CACHE holds parquet-footer
+    metadata only and stays), then time construction (eager
+    localCheckpoint lattices and tiling/classifier plan-build jobs run
+    there) plus a full ``noop`` write, which runs the whole plan
+    without collecting rows to the driver. The DataFrame is dropped
+    before returning so its checkpoint blocks can be released."""
+    from ensembl_lakehouse_spark.operators import tiling
+
+    tiling._LITERAL_CACHE.clear()
+    start = time.perf_counter()
+    df = build(spark, sf_dir)
     df.write.format("noop").mode("overwrite").save()
+    elapsed = time.perf_counter() - start
+    del df
+    return elapsed
 
 
 def main() -> int:
@@ -100,44 +116,17 @@ def main() -> int:
 
     import gc
 
-    from ensembl_lakehouse_spark.operators import tiling as _tiling
-
-    def _reset_plan_memos() -> None:
-        # The one results-bearing process memo: tiling's cutoff
-        # literals (keyed on input-file fingerprints). Cleared before
-        # every timed repeat so the boundary jobs that run at
-        # plan-build time are INSIDE the measurement — each repeat is
-        # a genuinely cold execution. (sources/tables._ROW_GROUP_CACHE
-        # is parquet-footer metadata only, not results; it stays.)
-        _tiling._LITERAL_CACHE.clear()
-
     for name, fn in queries.items():
         if only and name not in only:
             continue
         if warmup:
             # Untimed warm-up: primes JIT/code-cache/parquet footers,
-            # never the plan memos (cleared again before each repeat).
-            _reset_plan_memos()
-            df = fn(spark, SF_DIR)
-            materialize(df)
-            del df
-        runs = []
-        for _ in range(repeats):
-            # Each repeat rebuilds the DataFrame inside the timed
-            # region (r11 VERDICT #1): eager localCheckpoint lattices
-            # and tiling/classifier plan-build jobs execute during
-            # fn(), so excluding construction measured stub reads for
-            # ~50 operators. perf_counter now brackets construction +
-            # plan-build jobs + full noop materialization.
-            _reset_plan_memos()
-            start = time.perf_counter()
-            df = fn(spark, SF_DIR)
-            materialize(df)
-            runs.append(time.perf_counter() - start)
-            # Drop the plan's references between repeats (untimed) so
-            # each repeat's checkpoint blocks are released rather than
-            # accumulating 5x within a query.
-            del df
+            # never the plan memos (cold_run clears them each time).
+            cold_run(spark, fn)
+        # Each repeat rebuilds the DataFrame inside the timed region,
+        # so plan-build jobs are priced, and drops it afterwards so
+        # checkpoint blocks do not accumulate across repeats.
+        runs = [cold_run(spark, fn) for _ in range(repeats)]
         timings[name] = round(min(runs), 4)
         spread[name] = round(max(runs) - min(runs), 4)
         # Outside the timed region: make the ContextCleaner release

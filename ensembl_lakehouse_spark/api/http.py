@@ -110,8 +110,8 @@ def make_handler(engine: Engine):
                 self._submit(parts[1], parts[2], q)
             elif parts == ["sql", "explain"]:
                 # EXT: EXPLAIN for the raw-SQL surface — formatted
-                # physical plan + the structural summary PLANS.md
-                # records (shuffles/broadcasts/joins/PushedFilters);
+                # physical plan + its structural summary
+                # (shuffles/broadcasts/joins/PushedFilters);
                 # same validation as /sql, nothing executes
                 if "query" not in q:
                     self._detail(400, "missing query parameter")

@@ -30,6 +30,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ensembl_lakehouse_spark import snapshots as SN
+from ensembl_lakehouse_spark.functions.hashing import spark_md5_long31
 
 #: Stamp format shared by writer and resumer.
 _STAMP = "backfill:chunk={i}/{n}"
@@ -40,11 +41,8 @@ def _chunk_predicate(key_col: str, i: int, n_chunks: int) -> F.Column:
     ``n_chunks`` — md5-derived so it is stable across runs/engines
     and uniform regardless of key distribution (a naive modulo on a
     skewed business key would make chunk sizes lopsided)."""
-    bucket = F.expr(
-        f"CAST(conv(substring(md5(CAST({key_col} AS STRING)), 1, 8), 16, 10)"
-        f" AS BIGINT) % 2147483647 % {n_chunks}"
-    )
-    return bucket == i
+    h = spark_md5_long31(f"CAST({key_col} AS STRING)")
+    return F.expr(f"{h} % {n_chunks}") == i
 
 
 def completed_chunks(table_dir: str, n_chunks: int) -> set[int]:

@@ -41,6 +41,19 @@ from ensembl_lakehouse_spark.service.preview import preview as _preview
 from ensembl_lakehouse_spark.service.urls import UrlSigner
 
 
+def _read_pin(table_dir: str, pinned: int | None = None) -> int | None:
+    """The version a consumer read of ``table_dir`` pins: an explicit
+    ``snap_versions`` pin when given, else the PUBLISHED version, else
+    the current one — the write-audit-publish contract that keeps
+    staged rows out of /sql and /aggregate."""
+    from ensembl_lakehouse_spark import snapshots as _SN
+
+    if pinned is not None:
+        return pinned
+    v = _SN.published_version(table_dir)
+    return v if v is not None else _SN.current_version(table_dir)
+
+
 def _proven_non_null(table_dir: str, pin_v: int | None) -> dict[str, int]:
     """Columns proven non-NULL at the pinned version → the
     ``since_version`` of the proving constraint: a write-enforced
@@ -424,12 +437,7 @@ class Engine:
                 "snapshot table",
             }
         table_dir = self._snapshot_tables[intent.table]
-        if intent.table in pins:
-            pin_v = pins[intent.table]
-        else:
-            pin_v = _SN.published_version(table_dir)
-            if pin_v is None:
-                pin_v = _SN.current_version(table_dir)
+        pin_v = _read_pin(table_dir, pins.get(intent.table))
         try:
             schema = _SN.read_snapshot(
                 self.spark, table_dir, version=pin_v
@@ -541,14 +549,7 @@ class Engine:
                     "table",
                 }
         fact_dir = self._snapshot_tables[intent.table]
-
-        def _pin(tname: str, tdir: str):
-            if tname in pins:
-                return pins[tname]
-            v = _SN.published_version(tdir)
-            return v if v is not None else _SN.current_version(tdir)
-
-        fact_pin = _pin(intent.table, fact_dir)
+        fact_pin = _read_pin(fact_dir, pins.get(intent.table))
         dims = []
         try:
             fact_schema = _SN.read_snapshot(
@@ -558,7 +559,7 @@ class Engine:
             dim_uniques = []
             for j in intent.joins:
                 ddir = self._snapshot_tables[j.dim]
-                dpin = _pin(j.dim, ddir)
+                dpin = _read_pin(ddir, pins.get(j.dim))
                 dim_schemas.append(
                     _SN.read_snapshot(
                         self.spark, ddir, version=dpin
@@ -632,10 +633,10 @@ class Engine:
         freshness: str = "strict",
     ) -> dict:
         """EXPLAIN for the raw-SQL surface: the formatted physical
-        plan plus the structural summary PLANS.md records (shuffle /
-        broadcast / scan counts, join strategies, PushedFilters,
-        ReadSchema) — the plan-discipline story, served over the
-        wire. Validation is identical to submit_sql (read-only
+        plan plus its structural summary (plans.explain.summarize:
+        shuffle / broadcast / scan counts, join strategies,
+        PushedFilters, ReadSchema) — the plan-discipline story, served
+        over the wire. Validation is identical to submit_sql (read-only
         parse-root gate, snap_versions pins), but nothing executes:
         the plan shown is the pre-execution one (with AQE, the
         runtime may still re-plan exchanges at execution).
@@ -835,6 +836,15 @@ class Engine:
             )
         self._snapshot_tables[name] = table_dir
 
+    def _table_dir(self, name: str) -> str:
+        """A registered snapshot table's directory; an unknown name is
+        a validation error (400 on the wire)."""
+        if name not in self._snapshot_tables:
+            raise QueryValidationError(
+                f"unknown table {name!r}; see /table for names"
+            )
+        return self._snapshot_tables[name]
+
     def snapshot_table_names(self) -> list[str]:
         return sorted(self._snapshot_tables)
 
@@ -843,11 +853,7 @@ class Engine:
         HISTORY surface a mirror uses to pick from/to versions)."""
         from ensembl_lakehouse_spark import snapshots as _SN
 
-        if name not in self._snapshot_tables:
-            raise QueryValidationError(
-                f"unknown table {name!r}; see /table for names"
-            )
-        return _SN.history(self._snapshot_tables[name])
+        return _SN.history(self._table_dir(name))
 
     def table_rollups_report(self, name: str) -> list[dict]:
         """Freshness dashboard for every rollup registered against
@@ -862,14 +868,8 @@ class Engine:
         from ensembl_lakehouse_spark import snapshots as _SN
         from ensembl_lakehouse_spark.plans import rewrite as _RW
 
-        if name not in self._snapshot_tables:
-            raise QueryValidationError(
-                f"unknown table {name!r}; see /table for names"
-            )
-        tdir = os.path.abspath(self._snapshot_tables[name])
-        pin_v = _SN.published_version(tdir)
-        if pin_v is None:
-            pin_v = _SN.current_version(tdir)
+        tdir = os.path.abspath(self._table_dir(name))
+        pin_v = _read_pin(tdir)
         out = []
         for spec in self._rollups.specs():
             if spec.source_dir != tdir:
@@ -921,11 +921,7 @@ class Engine:
         from ensembl_lakehouse_spark import ivm as _IVM
         from ensembl_lakehouse_spark import snapshots as _SN
 
-        if name not in self._snapshot_tables:
-            raise QueryValidationError(
-                f"unknown table {name!r}; see /table for names"
-            )
-        tdir = os.path.abspath(self._snapshot_tables[name])
+        tdir = os.path.abspath(self._table_dir(name))
         out = []
         for spec in self._rollups.specs():
             if spec.source_dir != tdir:
@@ -934,10 +930,9 @@ class Engine:
             feed_hist = _SN.history(feed_dir)
             ticks = []
             for rec in _SN.history(spec.rollup_dir):
-                op = rec["op"]
-                if not op.startswith("ivm:src_v"):
+                applied = _IVM._stamp_version(rec["op"])
+                if applied is None:
                     continue
-                applied = int(op.rsplit("v", 1)[1])
                 # the feed's newest commit that existed when this
                 # tick landed (commit wall clock — both ledgers
                 # stamp it)
@@ -979,22 +974,14 @@ class Engine:
         """Tag listing for a registered table (tag -> version)."""
         from ensembl_lakehouse_spark import snapshots as _SN
 
-        if name not in self._snapshot_tables:
-            raise QueryValidationError(
-                f"unknown table {name!r}; see /table for names"
-            )
-        return _SN.list_tags(self._snapshot_tables[name])
+        return _SN.list_tags(self._table_dir(name))
 
     def table_summary(self, name: str) -> dict:
         """One-stop table metadata: current/published versions, tags,
         constraints — what a consumer checks before reading."""
         from ensembl_lakehouse_spark import snapshots as _SN
 
-        if name not in self._snapshot_tables:
-            raise QueryValidationError(
-                f"unknown table {name!r}; see /table for names"
-            )
-        d = self._snapshot_tables[name]
+        d = self._table_dir(name)
         return {
             "name": name,
             "current_version": _SN.current_version(d),
@@ -1011,13 +998,10 @@ class Engine:
         ``keep_versions`` would drop. Read-only."""
         from ensembl_lakehouse_spark import snapshots as _SN
 
-        if name not in self._snapshot_tables:
-            raise QueryValidationError(
-                f"unknown table {name!r}; see /table for names"
-            )
+        d = self._table_dir(name)
         if not isinstance(keep_versions, int) or keep_versions < 1:
             raise QueryValidationError("keep_versions must be >= 1")
-        return _SN.vacuum_plan(self._snapshot_tables[name], keep_versions)
+        return _SN.vacuum_plan(d, keep_versions)
 
     def table_maintenance_report(
         self,
@@ -1084,11 +1068,7 @@ class Engine:
         """
         from ensembl_lakehouse_spark import snapshots as _SN
 
-        if name not in self._snapshot_tables:
-            raise QueryValidationError(
-                f"unknown table {name!r}; see /table for names"
-            )
-        table_dir = self._snapshot_tables[name]
+        table_dir = self._table_dir(name)
         retained = {h["version"] for h in _SN.history(table_dir)}
         if to_version is None:
             to_version = _SN.current_version(table_dir)
@@ -1231,14 +1211,10 @@ class Engine:
         serves ``GROUP BY date_trunc('day', ts)``-style statements
         from this view. Operator-side only, like table
         registration."""
-        if table_name not in self._snapshot_tables:
-            raise QueryValidationError(
-                f"unknown table {table_name!r}; register it first"
-            )
         self._rollups.register(
             rollup_name,
             rollup_dir,
-            self._snapshot_tables[table_name],
+            self._table_dir(table_name),
             group_cols,
             sum_col,
             parent_dir=parent_dir,
@@ -1253,10 +1229,7 @@ class Engine:
         /analytics/{name}/params parity): every accepted parameter
         with its value grammar, including the range-typing rule the
         400 on ambiguous ``lo..hi`` input points at."""
-        if name not in self._snapshot_tables:
-            raise QueryValidationError(
-                f"unknown table {name!r}; see /table for names"
-            )
+        self._table_dir(name)
         return {
             "group_by": "comma list of table columns",
             "aggs": (
@@ -1345,10 +1318,7 @@ class Engine:
         from ensembl_lakehouse_spark import snapshots as _SN
         from ensembl_lakehouse_spark.plans import rewrite as _RW
 
-        if name not in self._snapshot_tables:
-            raise QueryValidationError(
-                f"unknown table {name!r}; see /table for names"
-            )
+        table_dir = self._table_dir(name)
         group_cols = [g.strip() for g in group_by.split(",") if g.strip()]
         agg_spec: dict[str, tuple[str, str]] = {}
         for item in aggs.split(","):
@@ -1563,10 +1533,7 @@ class Engine:
                 except ValueError:
                     lit = val
             having_terms.append((out, _HAVING_OPS[op], lit))
-        table_dir = self._snapshot_tables[name]
-        pin_v = _SN.published_version(table_dir)
-        if pin_v is None:
-            pin_v = _SN.current_version(table_dir)
+        pin_v = _read_pin(table_dir)
         # the bare lo..hi form is positional, so on a STRING column it
         # is ambiguous — 'period:2024..2025' could be a BETWEEN or one
         # literal that contains dots. Range-parse only range-TYPED

@@ -219,6 +219,14 @@ def _bucket_commit(
         f.write(stamp)
 
 
+def _stamp_version(op: str) -> int | None:
+    """The feed version an ``ivm:src_v{V}`` op stamp applied, or None
+    for any other op — the one parser of the stamp format."""
+    if not op.startswith("ivm:src_v"):
+        return None
+    return int(op.rsplit("v", 1)[1])
+
+
 def _applied_versions(rollup_dir: str) -> list[int]:
     """Applied source versions in APPLICATION order (raw ``_txns``
     log order), not numeric order. The distinction matters after a
@@ -228,11 +236,10 @@ def _applied_versions(rollup_dir: str) -> list[int]:
     tick would recompute and re-apply the same delta, corrupting the
     rollup unboundedly (r4 ADVICE). Log order makes the latest stamp
     the actual last-applied state, so the noop check holds."""
-    return [
-        int(op.rsplit("v", 1)[1])
-        for _, op in SN.committed_op_records(rollup_dir)
-        if op.startswith("ivm:src_v")
-    ]
+    stamped = (
+        _stamp_version(op) for _, op in SN.committed_op_records(rollup_dir)
+    )
+    return [v for v in stamped if v is not None]
 
 
 def read_rollup(

@@ -409,8 +409,8 @@ def basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (n_baskets, supp, both self-join sides) and pairs feeds both
     # directions of the rule union — uncheckpointed, the executed plan
     # ran the scan + distinct + basket-size window subtree 6× and the
-    # entire pair self-join + top-N twice (14 parquet scans,
-    # plans/r11/basket_rules_before.txt). Each lattice now computes
+    # entire pair self-join + top-N twice (14 parquet scans in the
+    # executed plan). Each lattice now computes
     # once; pairs is ≤RULES_TOP_N rows, so its checkpoint is free.
     kept = capped_basket_items(spark, sf_dir, BASKET_MAX_ITEMS).localCheckpoint()
     n_baskets = kept.agg(

@@ -673,8 +673,8 @@ def fuzzy_match_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = load_table(spark, sf_dir, "part").select("p_partkey", "p_name")
     # localCheckpoint (r11, guide §3.3): the distinct-name lattice
     # feeds both sides of the banded self-join — uncheckpointed, each
-    # side re-ran the scan + distinct (4 parquet scans in
-    # plans/r11/fuzzy_match_names_before.txt).
+    # side re-ran the scan + distinct (4 parquet scans in the
+    # executed plan).
     names = parts.select("p_name").distinct().select(
         "p_name",
         F.element_at(F.split("p_name", " "), -1).alias("block"),
@@ -1348,7 +1348,7 @@ def doc_jaccard_knn(
     # df_ok AND kept; kept feeds sizes AND both posting-join sides;
     # inter feeds both directions of the neighbor union —
     # uncheckpointed, the executed plan re-ran tokenize + explode +
-    # distinct EIGHTEEN times (plans/r11/doc_jaccard_knn_before.txt).
+    # distinct EIGHTEEN times.
     # Each lattice now materializes exactly once; all three are
     # row-bounded (distinct doc-term pairs, the df-capped projection,
     # and the posting-join pair aggregate). eager=False (r12 sweep):

@@ -3607,7 +3607,7 @@ def sketch_kmv_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoints (r11, guide §3.3): cells feeds the rank
     # window, the exact counts AND both exact-intersection sides —
     # uncheckpointed, the scan + distinct + md5 subtree ran 5× (10
-    # parquet scans in plans/r11/sketch_kmv_union plan). The bottom-k
+    # parquet scans in the executed plan). The bottom-k
     # survivor set additionally feeds the pair merge twice and the
     # kth extraction — materializing it (≤ k·|types| rows, free)
     # keeps the rank window single-run too.

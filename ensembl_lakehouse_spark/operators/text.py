@@ -928,7 +928,7 @@ def cooccur_pmi(
     ).distinct()
     # localCheckpoint (r11, guide §3.3): those same 4 references each
     # re-ran the tokenize + explode + distinct + per-doc-cap window
-    # subtree (5 parquet scans in plans/r11/cooccur_pmi_before.txt);
+    # subtree (5 parquet scans in the executed plan);
     # the ≤|docs|·cap lattice now materializes once and keeps its
     # doc_id partitioning for the self-join. eager=False (r12
     # sweep): lazy defers the final stage + block write into the
@@ -1032,7 +1032,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # localCheckpoint (r11, guide §3.3): the gram lattice feeds the
     # corpus-DF aggregate AND the per-doc join probe —
     # uncheckpointed, tokenize + shingle-explode ran twice (3 parquet
-    # scans in plans/r11/ngram_novelty_before.txt).
+    # scans in the executed plan).
     lattice = docs.select(
         "doc_id",
         F.explode(word_shingles("toks", NOVELTY_N)).alias("shingle"),
@@ -1735,8 +1735,8 @@ def lang_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = _docs_with_tokens(spark, sf_dir, spread=False)
     # localCheckpoint (r11, guide §3.3): the (lang, tok) lattice feeds
     # sizes AND both self-join sides — uncheckpointed, tokenize +
-    # explode + distinct ran three times (4 parquet scans in
-    # plans/r11/lang_vocab_overlap_before.txt).
+    # explode + distinct ran three times (4 parquet scans in the
+    # executed plan).
     vocab = (
         toks.select("lang", F.explode("toks").alias("tok")).distinct()
     ).localCheckpoint()
@@ -2540,8 +2540,7 @@ def cross_source_exact_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         # localCheckpoint (r11, guide §3.3): each tier's distinct
         # (source, fingerprint) lattice feeds both self-join sides —
         # uncheckpointed, the scan + md5/prefix + distinct ran twice
-        # per tier (4 parquet scans in
-        # plans/r11/cross_source_exact_dups plan).
+        # per tier (4 parquet scans in the executed plan).
         d = docs.select("source", fp_col.alias("h")).distinct().localCheckpoint()
         a = d.select(F.col("source").alias("source_a"), "h")
         b = d.select(F.col("source").alias("source_b"), "h")

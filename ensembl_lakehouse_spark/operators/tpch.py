@@ -581,7 +581,7 @@ def min_price_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # localCheckpoint (r11, guide §3.3): quotes feeds best AND the
     # join-back — uncheckpointed, the fact scan + pair agg ran twice
-    # (5 parquet scans in plans/r11/min_price_supplier_before.txt).
+    # (5 parquet scans in the executed plan).
     # The |catalog-pairs| lattice materializes once.
     quotes = li.groupBy("l_partkey", "l_suppkey").agg(
         F.min(_dec("l_extendedprice")).alias("quote_d")

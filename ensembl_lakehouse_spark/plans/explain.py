@@ -1,8 +1,8 @@
 """Formatted-physical-plan capture + structural summary — the
-".explain() and iterate" loop as a library, shared by the PLANS.md
-audit (tools/explain_audit.py) and the HTTP EXPLAIN surface
-(GET /sql/explain, GET /analytics/{name}/plan). One parser means
-the wire response and the committed plan evidence can never count
+".explain() and iterate" loop as a library, shared by the HTTP
+EXPLAIN surface (GET /sql/explain, GET /analytics/{name}/plan) and
+the plan-shape budgets in tests/test_plan_discipline.py. One parser
+means the wire response and the pinned budgets can never count
 shuffles differently.
 
 The summary reports the structural facts a reviewer checks by hand:

@@ -284,10 +284,8 @@ def _represented_base_version(chain: list[str]) -> int | None:
         )
         if created_at is None:
             return None
-        stamp = None
-        for _, op in recs[: created_at + 1]:
-            if op.startswith("ivm:src_v"):
-                stamp = int(op.rsplit("v", 1)[1])
+        stamps = [ivm._stamp_version(op) for _, op in recs[: created_at + 1]]
+        stamp = next((s for s in reversed(stamps) if s is not None), None)
         if stamp is None:
             return None
         v = stamp

@@ -1673,6 +1673,32 @@ def rename_column(
     )
 
 
+def _txns_records(table_dir: str) -> list[tuple[int, str]] | None:
+    """The ``_txns`` log's (version, op) records in file (application)
+    order, or None when the table has no log. Blank lines and a torn
+    tail from a crashed append are skipped; a ``compact_txns`` summary
+    record is unfolded in place (its entries keep application order,
+    last occurrence per op)."""
+    txns = _txns_path(table_dir)
+    if not os.path.exists(txns):
+        return None
+    records: list[tuple[int, str]] = []
+    with open(txns) as f:
+        for line in f:
+            line = line.strip()
+            if not line:
+                continue
+            try:
+                rec = json.loads(line)
+            except ValueError:
+                continue
+            if rec.get("compacted"):
+                records.extend((v, op) for v, op in rec["records"])
+            else:
+                records.append((rec["version"], rec["op"]))
+    return records
+
+
 def committed_op_records(table_dir: str) -> list[tuple[int, str]]:
     """(version, op) records in APPLICATION order — the order commits
     actually happened, NOT numeric version order.
@@ -1687,29 +1713,8 @@ def committed_op_records(table_dir: str) -> list[tuple[int, str]]:
     file (append) order; manifest-only versions (pre-log tables, or
     the rare crash between pointer swap and log append) are merged in
     at their version position relative to logged versions."""
-    logged: list[tuple[int, str]] = []
-    seen: set[int] = set()
-    txns = _txns_path(table_dir)
-    if os.path.exists(txns):
-        with open(txns) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue  # torn tail from a crashed append
-                if rec.get("compacted"):
-                    # compact_txns folds an old prefix into one
-                    # summary record; its entries keep application
-                    # order (last occurrence per op)
-                    for v, op in rec["records"]:
-                        logged.append((v, op))
-                        seen.add(v)
-                    continue
-                logged.append((rec["version"], rec["op"]))
-                seen.add(rec["version"])
+    logged = _txns_records(table_dir) or []
+    seen = {v for v, _ in logged}
     unlogged = sorted(
         (h["version"], h["op"]) for h in history(table_dir)
         if h["version"] not in seen
@@ -1754,23 +1759,9 @@ def _txns_records_and_cut(table_dir: str):
     (version, op) record list (summary line unfolded) and the length
     of the maximal prefix whose versions all predate the oldest
     retained manifest. (None, 0) when no log exists."""
-    txns = _txns_path(table_dir)
-    if not os.path.exists(txns):
+    records = _txns_records(table_dir)
+    if records is None:
         return None, 0
-    records: list[tuple[int, str]] = []
-    with open(txns) as f:
-        for line in f:
-            line = line.strip()
-            if not line:
-                continue
-            try:
-                rec = json.loads(line)
-            except ValueError:
-                continue
-            if rec.get("compacted"):
-                records.extend((v, op) for v, op in rec["records"])
-            else:
-                records.append((rec["version"], rec["op"]))
     mdir = _manifest_dir(table_dir)
     retained = (
         {

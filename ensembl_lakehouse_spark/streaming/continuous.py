@@ -22,24 +22,23 @@ MERGE, an RDBMS, a KV store) — |open windows| rows per batch, not
 
 - ``run_continuous_rollup``: in-memory dict view — the bounded test
   harness stand-in (|hours|x|event_types| keys by construction).
-- ``run_continuous_rollup_table``: a durable parquet-table sink with
-  MERGE semantics via *append + latest-wins read*: each batch appends
-  its update rows stamped with ``batch_id``; the view resolves each
-  key to the row from the highest batch. Appends are new-files-only
-  (no read-modify-write hazard on an object store), and a replayed
-  batch re-appends identical rows under the same batch_id, so replay
-  is idempotent at read time — the same reasoning Delta's MERGE gives
-  you transactionally. ``compact_rollup_table`` folds the log back to
-  one row per key, exactly the OPTIMIZE step a production table runs.
+- ``run_continuous_rollup_snapshots``: the durable sink. Each
+  micro-batch is one stamped MERGE commit into a snapshot-versioned
+  table (snapshots.py), and a replayed batch id is skipped — Delta's
+  streaming-sink transaction on plain parquet. Read the rollup with
+  ``snapshots.read_snapshot``.
 """
 
 from __future__ import annotations
 
-import os
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
-from ensembl_lakehouse_spark.streaming.events import WATERMARK_DELAY, _event_source
+from ensembl_lakehouse_spark.streaming.events import (
+    WATERMARK_DELAY,
+    _event_source,
+    _max_files_option,
+    _run_available_now,
+)
 
 
 def hourly_rollup_updates(
@@ -86,15 +85,14 @@ def run_continuous_rollup(
     the final-equality halves of that claim).
     """
     view = {} if view is None else view
-    batches = {"n": 0}
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        batches["n"] += 1
         # Bounded by construction: |hours| x |event_types| keys — the
-        # production form of this sink is run_continuous_rollup_table/
-        # _snapshots. The cap turns a silently unbounded driver
-        # collect (if a caller ever points this demo sink at a
-        # non-rollup stream) into a loud error instead of an OOM.
+        # production form of this sink is
+        # run_continuous_rollup_snapshots. The cap turns a silently
+        # unbounded driver collect (if a caller ever points this demo
+        # sink at a non-rollup stream) into a loud error instead of
+        # an OOM.
         rows = batch_df.limit(_DICT_SINK_CAP + 1).collect()
         if len(rows) > _DICT_SINK_CAP:
             raise RuntimeError(
@@ -108,8 +106,7 @@ def run_continuous_rollup(
     n_batches, n_input = _drive(
         spark, events_dir, upsert, max_files_per_trigger, checkpoint_dir
     )
-    batches["n"] = n_batches
-    return view, batches["n"], n_input
+    return view, n_batches, n_input
 
 
 def _drive(
@@ -133,82 +130,19 @@ def _drive(
         batches["n"] += 1
         sink(batch_df, batch_id)
 
-    opts = (
-        {"maxFilesPerTrigger": str(max_files_per_trigger)}
-        if max_files_per_trigger is not None
-        else {}
-    )
     spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "100000")
-    writer = (
-        hourly_rollup_updates(spark, events_dir, **opts)
-        .writeStream.outputMode("update")
-        .foreachBatch(counted)
-        .trigger(availableNow=True)
+    updates = hourly_rollup_updates(
+        spark, events_dir, **_max_files_option(max_files_per_trigger)
     )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
+    q = _run_available_now(updates, "update", counted, checkpoint_dir)
     n_input = sum(int(p["numInputRows"]) for p in q.recentProgress)
     return batches["n"], n_input
 
-
-# ---------------------------------------------------------------------------
-# Durable table sink (the production form of the dict view)
-# ---------------------------------------------------------------------------
 
 ROLLUP_KEYS = ("hour", "event_type")
 
 #: Safety bound for the in-memory dict demo sink (run_continuous_rollup).
 _DICT_SINK_CAP = 100_000
-
-
-def run_continuous_rollup_table(
-    spark: SparkSession,
-    events_dir: str,
-    table_dir: str,
-    max_files_per_trigger: int | None = None,
-    checkpoint_dir: str | None = None,
-) -> tuple[int, int]:
-    """Continuous rollup into a durable parquet table with MERGE
-    semantics; returns (n_batches, n_input_rows).
-
-    The sink APPENDS each update batch stamped with its ``batch_id``
-    instead of rewriting the table: append is new-files-only (safe on
-    object stores, no read-while-overwrite), and the reader
-    (``rollup_table_view``) resolves each (hour, event_type) to its
-    highest-batch row — last-write-wins, i.e. MERGE at read time.
-    A replayed micro-batch after a crash re-appends byte-identical
-    rows under the same batch_id, so the view is unchanged:
-    effectively-exactly-once without a transaction log. On a Delta/
-    Iceberg deployment the same foreachBatch body becomes
-    ``MERGE INTO rollup USING batch ON keys WHEN MATCHED UPDATE ...``
-    and the read-time resolution disappears."""
-
-    def append_updates(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("append")
-            .parquet(table_dir)
-        )
-
-    return _drive(spark, events_dir, append_updates, max_files_per_trigger, checkpoint_dir)
-
-
-def rollup_table_view(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Current state of the rollup table: latest row per key.
-
-    One window over the append log — at scale the log stays shallow
-    because ``compact_rollup_table`` folds it (and the watermark stops
-    closed windows from being re-emitted, so only recent hours ever
-    accumulate versions)."""
-    log = spark.read.parquet(table_dir)
-    w = Window.partitionBy(*ROLLUP_KEYS).orderBy(F.col("batch_id").desc())
-    return (
-        log.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .drop("rn", "batch_id")
-    )
 
 
 def run_continuous_rollup_snapshots(
@@ -222,11 +156,10 @@ def run_continuous_rollup_snapshots(
     into a snapshot-versioned table (snapshots.py); returns
     (n_batches, n_input_rows).
 
-    This is the transactional upgrade of run_continuous_rollup_table:
-    instead of append + last-write-wins-at-read, every micro-batch is
-    one atomic copy-on-write merge commit keyed by ROLLUP_KEYS, so
-    readers always see a complete consistent rollup (and can time
-    travel across batch boundaries). Exactly-once comes from the
+    This is the durable form of run_continuous_rollup's dict view:
+    every micro-batch is one atomic copy-on-write merge commit keyed
+    by ROLLUP_KEYS, so readers always see a complete consistent
+    rollup (and can time travel across batch boundaries). Exactly-once comes from the
     manifest op stamp: the sink writes ``stream-merge:batch={id}``
     and SKIPS any batch id already committed — a foreachBatch retry
     after a crash between commit and checkpoint advance becomes a
@@ -265,33 +198,3 @@ def run_continuous_rollup_snapshots(
         committed.add(stamp)
 
     return _drive(spark, events_dir, merge_batch, max_files_per_trigger, checkpoint_dir)
-
-
-def snapshot_rollup_view(spark: SparkSession, table_dir: str) -> DataFrame:
-    """Current rollup state — the snapshot read itself (merge
-    resolved state at WRITE time; no read-time window needed, unlike
-    rollup_table_view's append log)."""
-    from ensembl_lakehouse_spark import snapshots as SN
-
-    return SN.read_snapshot(spark, table_dir)
-
-
-def compact_rollup_table(spark: SparkSession, table_dir: str) -> None:
-    """Fold the append log to one row per key (the OPTIMIZE step).
-
-    Writes the resolved view to a sibling directory, then swaps it in
-    with two renames — the closest to atomic a plain filesystem
-    offers; a transactional table format makes this a real commit."""
-    import shutil
-
-    staged = table_dir.rstrip("/") + "__compact"
-    old = table_dir.rstrip("/") + "__old"
-    (
-        rollup_table_view(spark, table_dir)
-        .withColumn("batch_id", F.lit(-1))
-        .write.mode("overwrite")
-        .parquet(staged)
-    )
-    os.rename(table_dir, old)
-    os.rename(staged, table_dir)
-    shutil.rmtree(old)

@@ -26,7 +26,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ensembl_lakehouse_spark.streaming.events import WATERMARK_DELAY, _event_source
+from ensembl_lakehouse_spark.streaming.events import (
+    WATERMARK_DELAY,
+    _event_source,
+    _run_available_now,
+)
 
 
 def dedup_stream(spark: SparkSession, events_dir: str, redeliver: bool = False) -> DataFrame:
@@ -58,13 +62,7 @@ def run_dedup_to_memory(
     """Run the dedup stream (availableNow, append mode — dedup is a
     row-level operator, so append is the natural output mode) into a
     memory sink and return the result DataFrame."""
-    q = (
-        dedup_stream(spark, events_dir, redeliver=redeliver)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        dedup_stream(spark, events_dir, redeliver=redeliver), "append", table_name
     )
-    q.awaitTermination()
     return spark.table(table_name)

@@ -33,7 +33,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ensembl_lakehouse_spark.sources.tables import load_table
-from ensembl_lakehouse_spark.streaming.events import _event_source, load_events_batch
+from ensembl_lakehouse_spark.streaming.events import (
+    _event_source,
+    _run_available_now,
+    load_events_batch,
+)
 
 
 def _customer_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,13 +94,7 @@ def run_enriched_to_memory(
     sf_dir: str,
     table_name: str = "enriched_stream",
 ) -> DataFrame:
-    q = (
-        enriched_stream(spark, events_dir, sf_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    _run_available_now(
+        enriched_stream(spark, events_dir, sf_dir), "append", table_name
     )
-    q.awaitTermination()
     return spark.table(table_name)

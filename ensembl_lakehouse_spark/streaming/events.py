@@ -39,7 +39,10 @@ Design:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 #: Allowed event-time lateness before window state is finalized.
@@ -77,6 +80,40 @@ def _event_source(spark: SparkSession, events_dir: str, **options: str) -> DataF
     for k, v in options.items():
         reader = reader.option(k, v)
     return as_event_time(reader.parquet(events_dir))
+
+
+def _max_files_option(max_files_per_trigger: int | None) -> dict[str, str]:
+    """Source options that cap each micro-batch at
+    ``max_files_per_trigger`` files (none when it is None)."""
+    if max_files_per_trigger is None:
+        return {}
+    return {"maxFilesPerTrigger": str(max_files_per_trigger)}
+
+
+def _run_available_now(
+    stream: DataFrame,
+    output_mode: str,
+    sink: str | Callable[[DataFrame, int], None],
+    checkpoint_dir: str | None = None,
+) -> StreamingQuery:
+    """Run ``stream`` over every file present with the ``availableNow``
+    trigger and wait for it to finish — the package's one launcher.
+
+    ``sink`` is either a memory-table name (read the result back with
+    ``spark.table(sink)``) or a ``foreachBatch`` function. With a
+    ``checkpoint_dir`` a later run on the same directory resumes from
+    this run's source offsets and operator state. Returns the finished
+    query, whose ``recentProgress`` a caller may read."""
+    writer = stream.writeStream.outputMode(output_mode)
+    if isinstance(sink, str):
+        writer = writer.format("memory").queryName(sink)
+    else:
+        writer = writer.foreachBatch(sink)
+    if checkpoint_dir is not None:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    q = writer.trigger(availableNow=True).start()
+    q.awaitTermination()
+    return q
 
 
 def load_events_batch(spark: SparkSession, events_dir: str) -> DataFrame:
@@ -149,13 +186,5 @@ def run_hourly_to_memory(
     in-memory complete-mode sink and return the result DataFrame.
     This is the test/demo harness; production would writeStream to
     delta/kafka with a processing-time trigger."""
-    q = (
-        hourly_stream(spark, events_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(hourly_stream(spark, events_dir), "complete", table_name)
     return spark.table(table_name)

@@ -37,7 +37,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ensembl_lakehouse_spark import ivm
 from ensembl_lakehouse_spark import snapshots as SN
-from ensembl_lakehouse_spark.streaming.events import _event_source
+from ensembl_lakehouse_spark.streaming.events import (
+    _event_source,
+    _max_files_option,
+    _run_available_now,
+)
 
 _INGEST_STAMP = "stream-ingest:batch={id}"
 
@@ -126,6 +130,60 @@ def _topo_children(
     return ordered
 
 
+def _medallion_batch(
+    spark: SparkSession,
+    source_dir: str,
+    batch_df: DataFrame,
+    batch_id: int,
+    rollups: list[RollupDef],
+    aux: list[AuxRollupDef],
+    chain_order: list[ChildRollupDef],
+    committed: set[str],
+) -> tuple[int, bool, list[tuple[str, str]]]:
+    """One micro-batch of the chain: MERGE the batch into the source
+    under its ingest stamp unless ``committed`` (the source's op
+    stamps, read once per run and extended here per commit) already
+    holds it, then tick the rollups, the aux rollups and the ordered
+    children.
+    Returns (batch rows, whether the merge committed, [(view dir,
+    maintain mode)] in tick order)."""
+    # Rows are counted here, not from recentProgress: a raw
+    # pass-through query's progress entries can over-report
+    # numInputRows (observed 1667 for a 1000-row 3-file availableNow
+    # run). Persisted across the count + merge so the batch's input
+    # files are read once, not once per action.
+    batch_df.persist()
+    try:
+        n_rows = batch_df.count()
+        stamp = _INGEST_STAMP.format(id=batch_id)
+        merged = stamp not in committed
+        if merged:
+            SN.merge_snapshot(
+                spark, source_dir, batch_df, key="event_id", op=stamp
+            )
+            committed.add(stamp)
+    finally:
+        batch_df.unpersist()
+    modes = []
+    for r in rollups:
+        out = ivm.maintain_rollup(
+            spark, source_dir, r.rollup_dir, list(r.group_cols), r.sum_col
+        )
+        modes.append((r.rollup_dir, out["mode"]))
+    for a in aux:
+        out = ivm.maintain_aux_rollup(
+            spark, source_dir, a.rollup_dir, list(a.group_cols), a.col,
+            kind=a.kind,
+        )
+        modes.append((a.rollup_dir, out["mode"]))
+    # children AFTER parents: each hop consumes the CDC the hop below
+    # just committed, so one batch advances the whole lattice
+    # (topologically ordered — declaration order is not load-bearing)
+    for c in chain_order:
+        modes.append((c.child_dir, _tick_child(spark, c)["mode"]))
+    return n_rows, merged, modes
+
+
 def run_stream_ivm(
     spark: SparkSession,
     events_dir: str,
@@ -141,75 +199,33 @@ def run_stream_ivm(
     "source_version", "ticks": [maintain modes per batch]}.
 
     ``checkpoint_dir`` models restarts exactly as
-    run_continuous_rollup does: a second run on the same checkpoint
-    ingests only new files; a REPLAYED batch (crash after commit,
-    before checkpoint advance) is absorbed by the ingest stamp and
-    the maintain ticks noop on the unchanged source version.
+    continuous.run_continuous_rollup_snapshots does: a second run on
+    the same checkpoint ingests only new files; a REPLAYED batch
+    (crash after commit, before checkpoint advance) is absorbed by
+    the ingest stamp and the maintain ticks noop on the unchanged
+    source version.
     """
-    committed = set(SN.committed_ops(source_dir)) if (
-        SN.current_version(source_dir) is not None
-    ) else set()
+    committed = set(SN.committed_ops(source_dir))
     chain_order = _topo_children(children)
     ticks: list[dict] = []
-    batches = {"n": 0, "rows": 0}
+    n_rows = 0
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        batches["n"] += 1
-        # counted here, not from recentProgress: a raw pass-through
-        # query's progress entries can over-report numInputRows
-        # (observed 1667 for a 1000-row 3-file availableNow run).
-        # Persisted across the count + merge so the batch's input
-        # files are read once, not once per action.
-        batch_df.persist()
-        try:
-            batches["rows"] += batch_df.count()
-            stamp = _INGEST_STAMP.format(id=batch_id)
-            if stamp not in committed:
-                SN.merge_snapshot(
-                    spark, source_dir, batch_df, key="event_id", op=stamp
-                )
-                committed.add(stamp)
-        finally:
-            batch_df.unpersist()
-        tick = {"batch_id": batch_id}
-        for r in rollups:
-            out = ivm.maintain_rollup(
-                spark, source_dir, r.rollup_dir, list(r.group_cols),
-                r.sum_col,
-            )
-            tick[r.rollup_dir] = out["mode"]
-        for a in aux or []:
-            out = ivm.maintain_aux_rollup(
-                spark, source_dir, a.rollup_dir, list(a.group_cols),
-                a.col, kind=a.kind,
-            )
-            tick[a.rollup_dir] = out["mode"]
-        # children AFTER parents: each hop consumes the CDC the hop
-        # below just committed, so one batch advances the whole
-        # lattice (topologically ordered — declaration order is
-        # not load-bearing)
-        for c in chain_order:
-            tick[c.child_dir] = _tick_child(spark, c)["mode"]
-        ticks.append(tick)
+        nonlocal n_rows
+        rows, _, modes = _medallion_batch(
+            spark, source_dir, batch_df, batch_id, rollups, aux or [],
+            chain_order, committed,
+        )
+        n_rows += rows
+        ticks.append({"batch_id": batch_id, **dict(modes)})
 
-    opts = (
-        {"maxFilesPerTrigger": str(max_files_per_trigger)}
-        if max_files_per_trigger is not None
-        else {}
+    stream = _event_source(
+        spark, events_dir, **_max_files_option(max_files_per_trigger)
     )
-    writer = (
-        _event_source(spark, events_dir, **opts)
-        .writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_dir is not None:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    q = writer.start()
-    q.awaitTermination()
+    _run_available_now(stream, "append", sink, checkpoint_dir)
     return {
-        "n_batches": batches["n"],
-        "n_input_rows": batches["rows"],
+        "n_batches": len(ticks),
+        "n_input_rows": n_rows,
         "source_version": SN.current_version(source_dir),
         "ticks": ticks,
     }
@@ -229,32 +245,14 @@ def replay_batch(
     stamp makes the merge a no-op and every maintain tick noops on
     the unchanged source version. Returns the modes observed so
     tests can pin the no-op, not just the final state."""
-    stamp = _INGEST_STAMP.format(id=batch_id)
     before = SN.current_version(source_dir)
-    merged = False
-    if stamp not in SN.committed_ops(source_dir):
-        SN.merge_snapshot(
-            spark, source_dir, batch_df, key="event_id", op=stamp
-        )
-        merged = True
-    modes = [
-        ivm.maintain_rollup(
-            spark, source_dir, r.rollup_dir, list(r.group_cols), r.sum_col
-        )["mode"]
-        for r in rollups
-    ] + [
-        ivm.maintain_aux_rollup(
-            spark, source_dir, a.rollup_dir, list(a.group_cols), a.col,
-            kind=a.kind,
-        )["mode"]
-        for a in (aux or [])
-    ] + [
-        _tick_child(spark, c)["mode"]
-        for c in _topo_children(children)
-    ]
+    _, merged, modes = _medallion_batch(
+        spark, source_dir, batch_df, batch_id, rollups, aux or [],
+        _topo_children(children), set(SN.committed_ops(source_dir)),
+    )
     return {
         "merged": merged,
-        "modes": modes,
+        "modes": [mode for _, mode in modes],
         "version_before": before,
         "version_after": SN.current_version(source_dir),
     }

@@ -24,7 +24,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ensembl_lakehouse_spark.streaming.events import WATERMARK_DELAY, _event_source
+from ensembl_lakehouse_spark.streaming.events import (
+    WATERMARK_DELAY,
+    _event_source,
+    _run_available_now,
+)
 
 ATTRIBUTION_WINDOW = "1 hour"
 
@@ -95,13 +99,5 @@ def attribution_join_batch(spark: SparkSession, events_dir: str) -> DataFrame:
 def run_attribution_to_memory(
     spark: SparkSession, events_dir: str, table_name: str = "attribution_stream"
 ) -> DataFrame:
-    q = (
-        attribution_join(spark, events_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(attribution_join(spark, events_dir), "append", table_name)
     return spark.table(table_name)

@@ -33,7 +33,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ensembl_lakehouse_spark.streaming.events import _event_source
+from ensembl_lakehouse_spark.streaming.events import _event_source, _run_available_now
 
 OUTPUT_SCHEMA = "event_type string, n_events bigint, sum_value_cents bigint"
 STATE_SCHEMA = "n bigint, cents bigint"
@@ -71,13 +71,5 @@ def running_event_totals(spark: SparkSession, events_dir: str) -> DataFrame:
 def run_totals_to_memory(
     spark: SparkSession, events_dir: str, table_name: str = "event_totals_stream"
 ) -> DataFrame:
-    q = (
-        running_event_totals(spark, events_dir)
-        .writeStream.format("memory")
-        .queryName(table_name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(running_event_totals(spark, events_dir), "update", table_name)
     return spark.table(table_name)

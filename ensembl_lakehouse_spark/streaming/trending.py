@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ensembl_lakehouse_spark.streaming.events import (
+    _run_available_now,
     load_events_batch,
     sliding_stream,
 )
@@ -61,15 +62,7 @@ def run_trending_to_memory(
 ) -> DataFrame:
     """Drive the sliding count stream (availableNow, complete mode)
     into a memory sink, then rank — returns the top-K table."""
-    q = (
-        sliding_stream(spark, events_dir)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(table_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_available_now(sliding_stream(spark, events_dir), "complete", table_name)
     return rank_trending(spark.table(table_name), k)
 
 

@@ -967,7 +967,7 @@ def test_table_maintenance_over_http(server, spark, tmp_path_factory):
 
 def test_explain_over_http_shows_pushed_filter(server):
     """r8 (r7 VERDICT #6): GET /sql/explain returns the formatted
-    physical plan + the PLANS.md structural summary, and a WHERE
+    physical plan + its structural summary, and a WHERE
     predicate is visible as a PushedFilters entry in the wire
     response — the plan-discipline story, served."""
     sql = (

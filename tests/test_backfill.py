@@ -70,6 +70,39 @@ def test_chunks_partition_the_key_space(spark):
     assert all(s > 0 for s in sizes)  # md5 spreads the fixture ids
 
 
+@pytest.mark.parametrize(
+    "schema, keys",
+    [
+        ("k bigint", list(range(-20, 400, 13))),
+        ("k string", ["", "a", "doc-17", "ENSG00000139618", "ünïcødé", "日本語"]),
+    ],
+)
+def test_chunk_ids_match_duckdb_md5_long31(spark, schema, keys):
+    """Chunk membership is the functions/hashing md5 contract: every
+    key of a fixed set lands in the chunk that DuckDB's
+    ``sql_md5_long31(CAST(k AS VARCHAR)) % n`` names, for two chunk
+    counts, so chunk ids cannot drift from the shared hash."""
+    import duckdb
+
+    from ensembl_lakehouse_spark.functions.hashing import sql_md5_long31
+
+    df = spark.createDataFrame([(k,) for k in keys], schema)
+    for n in (4, 7):
+        chunk = F.coalesce(
+            *[F.when(B._chunk_predicate("k", i, n), F.lit(i)) for i in range(n)]
+        )
+        got = {r.k: r.c for r in df.select("k", chunk.alias("c")).collect()}
+        want = dict(
+            duckdb.execute(
+                f"SELECT k, {sql_md5_long31('CAST(k AS VARCHAR)')} % {n} "
+                "FROM (SELECT unnest(?) AS k)",
+                [keys],
+            ).fetchall()
+        )
+        assert got == want
+        assert len(set(want.values())) > 1
+
+
 def test_completed_chunks_survive_vacuum(spark, tmp_path):
     """Advice repro: vacuum used to truncate the stamp window, making
     a resume reprocess finished chunks. Stamps now live in the

@@ -2,7 +2,7 @@
 representative queries so a future edit that sneaks an extra
 exchange into a hot path FAILS here instead of surfacing as a 2×
 regression at 100 TB. Counts come from the same final-adaptive-plan
-parser the PLANS.md audit uses (plans.explain.summarize)."""
+parser the HTTP EXPLAIN surface uses (plans.explain.summarize)."""
 
 from __future__ import annotations
 

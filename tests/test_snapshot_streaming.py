@@ -58,13 +58,13 @@ def test_snapshot_sink_restart_replay_and_time_travel(
     assert rows2 == spark.read.parquet(f2).count(), "restart ingests only new file"
 
     batch = _as_dict(R.events_hourly(spark, SF_DIR))
-    assert _as_dict(SC.snapshot_rollup_view(spark, tbl)) == batch
+    assert _as_dict(SN.read_snapshot(spark, tbl)) == batch
 
     # Replay: re-merging under an already-committed batch stamp is a
     # no-op (the sink's exactly-once guard).
     ops = SN.committed_ops(tbl)
     version_before = SN.current_version(tbl)
-    replayed = SC.snapshot_rollup_view(spark, tbl).limit(3)
+    replayed = SN.read_snapshot(spark, tbl).limit(3)
     stamp = next(o for o in ops if o.startswith("stream-merge:batch="))
 
     def merge_like_sink(batch_df, stamp):
@@ -75,7 +75,7 @@ def test_snapshot_sink_restart_replay_and_time_travel(
 
     assert merge_like_sink(replayed, stamp) is False
     assert SN.current_version(tbl) == version_before
-    assert _as_dict(SC.snapshot_rollup_view(spark, tbl)) == batch
+    assert _as_dict(SN.read_snapshot(spark, tbl)) == batch
 
     # Time travel: the pre-restart version is still the half-ingested
     # rollup — fewer or equal keys, and every key's counts ≤ final.
@@ -179,4 +179,4 @@ def test_streaming_scoped_merge_rewrites_only_open_hour_files(
     )
     # and the merged state equals the batch recompute
     batch = _as_dict(R.events_hourly(spark, SF_DIR))
-    assert _as_dict(SC.snapshot_rollup_view(spark, tbl)) == batch
+    assert _as_dict(SN.read_snapshot(spark, tbl)) == batch

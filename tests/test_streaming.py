@@ -265,56 +265,6 @@ def test_checkpoint_restart_is_effectively_exactly_once(spark, tmp_path_factory,
     assert view == batch
 
 
-def test_table_sink_restart_equals_batch(spark, tmp_path_factory, events_dir):
-    """The durable (parquet-table) rollup sink across a restart: run 1
-    ingests half the files, "restart" ingests the rest on the same
-    checkpoint, then the table VIEW must equal the batch recompute —
-    and survive compaction plus a replay-shaped duplicate append."""
-    import glob
-    import shutil as sh
-
-    from pyspark.sql import functions as F
-
-    from ensembl_lakehouse_spark.streaming import continuous as SC
-
-    src = SE.load_events_batch(spark, events_dir)
-    lohi = src.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")).collect()[0]
-    mid = lohi.lo + (lohi.hi - lohi.lo) / 2
-    base = tmp_path_factory.mktemp("tbl_restart")
-    live, ckpt, tbl = base / "live", str(base / "ckpt"), str(base / "rollup")
-    live.mkdir()
-    half1, half2 = base / "h1", base / "h2"
-    src.where(F.col("ts") <= F.lit(mid)).coalesce(1).write.parquet(str(half1))
-    src.where(F.col("ts") > F.lit(mid)).coalesce(1).write.parquet(str(half2))
-    f1 = glob.glob(str(half1 / "*.parquet"))[0]
-    f2 = glob.glob(str(half2 / "*.parquet"))[0]
-
-    sh.copy(f1, live / "part1.parquet")
-    _, rows1 = SC.run_continuous_rollup_table(spark, str(live), tbl, checkpoint_dir=ckpt)
-    assert rows1 == spark.read.parquet(f1).count()
-
-    sh.copy(f2, live / "part2.parquet")
-    _, rows2 = SC.run_continuous_rollup_table(spark, str(live), tbl, checkpoint_dir=ckpt)
-    assert rows2 == spark.read.parquet(f2).count(), "restart must ingest only the new file"
-
-    def as_dict(df):
-        return {(r.hour, r.event_type): (r.n_events, r.sum_value) for r in df.collect()}
-
-    batch = as_dict(R.events_hourly(spark, SF_DIR))
-    assert as_dict(SC.rollup_table_view(spark, tbl)) == batch
-
-    # OPTIMIZE: compaction must not change the view.
-    SC.compact_rollup_table(spark, tbl)
-    assert as_dict(SC.rollup_table_view(spark, tbl)) == batch
-
-    # Replay shape: re-appending an identical batch under the same
-    # batch_id (what a foreachBatch retry does) leaves the view fixed.
-    log = spark.read.parquet(tbl)
-    some = log.limit(5)
-    some.write.mode("append").parquet(tbl)
-    assert as_dict(SC.rollup_table_view(spark, tbl)) == batch
-
-
 def test_trending_topk_stream_equals_batch(spark, events_dir):
     """Streaming sliding-window counts ranked at the sink equal the
     batch twin's ranking exactly (count desc, type asc total order)."""
@@ -332,3 +282,17 @@ def test_trending_topk_stream_equals_batch(spark, events_dir):
     assert streamed
     for _, rank, _, _ in streamed:
         assert 1 <= rank <= ST.TREND_K
+
+
+def test_one_available_now_launcher():
+    """Every streaming query in the package starts through
+    streaming.events._run_available_now: exactly one availableNow
+    trigger and one awaitTermination call in the package source."""
+    import pathlib
+
+    import ensembl_lakehouse_spark
+
+    root = pathlib.Path(ensembl_lakehouse_spark.__file__).parent
+    sources = [p.read_text() for p in root.rglob("*.py")]
+    assert sum(s.count("availableNow=True") for s in sources) == 1
+    assert sum(s.count("awaitTermination(") for s in sources) == 1

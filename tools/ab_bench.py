@@ -24,30 +24,10 @@ from __future__ import annotations
 import gc
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-
-def _materialize(df) -> None:
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _timed_cold_run(build, spark) -> float:
-    """One cold end-to-end execution, bench.py r12 semantics: clear
-    the plan-literal memo, then time construction (which runs eager
-    localCheckpoint / tiling plan-build jobs) + full materialization."""
-    from ensembl_lakehouse_spark.operators import tiling
-
-    tiling._LITERAL_CACHE.clear()
-    start = time.perf_counter()
-    df = build(spark, SF_DIR)
-    _materialize(df)
-    elapsed = time.perf_counter() - start
-    del df
-    return elapsed
+from bench import cold_run  # noqa: E402
 
 
 def ab(name_a, build_a, name_b, build_b, repeats: int = 7, spark=None):
@@ -60,12 +40,12 @@ def ab(name_a, build_a, name_b, build_b, repeats: int = 7, spark=None):
 
         spark = get_spark(app_name="ab-bench")
     # Warm-up (untimed): JIT / code cache / parquet footers.
-    _timed_cold_run(build_a, spark)
-    _timed_cold_run(build_b, spark)
+    cold_run(spark, build_a)
+    cold_run(spark, build_b)
     runs_a, runs_b = [], []
     for _ in range(repeats):
-        runs_a.append(_timed_cold_run(build_a, spark))
-        runs_b.append(_timed_cold_run(build_b, spark))
+        runs_a.append(cold_run(spark, build_a))
+        runs_b.append(cold_run(spark, build_b))
     min_a, min_b = min(runs_a), min(runs_b)
     print(
         f"A {name_a}: min {min_a:.3f}  runs {[round(r, 3) for r in runs_a]}"

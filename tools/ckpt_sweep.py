@@ -29,11 +29,10 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+from bench import cold_run  # noqa: E402
 
 
 def main() -> int:
@@ -53,7 +52,6 @@ def main() -> int:
     import __spark_entry__ as entry
     from pyspark.sql.classic.dataframe import DataFrame
 
-    from ensembl_lakehouse_spark.operators import tiling
     from ensembl_lakehouse_spark.session import get_spark
 
     spark = get_spark(app_name="ckpt-sweep")
@@ -72,15 +70,6 @@ def main() -> int:
         else:
             raise ValueError(mode)
 
-    def cold_run(fn) -> float:
-        tiling._LITERAL_CACHE.clear()
-        start = time.perf_counter()
-        df = fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - start
-        del df
-        return elapsed
-
     modes = ["eager", "lazy"] + ([] if no_none else ["none"])
     for name in names:
         fn = queries[name]
@@ -88,11 +77,11 @@ def main() -> int:
         try:
             for m in modes:  # one untimed warm-up per variant
                 set_mode(m)
-                cold_run(fn)
+                cold_run(spark, fn)
             for _ in range(repeats):
                 for m in modes:
                     set_mode(m)
-                    runs[m].append(cold_run(fn))
+                    runs[m].append(cold_run(spark, fn))
         finally:
             DataFrame.localCheckpoint = orig
         gc.collect()
