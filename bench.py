@@ -50,6 +50,7 @@ hard error (a typo must not silently bench nothing).
 
 from __future__ import annotations
 
+import gc
 import json
 import os
 import sys
@@ -89,6 +90,25 @@ def cold_run(spark, build, sf_dir: str = SF_DIR) -> float:
     return elapsed
 
 
+def release_blocks(spark) -> None:
+    """Let the ContextCleaner release the localCheckpoint blocks of
+    the DataFrames dropped so far; call it between queries, outside
+    the timed region. Without it, blocks from every previous query
+    accumulate in executor memory and their deferred cleanup/GC lands
+    inside LATER queries' timed runs (r11: 8 untouched sub-second
+    queries spiked 1.9-4.9x in the full sequence but measured at
+    baseline in isolation).
+
+    The Python-side collect alone is NOT enough: ContextCleaner only
+    learns a JVM RDD/broadcast is dead when a JVM GC runs
+    (weak-reference queue), and Spark's own periodic trigger
+    (spark.cleaner.periodicGC.interval) defaults to 30 min — longer
+    than the whole bench. One explicit JVM GC drains the cleaner
+    queue deterministically."""
+    gc.collect()
+    spark.sparkContext._jvm.System.gc()
+
+
 def main() -> int:
     warmup = "--no-warmup" not in sys.argv
     repeats = 5
@@ -114,8 +134,6 @@ def main() -> int:
     timings: dict[str, float] = {}
     spread: dict[str, float] = {}
 
-    import gc
-
     for name, fn in queries.items():
         if only and name not in only:
             continue
@@ -129,27 +147,7 @@ def main() -> int:
         runs = [cold_run(spark, fn) for _ in range(repeats)]
         timings[name] = round(min(runs), 4)
         spread[name] = round(max(runs) - min(runs), 4)
-        # Outside the timed region: make the ContextCleaner release
-        # this query's localCheckpoint blocks promptly. Without this,
-        # blocks from every previous query accumulate in executor
-        # memory and their deferred cleanup/GC lands inside LATER
-        # queries' timed runs (r11: 8 untouched sub-second queries
-        # spiked 1.9-4.9x in the full sequence but measured at
-        # baseline in isolation).
-        gc.collect()
-        # The Python-side collect alone is NOT enough: ContextCleaner
-        # only learns a JVM RDD/broadcast is dead when a JVM GC runs
-        # (weak-reference queue), and Spark's own periodic trigger
-        # (spark.cleaner.periodicGC.interval) defaults to 30 min —
-        # longer than the whole bench. Until then every checkpointed
-        # lattice block from every previous query stays in the block
-        # manager, and the mounting storage/GC pressure lands inside
-        # later queries' timed runs (measured: untouched sub-second
-        # queries ran 2-4x slower late in the full sequence than in a
-        # warm isolated process). One explicit JVM GC per query,
-        # outside the timed region, drains the cleaner queue
-        # deterministically.
-        spark.sparkContext._jvm.System.gc()
+        release_blocks(spark)
 
     total = round(sum(timings.values()), 4)
     sf = _sf_from_dir(SF_DIR)

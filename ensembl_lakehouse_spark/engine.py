@@ -63,8 +63,8 @@ def _proven_non_null(table_dir: str, pin_v: int | None) -> dict[str, int]:
     a stale_ok rollup representing an older version needs the
     since_version as a floor, r9 second review). Shared by the /sql
     rewrite gate and /aggregate's COUNT(col) gate — one proof, two
-    surfaces. Dict membership keeps semantic_gate's set-style
-    ``col in non_null_cols`` checks working unchanged."""
+    surfaces. semantic_gate tests ``col in non_null_cols``, which
+    dict membership serves."""
     import re as _re
 
     from ensembl_lakehouse_spark import snapshots as _SN
@@ -145,6 +145,17 @@ def _apply_having(df, terms):
         }[op]
         df = df.where(cond)
     return df
+
+
+def _links(self_url: str, query_id: str) -> dict[str, str]:
+    """The ``_links`` block of every submit response: the request's
+    own URL and the query's status, preview and export URLs."""
+    return {
+        "self": self_url,
+        "status": f"/query/{query_id}/status",
+        "preview": f"/query/{query_id}/preview",
+        "export": f"/query/{query_id}/export",
+    }
 
 
 class Engine:
@@ -234,13 +245,34 @@ class Engine:
         query_id = self.registry.submit(df, cache_key=key)
         return {
             "query_id": query_id,
-            "_links": {
-                "self": f"/query/{data_type}/{key_value}",
-                "status": f"/query/{query_id}/status",
-                "preview": f"/query/{query_id}/preview",
-                "export": f"/query/{query_id}/export",
-            },
+            "_links": _links(f"/query/{data_type}/{key_value}", query_id),
         }
+
+    def _analytics_query(self, name: str, params: dict | None = None):
+        """The named operator's function and its resolved per-request
+        params; a blank or unknown name and a bad param are
+        validation errors (400 on the wire)."""
+        import __spark_entry__ as contract  # repo-root driver registry
+
+        if not name or not str(name).strip():
+            raise QueryValidationError("name must be non-blank")
+        qs = contract.queries()
+        if name not in qs:
+            raise QueryValidationError(
+                f"unknown analytics query {name!r}; see /analytics for names"
+            )
+        # per-request overrides for parameterizable operators (the
+        # reference's fields/condition freedom, app/main.py:460-466,
+        # extended to the analytics library): validated/coerced by
+        # service/params.py, fail-closed on anything undeclared.
+        # Values equal to the oracle-pinned defaults are dropped
+        # during resolution, so explicit-default requests share the
+        # bare submission's cache entry.
+        try:
+            resolved = resolve_params(name, params)
+        except ParamError as exc:
+            raise QueryValidationError(str(exc)) from exc
+        return qs[name], resolved
 
     def submit_analytics(
         self, name: str, sf_dir: str, params: dict | None = None
@@ -264,39 +296,15 @@ class Engine:
         canonicalizer would case-fold it and split on commas,
         colliding distinct directories).
         """
-        import __spark_entry__ as contract  # repo-root driver registry
-
-        if not name or not str(name).strip():
-            raise QueryValidationError("name must be non-blank")
-        qs = contract.queries()
-        if name not in qs:
-            raise QueryValidationError(
-                f"unknown analytics query {name!r}; see /analytics for names"
-            )
-        # per-request overrides for parameterizable operators (the
-        # reference's fields/condition freedom, app/main.py:460-466,
-        # extended to the analytics library): validated/coerced by
-        # service/params.py, fail-closed on anything undeclared.
-        # Values equal to the oracle-pinned defaults are dropped
-        # during resolution, so explicit-default requests share the
-        # bare submission's cache entry.
-        try:
-            resolved = resolve_params(name, params)
-        except ParamError as exc:
-            raise QueryValidationError(str(exc)) from exc
+        build, resolved = self._analytics_query(name, params)
         key = f"analytics\x1f{name}\x1f{sf_dir}" + params_cache_suffix(resolved)
         query_id = self.registry.cached_query_id(key)
         if query_id is None:
-            df = qs[name](self.spark, sf_dir, **resolved)
+            df = build(self.spark, sf_dir, **resolved)
             query_id = self.registry.submit(df, cache_key=key)
         return {
             "query_id": query_id,
-            "_links": {
-                "self": f"/analytics/{name}",
-                "status": f"/query/{query_id}/status",
-                "preview": f"/query/{query_id}/preview",
-                "export": f"/query/{query_id}/export",
-            },
+            "_links": _links(f"/analytics/{name}", query_id),
         }
 
     #: Logical-plan roots a read-only query may parse to. Anything
@@ -338,11 +346,23 @@ class Engine:
                 ) from None
         return pins
 
-    def _validated_sql_df(self, sql: str, snap_versions: str = ""):
-        """Shared validation for submit_sql and explain_sql: blank
-        check, snap_versions pin parsing, read-only parse-root gate,
-        and the atomic view-refresh + analysis step. Returns
-        (df, snap view fingerprint)."""
+    def _plan_sql(
+        self, sql: str, snap_versions: str, rewrite: str, freshness: str
+    ):
+        """The one planning step of submit_sql and explain_sql: the
+        ``rewrite``/``freshness`` params, the blank check, the
+        snap_versions pins (parsed once), the read-only parse-root
+        gate, the atomic view-refresh + analysis step, and then the
+        MV rewrite unless ``rewrite="off"``.
+
+        Returns ``(df, cache_key, audit)``: ``df`` is the rewritten
+        plan when a rollup or the metadata tier answers, else the
+        verbatim statement's; ``audit`` is None under
+        ``rewrite="off"``."""
+        if rewrite not in ("on", "approx", "off"):
+            raise QueryValidationError("rewrite must be on|approx|off")
+        if freshness not in ("strict", "stale_ok"):
+            raise QueryValidationError("freshness must be strict|stale_ok")
         if not sql or not sql.strip():
             raise QueryValidationError("sql must be non-blank")
         pins = self._parse_snap_pins(snap_versions)
@@ -367,7 +387,39 @@ class Engine:
                 raise QueryValidationError(
                     f"SQL does not bind: {exc}"
                 ) from exc
-        return df, snap_fp
+        rewritten, audit = None, None
+        if rewrite != "off":
+            rewritten, audit = self._try_sql_rewrite(
+                sql, pins, rewrite == "approx", freshness
+            )
+        if rewritten is None:
+            # quote-aware canonicalization: keywords fold, string
+            # literals stay byte-exact ('EN' vs 'en' must not
+            # collide). The catalog view fingerprint is part of the
+            # key: identical SQL against a re-registered (advanced)
+            # snapshot view must MISS, not serve the pre-advance
+            # rows for 44 days.
+            key = (
+                "sql\x1f" + self.catalog.view_fingerprint()
+                + "\x1f" + snap_fp
+                + "\x1f" + canonical_sql_text(sql)
+            )
+            return df, key, audit
+        # identity of the ANSWER, mirroring submit_table_aggregate's
+        # key discipline: every side it read by (dir, version) — the
+        # fact at the version the answer represents, each spoke at
+        # its pin, so a dim commit or a dim pin misses — plus the
+        # rollup version and answering path, so a stale_ok rollup
+        # answer and the live base answer never share an entry
+        sides = [(audit["source_dir"], audit["source_version"])] + [
+            (j["dim_dir"], j["dim_version"]) for j in audit.get("join", ())
+        ]
+        key = (
+            "mvsql\x1f" + canonical_sql_text(sql)
+            + f"\x1f{sides!r}\x1f{audit['rollup_version']}"
+            + f"\x1f{audit['answered_by']}\x1f{freshness}"
+        )
+        return rewritten, key, audit
 
     def _try_sql_rewrite(
         self,
@@ -385,13 +437,25 @@ class Engine:
         rollup or the metadata tier answers, else None (the caller
         runs the statement verbatim — bit-identical semantics by
         construction). ``audit`` is the wire-visible decision record:
-        eligibility, the answering path, and per-rollup skip reasons
-        (the same ``answered_by``/``skipped`` vocabulary as
-        /table/{name}/aggregate). Exactness is two-layer: the strict
-        grammar (plans/sql_rewrite.py) proves the statement's shape,
-        ``semantic_gate`` proves the measures reproduce against the
-        table's schema; anything unproven falls back loudly in the
-        audit, never silently to a different answer."""
+        eligibility, the answering path, the fact side it read
+        (``source_dir``/``source_version``), and per-rollup skip
+        reasons (the same ``answered_by``/``skipped`` vocabulary as
+        /table/{name}/aggregate); a star statement's audit adds a
+        ``join`` list naming each dim and its pinned version.
+        Exactness is two-layer: the strict grammar
+        (plans/sql_rewrite.py) proves the statement's shape,
+        ``semantic_gate`` proves the measures reproduce against each
+        side's schema; anything unproven falls back loudly in the
+        audit, never silently to a different answer.
+
+        A single-table statement is the star with zero spokes, so one
+        path serves both: a star's fact side answers from an fk-keyed
+        rollup joined to each PINNED dim — zero fact files read —
+        when every dim key carries a write-enforced UNIQUE proof at
+        its pin. ``allow_estimates`` (``rewrite=approx``) opens the
+        estimate tier; across a join it serves only when every join
+        fk is a group key, so no estimate is ever re-merged (r10
+        VERDICT #6)."""
         from pyspark.sql import functions as F
 
         from ensembl_lakehouse_spark import snapshots as _SN
@@ -402,7 +466,15 @@ class Engine:
         )
 
         intent = parse_aggregate_sql(sql)
-        if intent is not None and intent.used_ordinals and (
+        if intent is None:
+            return None, {
+                "eligible": False,
+                "reason": "statement outside the rewrite grammar "
+                "(single snap_ view — optionally INNER equi-joins "
+                "to snap_ dims (star) — grouped derivable "
+                "aggregates, eq/IN/BETWEEN filters)",
+            }
+        if intent.used_ordinals and (
             self.spark.conf.get(
                 "spark.sql.groupByOrdinal", "true"
             ).lower() != "true"
@@ -418,53 +490,78 @@ class Engine:
                 "session — the verbatim statement groups by the "
                 "literal",
             }
-        if intent is not None and intent.joins:
-            return self._try_sql_join_rewrite(
-                intent, pins, allow_estimates, freshness
-            )
-        if intent is None:
-            return None, {
-                "eligible": False,
-                "reason": "statement outside the rewrite grammar "
-                "(single snap_ view — optionally INNER equi-joins "
-                "to snap_ dims (star) — grouped derivable "
-                "aggregates, eq/IN/BETWEEN filters)",
-            }
-        if intent.table not in self._snapshot_tables:
-            return None, {
-                "eligible": False,
-                "reason": f"snap_{intent.table} is not a registered "
-                "snapshot table",
-            }
-        table_dir = self._snapshot_tables[intent.table]
-        pin_v = _read_pin(table_dir, pins.get(intent.table))
+        names = [intent.table] + [j.dim for j in intent.joins]
+        for t in names:
+            if t not in self._snapshot_tables:
+                return None, {
+                    "eligible": False,
+                    "reason": f"snap_{t} is not a registered snapshot "
+                    "table",
+                }
+        sides = []  # (dir, pinned version, schema): the fact, then spokes
         try:
-            schema = _SN.read_snapshot(
-                self.spark, table_dir, version=pin_v
-            ).schema
+            for t in names:
+                d = self._snapshot_tables[t]
+                v = _read_pin(d, pins.get(t))
+                sides.append(
+                    (d, v, _SN.read_snapshot(self.spark, d, version=v).schema)
+                )
         except (FileNotFoundError, ValueError, KeyError) as exc:
             return None, {
                 "eligible": False,
-                "reason": f"table unreadable at version {pin_v}: {exc}",
+                "reason": f"snap_{t} unreadable at its pin: {exc}",
             }
-        non_null = _proven_non_null(table_dir, pin_v)
-        gate = semantic_gate(intent, schema, allow_estimates, non_null)
+        (fact_dir, fact_pin, fact_schema), spokes = sides[0], sides[1:]
+        non_null = _proven_non_null(fact_dir, fact_pin)
+        gate = semantic_gate(
+            intent, fact_schema, allow_estimates, non_null,
+            [schema for _, _, schema in spokes],
+            [_proven_unique(d, v) for d, v, _ in spokes],
+        )
         if gate is not None:
             return None, {"eligible": False, "reason": gate}
+        floor = _proof_floor(non_null, intent.aggs)
         try:
-            df, why = _RW.answer_aggregate(
-                self.spark,
-                self._rollups,
-                table_dir,
-                list(intent.group_by),
-                intent.aggs,
-                freshness=freshness,
-                filters=intent.filters or None,
-                range_filters=intent.range_filters or None,
-                version=pin_v,
-                min_source_version=_proof_floor(non_null, intent.aggs),
-                group_exprs=dict(intent.group_exprs) or None,
-            )
+            if intent.joins:
+                df, why = _RW.answer_join_aggregate(
+                    self.spark,
+                    self._rollups,
+                    fact_dir,
+                    [
+                        {
+                            "dim_dir": d,
+                            "fk": j.fk,
+                            "pk": j.pk,
+                            "group_by": list(j.group_by),
+                            "filters": j.filters or None,
+                            "range_filters": j.range_filters or None,
+                            "version": v,
+                            "fk_side": j.fk_side,
+                        }
+                        for j, (d, v, _) in zip(intent.joins, spokes)
+                    ],
+                    list(intent.group_by),
+                    intent.aggs,
+                    freshness=freshness,
+                    fact_filters=intent.filters or None,
+                    fact_range_filters=intent.range_filters or None,
+                    fact_version=fact_pin,
+                    min_source_version=floor,
+                )
+            else:
+                df, why = _RW.answer_aggregate(
+                    self.spark,
+                    self._rollups,
+                    fact_dir,
+                    list(intent.group_by),
+                    intent.aggs,
+                    freshness=freshness,
+                    filters=intent.filters or None,
+                    range_filters=intent.range_filters or None,
+                    version=fact_pin,
+                    min_source_version=floor,
+                    group_exprs=dict(intent.group_exprs) or None,
+                )
         except Exception as exc:  # analysis-time oddity → verbatim run
             return None, {
                 "eligible": False,
@@ -475,29 +572,24 @@ class Engine:
             "answered_by": (
                 why["rollup"] if why["used"] == "rollup" else why["used"]
             ),
+            "source_dir": os.path.abspath(fact_dir),
             "source_version": why["source_version"],
             "rollup_version": why.get("rollup_version"),
             "skipped": why["skipped"],
         }
+        if "join" in why:
+            audit["join"] = why["join"]
         if why["used"] == "base":
             # nothing to gain: the verbatim statement IS the base
             # plan, and running the original text keeps /sql
             # semantics beyond question
             return None, audit
-        return self._finish_sql_rewrite(df, intent), audit
-
-    def _finish_sql_rewrite(self, df, intent):
-        """The shared post-aggregate tail for both rewrite families:
-        HAVING runs on the aggregated values BEFORE the output
-        projection (hidden __having_N measures exist only here);
-        every filtered measure is exact-tier (the gates refuse
-        estimate-tier filters), so the surviving row SET matches the
-        verbatim statement's by construction. Then the SELECT-list
-        re-projection, ORDER BY, LIMIT."""
-        from pyspark.sql import functions as F
-
-        df = _apply_having(df, intent.having)
-        df = df.select(*intent.select_order)
+        # HAVING runs on the aggregated values BEFORE the output
+        # projection (hidden __having_N measures exist only here);
+        # every filtered measure is exact-tier (the gate refuses
+        # estimate-tier filters), so the surviving row SET matches
+        # the verbatim statement's by construction
+        df = _apply_having(df, intent.having).select(*intent.select_order)
         if intent.order_by:
             df = df.orderBy(
                 *[
@@ -507,123 +599,7 @@ class Engine:
             )
         if intent.limit is not None:
             df = df.limit(intent.limit)
-        return df
-
-    def _try_sql_join_rewrite(
-        self,
-        intent,
-        pins: dict[str, int],
-        allow_estimates: bool,
-        freshness: str,
-    ):
-        """The dimension-join branch of the /sql MV rewrite (r9
-        VERDICT #2; multi-dim star since the r10 second pass):
-        ``fact INNER JOIN dim_i ON fact.fk_i = dim_i.pk_i``
-        aggregates answer from an fk-keyed rollup joined to each
-        PINNED dim — zero fact files read — when every dim key
-        carries a write-enforced UNIQUE proof at its pin and every
-        measure passes the same exactness proofs as the single-table
-        gate (semantic_gate_join). Audit vocabulary is identical,
-        plus a ``join`` list naming each dim and its pinned version.
-
-        ``allow_estimates`` gates the one estimate-tier shape that IS
-        join-servable (r10 VERDICT #6): when every join fk is itself
-        a group key the output grouping preserves the fact partials
-        1:1 — no estimate is ever re-merged, the join only filters
-        whole groups and attaches functionally-dependent dim
-        attributes — so approx_percentile/approx_count_distinct serve
-        under ``rewrite=approx`` exactly like the single-table tier.
-        Any grouping that would merge partials stays refused at every
-        opt-in level."""
-        from ensembl_lakehouse_spark import snapshots as _SN
-        from ensembl_lakehouse_spark.plans import rewrite as _RW
-        from ensembl_lakehouse_spark.plans.sql_rewrite import (
-            semantic_gate_join,
-        )
-
-        for t in [intent.table] + [j.dim for j in intent.joins]:
-            if t not in self._snapshot_tables:
-                return None, {
-                    "eligible": False,
-                    "reason": f"snap_{t} is not a registered snapshot "
-                    "table",
-                }
-        fact_dir = self._snapshot_tables[intent.table]
-        fact_pin = _read_pin(fact_dir, pins.get(intent.table))
-        dims = []
-        try:
-            fact_schema = _SN.read_snapshot(
-                self.spark, fact_dir, version=fact_pin
-            ).schema
-            dim_schemas = []
-            dim_uniques = []
-            for j in intent.joins:
-                ddir = self._snapshot_tables[j.dim]
-                dpin = _read_pin(ddir, pins.get(j.dim))
-                dim_schemas.append(
-                    _SN.read_snapshot(
-                        self.spark, ddir, version=dpin
-                    ).schema
-                )
-                dim_uniques.append(_proven_unique(ddir, dpin))
-                dims.append(
-                    {
-                        "dim_dir": ddir,
-                        "fk": j.fk,
-                        "pk": j.pk,
-                        "group_by": list(j.group_by),
-                        "filters": j.filters or None,
-                        "range_filters": j.range_filters or None,
-                        "version": dpin,
-                        "fk_side": j.fk_side,
-                    }
-                )
-        except (FileNotFoundError, ValueError, KeyError) as exc:
-            return None, {
-                "eligible": False,
-                "reason": f"table unreadable at its pin: {exc}",
-            }
-        non_null = _proven_non_null(fact_dir, fact_pin)
-        gate = semantic_gate_join(
-            intent, fact_schema, dim_schemas, non_null, dim_uniques,
-            allow_estimates,
-        )
-        if gate is not None:
-            return None, {"eligible": False, "reason": gate}
-        try:
-            df, why = _RW.answer_join_aggregate(
-                self.spark,
-                self._rollups,
-                fact_dir,
-                dims,
-                list(intent.group_by),
-                intent.aggs,
-                freshness=freshness,
-                fact_filters=intent.filters or None,
-                fact_range_filters=intent.range_filters or None,
-                fact_version=fact_pin,
-                min_source_version=_proof_floor(non_null, intent.aggs),
-            )
-        except Exception as exc:  # analysis-time oddity → verbatim run
-            return None, {
-                "eligible": False,
-                "reason": f"rewrite planning failed: {exc}",
-            }
-        audit = {
-            "eligible": True,
-            "answered_by": (
-                why["rollup"] if why["used"] == "rollup" else why["used"]
-            ),
-            "source_version": why["source_version"],
-            "rollup_version": why.get("rollup_version"),
-            "join": why.get("join"),
-            "skipped": why["skipped"],
-        }
-        if df is None:
-            # fact side would answer from base: the verbatim
-            # statement IS that plan
-            return None, audit
-        return self._finish_sql_rewrite(df, intent), audit
+        return df, audit
 
     def explain_sql(
         self,
@@ -648,19 +624,7 @@ class Engine:
         aggregate did (or did not) hit a rollup."""
         from ensembl_lakehouse_spark.plans.explain import explain_payload
 
-        if rewrite not in ("on", "approx", "off"):
-            raise QueryValidationError("rewrite must be on|approx|off")
-        if freshness not in ("strict", "stale_ok"):
-            raise QueryValidationError("freshness must be strict|stale_ok")
-        df, _ = self._validated_sql_df(sql, snap_versions)
-        audit = None
-        if rewrite != "off":
-            pins = self._parse_snap_pins(snap_versions)
-            rdf, audit = self._try_sql_rewrite(
-                sql, pins, rewrite == "approx", freshness
-            )
-            if rdf is not None:
-                df = rdf
+        df, _, audit = self._plan_sql(sql, snap_versions, rewrite, freshness)
         payload = explain_payload(df)
         payload["rewrite"] = audit
         return payload
@@ -672,22 +636,10 @@ class Engine:
         explain_sql over the operator's DataFrame plan. Builds the
         plan exactly as submit_analytics would (including per-request
         params) but never submits it."""
-        import __spark_entry__ as contract
-
         from ensembl_lakehouse_spark.plans.explain import explain_payload
 
-        if not name or not str(name).strip():
-            raise QueryValidationError("name must be non-blank")
-        qs = contract.queries()
-        if name not in qs:
-            raise QueryValidationError(
-                f"unknown analytics query {name!r}; see /analytics for names"
-            )
-        try:
-            resolved = resolve_params(name, params)
-        except ParamError as exc:
-            raise QueryValidationError(str(exc)) from exc
-        df = qs[name](self.spark, sf_dir, **resolved)
+        build, resolved = self._analytics_query(name, params)
+        df = build(self.spark, sf_dir, **resolved)
         return explain_payload(df)
 
     def submit_sql(
@@ -730,53 +682,9 @@ class Engine:
         ``freshness`` is the rollup eligibility mode (strict |
         stale_ok) — it never affects a verbatim run.
         """
-        if rewrite not in ("on", "approx", "off"):
-            raise QueryValidationError("rewrite must be on|approx|off")
-        if freshness not in ("strict", "stale_ok"):
-            raise QueryValidationError("freshness must be strict|stale_ok")
-        df, snap_fp = self._validated_sql_df(sql, snap_versions)
-        audit = None
-        rewritten = None
-        if rewrite != "off":
-            pins = self._parse_snap_pins(snap_versions)
-            rewritten, audit = self._try_sql_rewrite(
-                sql, pins, rewrite == "approx", freshness
-            )
-        if rewritten is not None:
-            # identity of the ANSWER: source pin + rollup version +
-            # answering path join the canonical text, mirroring
-            # submit_table_aggregate's key discipline — a stale_ok
-            # rollup answer and the live base answer must never
-            # share a cache entry
-            key = (
-                "mvsql\x1f" + canonical_sql_text(sql)
-                + f"\x1f{audit['source_version']}"
-                + f"\x1f{audit['rollup_version']}"
-                + f"\x1f{audit['answered_by']}\x1f{freshness}"
-            )
-            df = rewritten
-        else:
-            # quote-aware canonicalization: keywords fold, string
-            # literals stay byte-exact ('EN' vs 'en' must not
-            # collide). The catalog view fingerprint is part of the
-            # key: identical SQL against a re-registered (advanced)
-            # snapshot view must MISS, not serve the pre-advance
-            # rows for 44 days.
-            key = (
-                "sql\x1f" + self.catalog.view_fingerprint()
-                + "\x1f" + snap_fp
-                + "\x1f" + canonical_sql_text(sql)
-            )
+        df, key, audit = self._plan_sql(sql, snap_versions, rewrite, freshness)
         query_id = self.registry.submit(df, cache_key=key)
-        resp = {
-            "query_id": query_id,
-            "_links": {
-                "self": "/sql",
-                "status": f"/query/{query_id}/status",
-                "preview": f"/query/{query_id}/preview",
-                "export": f"/query/{query_id}/export",
-            },
-        }
+        resp = {"query_id": query_id, "_links": _links("/sql", query_id)}
         if audit is not None:
             resp["rewrite"] = audit
         return resp
@@ -792,12 +700,7 @@ class Engine:
         GET /analytics/{name}/params listing): each accepted
         parameter with its oracle-pinned default. Operators without
         a spec return an empty dict — they accept no parameters."""
-        import __spark_entry__ as contract
-
-        if name not in contract.queries():
-            raise QueryValidationError(
-                f"unknown analytics query {name!r}; see /analytics for names"
-            )
+        self._analytics_query(name)
         spec = PARAM_SPECS.get(name, {})
         return {
             key: {
@@ -1115,12 +1018,7 @@ class Engine:
             "query_id": query_id,
             "from_version": from_version,
             "to_version": to_version,
-            "_links": {
-                "self": f"/table/{name}/changes",
-                "status": f"/query/{query_id}/status",
-                "preview": f"/query/{query_id}/preview",
-                "export": f"/query/{query_id}/export",
-            },
+            "_links": _links(f"/table/{name}/changes", query_id),
         }
 
     def _refresh_snapshot_views(self, pins: dict[str, int] | None = None) -> str:
@@ -1635,12 +1533,7 @@ class Engine:
             "query_id": query_id,
             "answered_by": answered_by,
             "skipped": why["skipped"],
-            "_links": {
-                "self": f"/table/{name}/aggregate",
-                "status": f"/query/{query_id}/status",
-                "preview": f"/query/{query_id}/preview",
-                "export": f"/query/{query_id}/export",
-            },
+            "_links": _links(f"/table/{name}/aggregate", query_id),
         }
 
     def query_status(self, query_id: str) -> dict:

@@ -982,7 +982,8 @@ def answer_join_aggregate(
     measure: Σsum, Σcount, min-of-mins, max-of-maxes, Σsum/Σcount
     for avg — the same output-type contract as :func:`_agg_exprs`.
 
-    Exactness notes the gate (semantic_gate_join) relies on:
+    Exactness notes the /sql gate (sql_rewrite.semantic_gate)
+    relies on:
     NULL fks drop on both paths (never equal to pk); fact filters
     are whole-group selections validated by _can_answer; dim
     filters/grouping run on each dim itself at FULL fidelity (any

@@ -18,12 +18,15 @@ rollup algebra can serve —
     [ORDER BY <output cols [ASC|DESC]>]
     [LIMIT n]
 
-— and extracts it as an ``AggregateIntent`` the engine feeds to
-``plans.rewrite.answer_aggregate`` (or ``answer_join_aggregate``
-when star spokes are present — r9 VERDICT #2, generalized to
-multi-dim in r10; with any join every column reference must be
-alias-qualified, and every join word other than INNER is reserved so
-e.g. LEFT JOIN can never half-parse as servable). EVERYTHING else
+— and extracts it as an ``AggregateIntent``. A single-table
+statement is the star with zero spokes: one parser, one semantic
+gate and one engine branch serve both, and only the final answer
+step differs (``plans.rewrite.answer_aggregate``, or
+``answer_join_aggregate`` when spokes are present — r9 VERDICT #2,
+generalized to multi-dim in r10). With any join every column
+reference must be alias-qualified, and every join word other than
+INNER is reserved so e.g. LEFT JOIN can never half-parse as
+servable. EVERYTHING else
 returns None and the statement executes verbatim; a false negative
 costs a base scan, a false positive would serve a wrong answer, so
 the grammar is strict by construction: any unexpected token,
@@ -43,7 +46,8 @@ strict grammar keeps the two filter vocabularies separate.
 
 Exactness gating happens in TWO layers. This parser only proves the
 statement's *shape*; the engine then proves the *semantics* match the
-rollup algebra against the table's schema (``semantic_gate``):
+rollup algebra against each side's schema (``semantic_gate``, which
+adds the per-spoke UNIQUE-key and join-type proofs for a star):
 
 - COUNT(*) / COUNT(1): always exact (rollup n_rows counts rows).
 - COUNT(col): counts non-NULLs, which equals the row count exactly
@@ -85,7 +89,6 @@ __all__ = [
     "JoinClause",
     "parse_aggregate_sql",
     "semantic_gate",
-    "semantic_gate_join",
 ]
 
 #: measures servable without changing the statement's answer
@@ -840,41 +843,91 @@ def semantic_gate(
     schema,
     allow_estimates: bool,
     non_null_cols: frozenset[str] | set[str] = frozenset(),
+    dim_schemas=(),
+    dim_uniques=(),
 ) -> str | None:
     """Prove the recognized statement's answer is reproducible from
-    rollup partials given the base table's Spark ``schema``
-    (StructType). Returns None when safe, else the human-readable
-    reason to fall back (recorded in the response's rewrite audit).
+    rollup partials given the fact table's Spark ``schema``
+    (StructType) and, for a star/snowflake statement, each spoke's
+    schema (``dim_schemas``) and UNIQUE-proven columns
+    (``dim_uniques``), both in ``intent.joins`` order. A single-table
+    statement is the star with zero spokes, so every rule below
+    applies to both; the spoke rules simply never run for it.
+    Returns None when safe, else the human-readable reason to fall
+    back (recorded in the response's rewrite audit).
 
-    ``non_null_cols`` is the engine-proven set of columns that cannot
-    be NULL *at the pinned version* — parquet reads force
+    ``non_null_cols`` is the engine-proven set of fact columns that
+    cannot be NULL *at the pinned version* — parquet reads force
     nullable=true on every field, so schema nullability proves
     nothing; the proof comes from a write-enforced ``col IS NOT
     NULL`` CHECK constraint whose ``since_version`` the pin postdates
     (snapshots.constraint_records; rollback refuses to cross it).
 
+    Per spoke, ``fact INNER JOIN dim_i ON fk_i = dim_i.pk_i``
+    recombines from fk-keyed fact partials iff
+
+    - ``dim.pk`` carries a write-enforced UNIQUE constraint the dim
+      pin postdates (snapshots.add_unique_constraint): each join is
+      then provably 1:≤1 per partial, so re-aggregating joined
+      partials is the plain rollup algebra;
+    - fk and pk have the same Spark type (a cross-type equality
+      would engage Spark's implicit casts, which this grammar does
+      not model);
+    - no dim group column shares a name with a fact-side column or
+      another spoke's group columns (the composed join output would
+      be ambiguous; SELECT-list duplicates are refused by the parser
+      — this covers unselected fks);
+    - an estimate-tier measure is grouped by every fact-side fk
+      (a final estimate cannot be re-merged across groups).
+
     Identifier case: the lexer lowercases, so resolution here is
-    case-insensitive against the schema — Spark's own default."""
-    fields = {f.name.lower(): f for f in schema.fields}
-    referenced = (
+    case-insensitive against each schema — Spark's own default."""
+    joins = intent.joins
+    # side 0 is the fact, side i + 1 the i-th spoke; an fk lives on
+    # the fact for a star spoke and on an EARLIER spoke for a
+    # snowflake hop
+    fields = [
+        {f.name.lower(): f for f in s.fields} for s in (schema, *dim_schemas)
+    ]
+    names = [intent.table] + [j.dim for j in joins]
+    refs = [
         set(intent.group_by)
         | set(intent.filters)
         | set(intent.range_filters)
         | {c for _, c in intent.aggs.values() if c}
-    )
-    for col in sorted(referenced):
-        if col not in fields:
-            return f"column {col!r} not in the table schema"
-        if fields[col].name != col:
-            # the native run names output columns as the schema
-            # spells them; the lexer lowercased, so a mixed-case
-            # field would change the output schema — fall back
-            return f"column {col!r} is mixed-case in the schema"
+    ] + [
+        set(j.group_by) | set(j.filters) | set(j.range_filters) | {j.pk}
+        for j in joins
+    ]
+    fk_sides = [0 if j.fk_side == "fact" else j.fk_side + 1 for j in joins]
+    for j, s in zip(joins, fk_sides):
+        refs[s].add(j.fk)
+    for side_refs, side_fields, name in zip(refs, fields, names):
+        for col in sorted(side_refs):
+            if col.startswith("__"):
+                # the rewrite's own columns live under the __ prefix
+                # (join pk/fk carriers, quantile sketch states): a
+                # table column there could be clobbered mid-plan
+                return (
+                    f"column {col!r} collides with the rewrite's "
+                    "reserved partial namespace"
+                )
+            if col not in side_fields:
+                return f"column {col!r} not in the table schema of snap_{name}"
+            if side_fields[col].name != col:
+                # the native run names output columns as the schema
+                # spells them; the lexer lowercased, so a mixed-case
+                # field would change the output schema — fall back
+                return (
+                    f"column {col!r} is mixed-case in the schema of "
+                    f"snap_{name}"
+                )
+    ffields = fields[0]
     if intent.group_exprs:
         from ensembl_lakehouse_spark.ivm import canonical_bucket_expr
 
         for alias, expr in intent.group_exprs:
-            if alias in fields:
+            if alias in ffields:
                 # the rewrite's base path ADDS the alias as a new
                 # column; were it a real column, the verbatim
                 # statement's own resolution could differ — refuse
@@ -899,7 +952,7 @@ def semantic_gate(
                     "rewrite's reserved partial namespace"
                 )
             _, srccol = canonical_bucket_expr(expr)
-            f = fields.get(srccol)
+            f = ffields.get(srccol)
             if f is None:
                 return f"column {srccol!r} not in the table schema"
             if f.name != srccol:
@@ -912,160 +965,16 @@ def semantic_gate(
                     f"bucket {expr!r} needs a date/timestamp column, "
                     f"and {srccol} is {t}"
                 )
-    having_aliases = {alias for alias, _, _ in intent.having}
-    for out, (fn, col) in intent.aggs.items():
-        fn = fn.split("@", 1)[0]  # approx_percentile@q → base name
-        if fn in ESTIMATE_FNS and out in having_aliases:
-            # a HAVING filter on an estimate-tier measure selects
-            # WHICH rows return — swapping the estimator (native
-            # HLL++ vs DataSketches partials) could change the
-            # surviving row SET, not just a displayed value, so this
-            # is never rewritable (no opt-in tier exists for it)
-            return (
-                f"{out}: HAVING filters on an estimate-tier measure "
-                "— the rewrite could change the surviving row set, "
-                "never eligible"
-            )
-        if fn == "count" and col and col not in non_null_cols:
-            return (
-                f"{out}: COUNT({col}) counts non-NULL rows — needs a "
-                f"proven NOT-NULL column (add a '{col} IS NOT NULL' "
-                "CHECK constraint) to derive from the rollup row "
-                "count"
-            )
-        if fn in ("sum", "avg") and not (
-            intent.group_by or intent.group_exprs
-        ):
-            # a GLOBAL aggregate can see ZERO rows (filters match
-            # nothing / all groups tombstoned): SQL SUM/AVG of the
-            # empty set is NULL, the rollup algebra coalesces to 0 —
-            # the NOT-NULL column proof cannot cover the empty SET
-            # (r9 code review). Grouped queries are safe: a group
-            # only exists where rows do.
-            return (
-                f"{out}: global {fn.upper()} over zero rows is NULL "
-                "in SQL but 0 in the rollup algebra — only grouped "
-                f"{fn.upper()} rewrites"
-            )
-        if fn in ("sum", "avg"):
-            f = fields[col]
-            if f.dataType.simpleString() not in _INTEGRAL:
-                return (
-                    f"{out}: rollup SUM accumulates per-row BIGINT "
-                    f"casts — exact only for integral columns, and "
-                    f"{col} is {f.dataType.simpleString()}"
-                )
-            if col not in non_null_cols:
-                return (
-                    f"{out}: {fn.upper()}({col}) needs a proven "
-                    f"NOT-NULL column (an all-NULL group is NULL in "
-                    f"SQL but 0 in the rollup; AVG divides by the "
-                    f"non-NULL count) — add a '{col} IS NOT NULL' "
-                    "CHECK constraint to enable this rewrite"
-                )
-        elif fn in ESTIMATE_FNS and not allow_estimates:
-            return (
-                f"{out}: estimate-tier rewrite (the rollup's sketch "
-                "vs the statement's native estimator) needs "
-                "rewrite=approx"
-            )
-        elif fn == "approx_percentile":
-            f = fields[col]
-            t = f.dataType.simpleString()
-            if t not in _INTEGRAL and t not in ("float", "double") and \
-                    not t.startswith("decimal"):
-                return (
-                    f"{out}: approx_percentile needs a numeric "
-                    f"column, and {col} is {t}"
-                )
-    return None
-
-
-def semantic_gate_join(
-    intent: AggregateIntent,
-    fact_schema,
-    dim_schemas: list,
-    fact_non_null: frozenset[str] | set[str] = frozenset(),
-    dim_uniques: list | None = None,
-    allow_estimates: bool = False,
-) -> str | None:
-    """The join family's semantic proof (r9 VERDICT #2; generalized
-    to a MULTI-dim star in the r10 second pass): a star-shaped
-    ``fact INNER JOIN dim_i ON fact.fk_i = dim_i.pk_i`` aggregate is
-    reproducible from fk-keyed fact partials joined to the pinned
-    dims iff, for EVERY spoke,
-
-    - ``dim.pk`` carries a write-enforced UNIQUE constraint the dim
-      pin postdates (snapshots.add_unique_constraint): each join is
-      then provably 1:≤1 per partial, so re-aggregating joined
-      partials is the plain rollup algebra — no fan-out argument to
-      re-derive per query. Unproven keys fall back with the hint.
-    - every measure is EXACT-tier over a FACT column under the same
-      proofs as the single-table gate (integral + NOT-NULL for
-      SUM/AVG, NOT-NULL for COUNT(col)). Estimate-tier measures are
-      never join-servable: answer_aggregate outputs the ESTIMATE, and
-      estimates cannot be re-merged across the dim grouping.
-    - the statement is grouped (on any side): a global SUM/AVG
-      can see zero joined rows, where SQL says NULL and the partial
-      recombination says 0 — same rule as the single-table gate.
-    - fk and pk have the same Spark type (a cross-type equality
-      would engage Spark's implicit casts, whose semantics this
-      grammar does not model).
-    - no dim group column shares a name with any fact-side column or
-      another spoke's columns (the composed join output would be
-      ambiguous; SELECT-list duplicates are already refused by the
-      parser — this covers unselected fks).
-
-    Returns None when safe, else the human-readable fallback reason.
-    """
-    ffields = {f.name.lower(): f for f in fact_schema.fields}
-    # each fk resolves against ITS side's schema: the fact for star
-    # spokes, an earlier dim for snowflake hops (r10 VERDICT #4b)
-    fact_refs = (
-        set(intent.group_by)
-        | set(intent.filters)
-        | set(intent.range_filters)
-        | {c for _, c in intent.aggs.values() if c}
-        | {j.fk for j in intent.joins if j.fk_side == "fact"}
-    )
-    checks = [(fact_refs, ffields, "fact")]
-    for i, j in enumerate(intent.joins):
-        dfields = {f.name.lower(): f for f in dim_schemas[i].fields}
-        dim_refs = (
-            set(j.group_by)
-            | set(j.filters)
-            | set(j.range_filters)
-            | {j.pk}
-            | {
-                other.fk
-                for other in intent.joins
-                if other.fk_side == i
-            }
-        )
-        checks.append((dim_refs, dfields, j.dim))
-    for refs, fields, which in checks:
-        for col in sorted(refs):
-            if col.startswith("__"):
-                return (
-                    f"column {col!r} collides with the rewrite's "
-                    "reserved partial namespace"
-                )
-            if col not in fields:
-                return f"column {col!r} not in the {which} table schema"
-            if fields[col].name != col:
-                return (
-                    f"column {col!r} is mixed-case in the {which} schema"
-                )
-    uniques = dim_uniques or [frozenset()] * len(intent.joins)
     # ambiguity set = raw names present in the composed partial plan:
     # fact group cols + FACT-side fks. Snowflake hop fks never appear
     # raw (answer_join_aggregate carries them under reserved __jp_fk
     # aliases), so listing them here would wrongly refuse GROUP BY on
     # the very dim column a hop keys off
-    taken = {
-        j.fk for j in intent.joins if j.fk_side == "fact"
-    } | set(intent.group_by)
-    for i, j in enumerate(intent.joins):
+    taken = {j.fk for j in joins if j.fk_side == "fact"} | set(
+        intent.group_by
+    )
+    merges_partials = False
+    for i, (j, s) in enumerate(zip(joins, fk_sides)):
         # GROUP BY the dim's own pk under its fk's spelling is a
         # supported shape (answer_join_aggregate re-reads the value
         # from the reserved pk alias, and the two columns are EQUAL
@@ -1081,111 +990,108 @@ def semantic_gate_join(
                 "join output would be ambiguous"
             )
         taken |= set(j.group_by)
-        if j.pk not in uniques[i]:
+        # a snowflake hop's fk lives in an EARLIER dim, whose own
+        # pk-unique proof (checked on that spoke's turn) makes every
+        # row of it reach ≤1 row here — the 1:≤1 composition the
+        # recombination algebra needs
+        if j.pk not in dim_uniques[i]:
             return (
                 f"join key {j.pk!r} has no write-enforced UNIQUE proof "
                 f"at the {j.dim} pin — add one with "
                 "add_unique_constraint to enable the join rewrite"
             )
-        dfields = {f.name.lower(): f for f in dim_schemas[i].fields}
-        if j.fk_side == "fact":
-            lfields = ffields
-        else:
-            # snowflake hop: the fk lives in an EARLIER dim, whose
-            # own pk-unique proof (checked when that spoke's turn
-            # came) makes every row of it reach ≤1 row here — the
-            # 1:≤1 composition the recombination algebra needs
-            lfields = {
-                f.name.lower(): f
-                for f in dim_schemas[j.fk_side].fields
-            }
-        fk_t = lfields[j.fk].dataType.simpleString()
-        pk_t = dfields[j.pk].dataType.simpleString()
+        fk_t = fields[s][j.fk].dataType.simpleString()
+        pk_t = fields[i + 1][j.pk].dataType.simpleString()
         if fk_t != pk_t:
             return (
                 f"join keys have different types ({j.fk}: {fk_t}, "
                 f"{j.pk}: {pk_t}) — implicit-cast equality is outside "
                 "the grammar"
             )
+        # Estimate-tier special case (r10 VERDICT #6): a final
+        # estimate cannot be RE-MERGED across groups, but when the
+        # output grouping preserves the partial grouping 1:1 no merge
+        # ever happens — the join only filters whole partial groups
+        # (dim filters select whole pks) and attaches functionally-
+        # dependent dim attributes. That holds exactly when EVERY
+        # fact-side fk is itself a group key (directly, or as the
+        # dim's pk under the same spelling — the equal-value exempt
+        # shape). Hop spokes key off an earlier dim's column, a
+        # function of that dim's pk, so they never split a partial
+        # group.
+        if j.fk_side == "fact" and not (
+            j.fk in intent.group_by or (j.pk == j.fk and j.pk in j.group_by)
+        ):
+            merges_partials = True
     grouped = bool(
-        intent.group_by or any(j.group_by for j in intent.joins)
-    )
-    # Estimate-tier special case (r10 VERDICT #6): a final estimate
-    # cannot be RE-MERGED across groups, but when the output grouping
-    # preserves the partial grouping 1:1 no merge ever happens — the
-    # join only filters whole partial groups (dim filters select
-    # whole pks) and attaches functionally-dependent dim attributes.
-    # That holds exactly when EVERY fact-side fk is itself a group
-    # key (directly, or as the dim's pk under the same spelling — the
-    # equal-value exempt shape). Hop spokes key off an earlier dim's
-    # column, a function of that dim's pk, so they never split a
-    # partial group.
-    fk_grouped = all(
-        j.fk in intent.group_by
-        or (j.pk == j.fk and j.pk in j.group_by)
-        for j in intent.joins
-        if j.fk_side == "fact"
+        intent.group_by
+        or intent.group_exprs
+        or any(j.group_by for j in joins)
     )
     having_aliases = {alias for alias, _, _ in intent.having}
     for out, (fn, col) in intent.aggs.items():
-        base_fn = fn.split("@", 1)[0]
-        if base_fn in ESTIMATE_FNS:
+        fn = fn.split("@", 1)[0]  # approx_percentile@q → base name
+        if fn in ESTIMATE_FNS:
             if out in having_aliases:
+                # a HAVING filter on an estimate-tier measure selects
+                # WHICH rows return — swapping the estimator (native
+                # HLL++ vs DataSketches partials) could change the
+                # surviving row SET, not just a displayed value, so
+                # this is never rewritable (no opt-in tier exists)
                 return (
-                    f"{out}: HAVING filters on an estimate-tier "
-                    "measure — the rewrite could change the surviving "
-                    "row set, never eligible"
+                    f"{out}: HAVING filters on an estimate-tier measure "
+                    "— the rewrite could change the surviving row set, "
+                    "never eligible"
                 )
-            if not fk_grouped:
+            if merges_partials:
                 return (
-                    f"{out}: only exact-tier measures recombine "
-                    "across a join (estimates cannot be re-merged "
-                    "from final values; grouping by every join fk "
-                    "would avoid the merge)"
+                    f"{out}: only exact-tier measures recombine across "
+                    "a join (estimates cannot be re-merged from final "
+                    "values; grouping by every join fk would avoid the "
+                    "merge)"
                 )
             if not allow_estimates:
                 return (
-                    f"{out}: estimate-tier rewrite (the rollup's "
-                    "sketch vs the statement's native estimator) "
-                    "needs rewrite=approx"
+                    f"{out}: estimate-tier rewrite (the rollup's sketch "
+                    "vs the statement's native estimator) needs "
+                    "rewrite=approx"
                 )
-            if base_fn == "approx_percentile":
-                f = ffields[col]
-                t = f.dataType.simpleString()
-                if t not in _INTEGRAL and t not in (
-                    "float", "double"
-                ) and not t.startswith("decimal"):
+            if fn == "approx_percentile":
+                t = ffields[col].dataType.simpleString()
+                if t not in _INTEGRAL and t not in ("float", "double") and \
+                        not t.startswith("decimal"):
                     return (
                         f"{out}: approx_percentile needs a numeric "
                         f"column, and {col} is {t}"
                     )
-            continue
-        if fn not in EXACT_FNS:
-            return (
-                f"{out}: only exact-tier measures recombine across a "
-                "join (estimates cannot be re-merged from final values)"
-            )
-        if fn == "count" and col and col not in fact_non_null:
+        elif fn == "count" and col and col not in non_null_cols:
             return (
                 f"{out}: COUNT({col}) counts non-NULL rows — needs a "
                 f"proven NOT-NULL column (add a '{col} IS NOT NULL' "
-                "CHECK constraint) to derive from the rollup row count"
+                "CHECK constraint) to derive from the rollup row "
+                "count"
             )
-        if fn in ("sum", "avg"):
+        elif fn in ("sum", "avg"):
             if not grouped:
+                # a GLOBAL aggregate can see ZERO rows (filters match
+                # nothing / all groups tombstoned / no row joins): SQL
+                # SUM/AVG of the empty set is NULL, the rollup algebra
+                # coalesces to 0 — the NOT-NULL column proof cannot
+                # cover the empty SET (r9 code review). Grouped
+                # queries are safe: a group only exists where rows do.
                 return (
-                    f"{out}: global {fn.upper()} over zero joined rows "
-                    "is NULL in SQL but 0 in the partial recombination "
-                    f"— only grouped {fn.upper()} rewrites"
+                    f"{out}: global {fn.upper()} over zero rows is NULL "
+                    "in SQL but 0 in the rollup algebra — only grouped "
+                    f"{fn.upper()} rewrites"
                 )
-            f = ffields[col]
-            if f.dataType.simpleString() not in _INTEGRAL:
+            t = ffields[col].dataType.simpleString()
+            if t not in _INTEGRAL:
                 return (
                     f"{out}: rollup SUM accumulates per-row BIGINT "
                     f"casts — exact only for integral columns, and "
-                    f"{col} is {f.dataType.simpleString()}"
+                    f"{col} is {t}"
                 )
-            if col not in fact_non_null:
+            if col not in non_null_cols:
                 return (
                     f"{out}: {fn.upper()}({col}) needs a proven "
                     f"NOT-NULL column (an all-NULL group is NULL in "

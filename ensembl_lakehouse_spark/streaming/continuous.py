@@ -178,7 +178,12 @@ def run_continuous_rollup_snapshots(
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         stamp = f"stream-merge:batch={batch_id}"
         if stamp in committed:
-            return  # replayed batch: already durably committed
+            # replayed batch: already durably committed. Still run
+            # the batch's plan (and write nothing): the stateful
+            # aggregation commits its state store only when the plan
+            # runs, and the restart fails validation without it
+            batch_df.write.format("noop").mode("overwrite").save()
+            return
         if batch_df.isEmpty():
             # watermark-advance batches emit no updates; skipping
             # them (rather than stamping) is safe — replaying an

@@ -6,6 +6,7 @@ batch boundaries)."""
 from __future__ import annotations
 
 import glob
+import os
 import shutil as sh
 
 import pytest
@@ -60,20 +61,25 @@ def test_snapshot_sink_restart_replay_and_time_travel(
     batch = _as_dict(R.events_hourly(spark, SF_DIR))
     assert _as_dict(SN.read_snapshot(spark, tbl)) == batch
 
-    # Replay: re-merging under an already-committed batch stamp is a
-    # no-op (the sink's exactly-once guard).
-    ops = SN.committed_ops(tbl)
+    # Replay: a crash after the last data batch's MERGE committed and
+    # before the checkpoint recorded the batch. Roll the checkpoint
+    # back to that point and restart the real sink: it re-runs the
+    # batch, finds its stamp committed and commits nothing.
     version_before = SN.current_version(tbl)
-    replayed = SN.read_snapshot(spark, tbl).limit(3)
-    stamp = next(o for o in ops if o.startswith("stream-merge:batch="))
-
-    def merge_like_sink(batch_df, stamp):
-        if stamp in SN.committed_ops(tbl):
-            return False
-        SN.merge_snapshot(spark, tbl, batch_df, key=list(SC.ROLLUP_KEYS), op=stamp)
-        return True
-
-    assert merge_like_sink(replayed, stamp) is False
+    last = max(
+        int(o.rsplit("=", 1)[1])
+        for o in SN.committed_ops(tbl)
+        if o.startswith("stream-merge:batch=")
+    )
+    for sub, first_dropped in (("offsets", last + 1), ("commits", last)):
+        for name in os.listdir(os.path.join(ckpt, sub)):
+            batch_id = name.lstrip(".").split(".")[0]
+            if batch_id.isdigit() and int(batch_id) >= first_dropped:
+                os.remove(os.path.join(ckpt, sub, name))
+    n_replayed, _ = SC.run_continuous_rollup_snapshots(
+        spark, str(live), tbl, checkpoint_dir=ckpt
+    )
+    assert n_replayed >= 1
     assert SN.current_version(tbl) == version_before
     assert _as_dict(SN.read_snapshot(spark, tbl)) == batch
 

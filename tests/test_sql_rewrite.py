@@ -620,6 +620,34 @@ def test_join_aggregate_answers_from_rollup_and_matches_verbatim(
     assert len(got) == 4  # header + seg0..seg2
 
 
+def test_join_rewrite_cache_key_tracks_dim_versions(engine, spark, starmv):
+    """A rewritten join answer is cached under every side it read: a
+    dim commit misses the pre-commit entry, and a pin on the old dim
+    version neither shares the live entry nor reads the new rows."""
+    fact, dim, rol = starmv
+    pre = engine.submit_sql(JOIN_SQL)
+    pre_rows = _rows(engine, pre["query_id"])
+    SN.merge_snapshot(
+        spark, dim,
+        spark.createDataFrame(
+            [(k, "segX", k % 2) for k in range(7)],
+            "c_custkey int, mktseg string, active int",
+        ),
+        key="c_custkey",
+    )
+    live = engine.submit_sql(JOIN_SQL)
+    assert live["rewrite"]["answered_by"] == "jord_by_ck"
+    assert live["query_id"] != pre["query_id"]
+    off = engine.submit_sql(JOIN_SQL, rewrite="off")
+    live_rows = _rows(engine, live["query_id"])
+    assert live_rows == _rows(engine, off["query_id"])
+    assert [r[0] for r in live_rows[1:]] == ["segX"]
+    pinned = engine.submit_sql(JOIN_SQL, snap_versions="jcust:0")
+    assert pinned["rewrite"]["answered_by"] == "jord_by_ck"
+    assert pinned["query_id"] != live["query_id"]
+    assert _rows(engine, pinned["query_id"]) == pre_rows
+
+
 def test_join_rewrite_reads_zero_fact_files(engine, starmv):
     fact, dim, rol = starmv
     rdf, audit = engine._try_sql_rewrite(JOIN_SQL, {}, False, "strict")

@@ -173,6 +173,23 @@ def test_gate_rejects_unknown_and_mixed_case_columns():
     )
 
 
+def test_gate_reserves_the_double_underscore_namespace():
+    """The rewrite's own columns (join key carriers, quantile sketch
+    states) live under ``__``, so a single-table statement naming a
+    ``__`` column falls back just like a star statement does."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    schema = StructType([
+        StructField("__q_v", LongType()), StructField("v", LongType()),
+    ])
+    i = parse_aggregate_sql(
+        "SELECT __q_v, COUNT(*) AS n FROM snap_t GROUP BY __q_v"
+    )
+    assert i is not None and i.group_by == ("__q_v",)
+    reason = semantic_gate(i, schema, False)
+    assert reason and "reserved partial namespace" in reason
+
+
 # -- r9 code-review gates ----------------------------------------------
 
 @pytest.mark.parametrize(

@@ -21,13 +21,12 @@ Library use (the normal path):
 
 from __future__ import annotations
 
-import gc
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import cold_run  # noqa: E402
+from bench import cold_run, release_blocks  # noqa: E402
 
 
 def ab(name_a, build_a, name_b, build_b, repeats: int = 7, spark=None):
@@ -53,8 +52,7 @@ def ab(name_a, build_a, name_b, build_b, repeats: int = 7, spark=None):
     print(
         f"B {name_b}: min {min_b:.3f}  runs {[round(r, 3) for r in runs_b]}"
     )
-    gc.collect()
-    spark.sparkContext._jvm.System.gc()
+    release_blocks(spark)
     return min_a, min_b
 
 

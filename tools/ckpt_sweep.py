@@ -32,7 +32,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import cold_run  # noqa: E402
+from bench import cold_run, release_blocks  # noqa: E402
 
 
 def main() -> int:
@@ -46,8 +46,6 @@ def main() -> int:
             no_none = True
         else:
             names.append(a)
-
-    import gc
 
     import __spark_entry__ as entry
     from pyspark.sql.classic.dataframe import DataFrame
@@ -84,8 +82,7 @@ def main() -> int:
                     runs[m].append(cold_run(spark, fn))
         finally:
             DataFrame.localCheckpoint = orig
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
+        release_blocks(spark)
         mins = {m: min(v) for m, v in runs.items()}
         best = min(mins, key=mins.get)
         print(
