@@ -378,8 +378,41 @@ MMR_SELECT = 5
 MMR_POOL = 20
 
 _MMR_SCORE_TEMPLATE = (
-    "CAST({lam} AS DOUBLE) * rel - CAST({one_minus_lam} AS DOUBLE) * msim"
+    "CAST({lam} AS DOUBLE) * {rel} - CAST({one_minus_lam} AS DOUBLE) * {msim}"
 )
+
+
+def _candidate_pool(spark: SparkSession, sf_dir: str, pool: int) -> DataFrame:
+    """The semantic top-``pool`` candidates for query vector 0, lazy:
+    ``(doc_id, rel, embedding, c_nrm)``, one corpus scan into a
+    bounded TakeOrdered heap (rel DESC, doc_id ASC)."""
+    from ensembl_lakehouse_spark.operators.similarity import (
+        _PAIR_COSINE,
+        _split,
+    )
+
+    queries, corpus = _split(spark, sf_dir)
+    q0 = queries.where(F.col("q_id") == 0)
+    return (
+        corpus.crossJoin(F.broadcast(q0))
+        .withColumn("rel", F.expr(_PAIR_COSINE))
+        .orderBy(F.desc("rel"), "vec_id")
+        .limit(pool)
+        .select(
+            F.col("vec_id").alias("doc_id"), "rel", "embedding", "c_nrm"
+        )
+    )
+
+
+def _argmax(arr: str, key: str) -> str:
+    """The element ``c`` of the struct array ``arr`` with the largest
+    ``key`` (Spark SQL text over lambda variable ``c``), ties to the
+    smallest ``doc_id``: ``array_max`` over ``(key, -doc_id, c)``
+    structs, so NaN ranks largest as in an ORDER BY ... DESC."""
+    return (
+        f"array_max(transform({arr}, c -> "
+        f"named_struct('key', {key}, 'neg_id', -c.doc_id, 'c', c))).c"
+    )
 
 
 def mmr_rerank(
@@ -396,86 +429,59 @@ def mmr_rerank(
     passages handed to the model aren't five near-copies.
 
     Scale shape: MMR always runs on the retrieved PAGE, never the
-    corpus — the pool is a bounded top-k heap (TakeOrdered),
-    materialized ONCE via localCheckpoint (one corpus scan total;
-    the dedup.py lineage-truncation precedent), and the pairwise sim
-    relation is ≤ pool² rows. Each greedy step is also checkpointed:
-    the naive fully-lazy unroll references the selected set three
-    times per step, so its logical plan grows ~3^k and Catalyst
-    analysis OOMs the driver around k=10 — truncating lineage per
-    step keeps plan size LINEAR in k at the cost of k tiny local
-    jobs over ≤pool-row data. Ties and float determinism: cosines
-    come from the shared cosine contract, argmax breaks ties by
-    doc_id, and the max-over-selected is an order-independent MAX —
-    bit-stable across engines.
-    """
-    from ensembl_lakehouse_spark.operators.similarity import (
-        _PAIR_COSINE,
-        _dot_expr,
-        _split,
-    )
+    corpus. The corpus-scale part stays distributed: one scan into a
+    bounded TakeOrdered pool (``_candidate_pool``). The greedy state
+    is bounded by ``pool`` (≤ 200 rows, service/params.py) at any
+    corpus size, so the pool is collected into ONE row
+    (``collect_list``) and the whole selection runs as one
+    ``aggregate`` expression over it: ``select_k − 1`` steps, each
+    the argmax of the unselected candidates' MMR score. The plan is
+    lazy and the same size for every ``select_k``; nothing runs until
+    the result is.
 
-    queries, corpus = _split(spark, sf_dir)
-    q0 = queries.where(F.col("q_id") == 0)
-    cand = (
-        corpus.crossJoin(F.broadcast(q0))
-        .withColumn("rel", F.expr(_PAIR_COSINE))
-        .orderBy(F.desc("rel"), "vec_id")
-        .limit(pool)
-        .select(
-            F.col("vec_id").alias("doc_id"), "rel", "embedding", "c_nrm"
-        )
-        .localCheckpoint()  # bounded: <= pool rows; ends the corpus lineage
-    )
-    x = cand.select(
-        F.col("doc_id").alias("a"),
-        F.col("embedding").alias("a_vec"),
-        F.col("c_nrm").alias("a_nrm"),
-    )
-    y = cand.select(
-        F.col("doc_id").alias("b"),
-        F.col("embedding").alias("b_vec"),
-        F.col("c_nrm").alias("b_nrm"),
-    )
-    pairs = (
-        x.join(y, F.col("a") != F.col("b"))
-        .select(
-            "a",
-            "b",
-            F.expr(
-                f"{_dot_expr('a_vec', 'b_vec')} / (a_nrm * b_nrm)"
-            ).alias("sim"),
-        )
-    )
+    Ties and float determinism: each pairwise cosine is the shared
+    ``_dot_expr`` over the candidate's and the selected vector's
+    arrays, divided by their precomputed norms; argmax breaks ties by
+    doc_id, and the max-over-selected is an order-independent MAX —
+    bit-stable across engines. A pool smaller than ``select_k``
+    returns every pool row.
+    """
+    from ensembl_lakehouse_spark.operators.similarity import _dot_expr
+
+    cosine = f"{_dot_expr('c.embedding', 's.embedding')} / (c.c_nrm * s.c_nrm)"
     score = _MMR_SCORE_TEMPLATE.format(
-        lam=MMR_LAMBDA, one_minus_lam=1.0 - MMR_LAMBDA
+        lam=MMR_LAMBDA,
+        one_minus_lam=1.0 - MMR_LAMBDA,
+        rel="c.rel",
+        msim=f"array_max(transform(sel, s -> {cosine}))",
     )
-    selected = (
-        cand.orderBy(F.desc("rel"), "doc_id")
-        .limit(1)
-        .select("doc_id", F.lit(1).alias("sel_order"), "rel")
+    unselected = (
+        "filter(cands, c -> "
+        "NOT array_contains(transform(sel, s -> s.doc_id), c.doc_id))"
     )
-    for step in range(2, select_k + 1):
-        remaining = cand.join(
-            selected.select("doc_id"), "doc_id", "left_anti"
+    # the slice keeps an empty pool empty; the size guard stops
+    # selecting once every candidate is taken (pool < select_k)
+    greedy = (
+        f"aggregate(array_repeat(0, {select_k - 1}), "
+        f"slice(array({_argmax('cands', 'c.rel')}), 1, size(cands)), "
+        "(sel, _step) -> IF(size(sel) >= size(cands), sel, "
+        f"concat(sel, array({_argmax(unselected, score)}))))"
+    )
+    return (
+        _candidate_pool(spark, sf_dir, pool)
+        .agg(
+            F.collect_list(
+                F.struct("doc_id", "rel", "embedding", "c_nrm")
+            ).alias("cands")
         )
-        scored = (
-            remaining.join(pairs, remaining.doc_id == pairs.a)
-            .join(
-                selected.select(F.col("doc_id").alias("b")), "b"
+        .select(
+            F.expr(
+                f"inline(transform({greedy}, (s, i) -> named_struct("
+                "'doc_id', s.doc_id, 'sel_order', i + 1, 'rel', s.rel)))"
             )
-            .groupBy(remaining.doc_id, "rel")
-            .agg(F.max("sim").alias("msim"))
         )
-        nxt = (
-            scored.orderBy(F.expr(score).desc(), "doc_id")
-            .limit(1)
-            .select("doc_id", F.lit(step).alias("sel_order"), "rel")
-        )
-        # bounded: <= step rows; without this the plan tree triples
-        # per step (see docstring) and analysis OOMs the driver
-        selected = selected.union(nxt).localCheckpoint()
-    return selected.orderBy("sel_order")
+        .orderBy("sel_order")
+    )
 
 
 def _mmr_rerank_sql() -> str:
@@ -483,7 +489,7 @@ def _mmr_rerank_sql() -> str:
     from ensembl_lakehouse_spark.operators.similarity import N_QUERIES
 
     score = _MMR_SCORE_TEMPLATE.format(
-        lam=MMR_LAMBDA, one_minus_lam=1.0 - MMR_LAMBDA
+        lam=MMR_LAMBDA, one_minus_lam=1.0 - MMR_LAMBDA, rel="rel", msim="msim"
     )
     parts = [
         "WITH q AS (SELECT embedding FROM embeddings WHERE vec_id = 0),",
@@ -547,23 +553,14 @@ def rerank_pairwise_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number anywhere) holds even though a pool-sized window would
     be configuration-bounded.
 
-    Scale shape: identical to mmr_rerank — one corpus scan into a
-    TakeOrdered pool of MMR_POOL rows, localCheckpoint truncates the
-    lineage, everything after runs on ≤ pool² rows."""
-    from ensembl_lakehouse_spark.operators.similarity import (
-        _PAIR_COSINE,
-        _split,
-    )
-
-    queries, corpus = _split(spark, sf_dir)
-    q0 = queries.where(F.col("q_id") == 0)
+    Scale shape: one corpus scan into the TakeOrdered pool of
+    MMR_POOL rows (``_candidate_pool``), checkpointed because the
+    pairwise join reads it twice; everything after runs on ≤ pool²
+    rows."""
     cand = (
-        corpus.crossJoin(F.broadcast(q0))
-        .withColumn("rel", F.expr(_PAIR_COSINE))
-        .orderBy(F.desc("rel"), "vec_id")
-        .limit(MMR_POOL)
+        _candidate_pool(spark, sf_dir, MMR_POOL)
         .select(
-            F.col("vec_id").alias("doc_id"),
+            "doc_id",
             "rel",
             F.expr(
                 "rel - CAST(0.1 AS DOUBLE) * abs(c_nrm - "

@@ -14,6 +14,15 @@ rest of the engine sees clean typed DataFrames:
 - Everything else reads natively; ms-timestamps arrive as
   TIMESTAMP_NTZ which matches DuckDB's naive TIMESTAMP semantics.
 
+Schema memo: a fixture file's inferred schema is kept per (path,
+mtime, size, nanos-as-long read), so a later ``load_table`` of the
+unchanged file reads with ``spark.read.schema(...)`` and runs no
+schema-inference Spark job (the Delta Lake rule of recording a
+schema so readers never infer it; snapshot manifests do the same).
+Like the row-group memo it holds metadata only, never rows; a
+rewrite changes the key, and directories or files that cannot be
+stat'ed are always inferred.
+
 Scale note: these are plain ``spark.read.parquet`` scans — column
 pruning and predicate pushdown apply. At 100 TB the same loader
 would point at a partitioned/bucketed lake layout (see
@@ -24,8 +33,10 @@ the API is unchanged.
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -72,8 +83,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(spark.read.parquet(path))
-    return spark.read.parquet(path)
+        return normalize_event_ts(_read_parquet(spark, path, True))
+    return _read_parquet(spark, path, False)
 
 
 #: (abs path, mtime_ns, size) -> row-group count. Metadata only —
@@ -81,6 +92,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 #: same class as Spark's own file-index cache; the mtime/size key
 #: invalidates on any rewrite.
 _ROW_GROUP_CACHE: dict[tuple[str, int, int], int] = {}
+
+#: (abs path, mtime_ns, size, nanos-as-long read) -> inferred schema;
+#: metadata only, keyed and bounded like _ROW_GROUP_CACHE.
+_SCHEMA_CACHE: dict[tuple[str, int, int, bool], StructType] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str, nanos_as_long: bool) -> DataFrame:
+    """``spark.read.parquet(path)``, given the schema inferred by an
+    earlier read of the same unchanged regular file, so only the
+    first read runs Spark's schema-inference job."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    key = (os.path.abspath(path), st.st_mtime_ns, st.st_size, nanos_as_long)
+    schema = _SCHEMA_CACHE.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    if len(_SCHEMA_CACHE) > 1024:
+        _SCHEMA_CACHE.clear()
+    _SCHEMA_CACHE[key] = df.schema
+    return df
 
 
 def _row_groups(path: str) -> int:

@@ -4,6 +4,8 @@ retrieval invariants fast at sf0.001."""
 
 from __future__ import annotations
 
+import pytest
+
 from ensembl_lakehouse_spark.operators import search as SR
 from ensembl_lakehouse_spark.operators import text as T
 from tests.conftest import SF_DIR
@@ -67,23 +69,50 @@ def test_rank_fusion_blends_both_lists(spark):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_mmr_rerank_matches_python_greedy(spark):
-    """MMR pinned against a driver-side greedy recompute over the
-    same candidate pool and pairwise cosines."""
-    out = [(r.doc_id, r.sel_order, r.rel) for r in SR.mmr_rerank(spark, SF_DIR).collect()]
-    assert [o for _, o, _ in out] == list(range(1, SR.MMR_SELECT + 1))
+@pytest.fixture(scope="module")
+def tie_dir(tmp_path_factory):
+    """A tiny ``embeddings.parquet`` built so that MMR ties: small
+    integer vectors (every dot and norm is exact), query 0 is all
+    ones, so permutations of one vector share ``rel``, exact
+    duplicates share every ``sim``, and only ``doc_id`` orders them."""
+    import itertools
 
-    from ensembl_lakehouse_spark.operators.similarity import _PAIR_COSINE, _split
-    from pyspark.sql import functions as F
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    queries, corpus = _split(spark, SF_DIR)
-    cand = (
-        corpus.crossJoin(F.broadcast(queries.where("q_id = 0")))
-        .withColumn("rel", F.expr(_PAIR_COSINE))
-        .orderBy(F.desc("rel"), "vec_id")
-        .limit(SR.MMR_POOL)
-        .collect()
+    vecs = [[1, 1, 1, 1], [1, 0, 0, 0], [0, 1, 0, 0], [0, 0, 1, 0], [0, 0, 0, 1]]
+    vecs += [list(p) for p in sorted(set(itertools.permutations([3, 1, 0, 0])))]
+    vecs += [[2, 2, 1, 0]] * 3 + [[1, 2, 2, 0]] * 2 + [[0, 0, 0, 5]] * 2
+    d = tmp_path_factory.mktemp("mmr_ties")
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(len(vecs)), pa.int64()),
+                "embedding": pa.array(vecs, pa.list_(pa.float32())),
+                "label": pa.array([0] * len(vecs), pa.int32()),
+            }
+        ),
+        str(d / "embeddings.parquet"),
     )
+    return str(d)
+
+
+@pytest.mark.parametrize("data", ["sf", "ties"])
+@pytest.mark.parametrize(
+    "select_k,pool", [(5, 20), (6, 24), (4, 16), (1, 20), (20, 2), (20, 200)]
+)
+def test_mmr_rerank_matches_python_greedy(spark, tie_dir, data, select_k, pool):
+    """MMR pinned against a driver-side greedy recompute over the
+    same candidate pool and pairwise cosines, including a pool
+    smaller than ``select_k`` and data whose ``rel`` and ``sim``
+    values tie exactly."""
+    sf_dir = SF_DIR if data == "sf" else tie_dir
+    got = SR.mmr_rerank(spark, sf_dir, select_k=select_k, pool=pool).collect()
+    out = [(r.doc_id, r.sel_order, r.rel) for r in got]
+    cand = SR._candidate_pool(spark, sf_dir, pool).collect()
+    assert [o for _, o, _ in out] == list(range(1, min(select_k, len(cand)) + 1))
+
+    import functools
     import math
 
     def cos(a, b):
@@ -92,26 +121,29 @@ def test_mmr_rerank_matches_python_greedy(spark):
         nb = math.sqrt(sum(float(y) * float(y) for y in b))
         return dot / (na * nb)
 
-    pool = {r.vec_id: (r.rel, r.embedding) for r in cand}
-    selected = []
-    first = min(pool, key=lambda d: (-pool[d][0], d))
-    selected.append(first)
+    pool_rows = {r.doc_id: (r.rel, r.embedding) for r in cand}
+    sim = functools.lru_cache(maxsize=None)(
+        lambda d, s: cos(pool_rows[d][1], pool_rows[s][1])
+    )
+    selected = [min(pool_rows, key=lambda d: (-pool_rows[d][0], d))]
     lam = SR.MMR_LAMBDA
-    while len(selected) < SR.MMR_SELECT:
+    while len(selected) < min(select_k, len(pool_rows)):
         best = None
-        for d in pool:
+        for d in pool_rows:
             if d in selected:
                 continue
-            msim = max(cos(pool[d][1], pool[s][1]) for s in selected)
-            sc = lam * pool[d][0] - (1 - lam) * msim
+            msim = max(sim(d, s) for s in selected)
+            sc = lam * pool_rows[d][0] - (1 - lam) * msim
             key = (-sc, d)
             if best is None or key < best[0]:
                 best = (key, d)
         selected.append(best[1])
     assert [d for d, _, _ in out] == selected
-    # diversity is real: the MMR set differs from plain top-5 unless
-    # the top-5 was already diverse; at minimum ranks are valid pool ids
-    assert set(selected) <= set(pool)
+    assert [r for _, _, r in out] == [pool_rows[d][0] for d in selected]
+    if data == "ties" and len(pool_rows) > 1:
+        # the ties are real: several pool docs share a rel value
+        rels = [rel for rel, _ in pool_rows.values()]
+        assert len(set(rels)) < len(rels)
 
 
 def test_rank_fusion_topk_deepens_both_lists(spark):
